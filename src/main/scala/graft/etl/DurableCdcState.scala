@@ -1,69 +1,115 @@
 package graft.etl
 
+import java.io.IOException
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
-import graft.cdc.{ApplyOutcome, CdcParser, CdcRecord}
+import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.StructType
+import graft.cdc.{ApplyOutcome, CdcApply, CdcParser, CdcRecord}
 
-/** Durable CDC apply state: current full row images as a parquet table,
+/** Durable CDC apply state: current full row images as a parquet snapshot,
   * exceptions as an append-only parquet log.
   *
   * This is the 100 TB shape of the reference's replication state — nothing
   * driver-side, state merged per micro-batch with the distributed
-  * `CdcApply.run` (one shuffle on the PK), written with a tmp-dir swap so a
-  * crash mid-write leaves the previous snapshot intact. A restarted task
-  * (same `dir`) resumes from the last committed snapshot; replayed
-  * micro-batches (foreachBatch is at-least-once) are idempotent for state
-  * because ops carry full row images.
+  * `CdcApply.run` (one shuffle on the PK). A restarted task (same `dir`)
+  * resumes from the last committed snapshot; replayed micro-batches
+  * (foreachBatch is at-least-once) are idempotent for state because ops carry
+  * full row images.
+  *
+  * On-disk layout under `dir` — both directories hold `ApplyOutcome` rows
+  * without the `kind` column:
+  *  - `state/`: the snapshot, one row per surviving key (`lastSeq` is the
+  *    seq of the op that wrote the image, `error` is empty);
+  *  - `exceptions/`: every batch's apply exceptions, one set of parquet files
+  *    per batch that had any;
+  *  - `state._tmp/`: exists only while a merge is in flight.
+  *
+  * A merge is ONE write: the batch's outcomes go to `state._tmp` partitioned
+  * by `kind`, then the `kind=exception` files move into `exceptions/`, then
+  * `state/` is deleted and `kind=state` renamed into its place, then the tmp
+  * dir goes. (On an object store the last two steps become a manifest pointer
+  * swap — same structure.) Crash cases, resolved when the state is opened and
+  * before every merge:
+  *  - tmp without `_SUCCESS` (write unfinished): dropped; `state/` is intact.
+  *  - tmp finished, `state/` present (crash before or after the state swap):
+  *    dropped. `state/` is either the old snapshot, with the batch's
+  *    exceptions possibly already moved, or already the new one. A replayed
+  *    batch re-appends identical exception rows, which the dedup on
+  *    `(schema, table, pk, lastSeq)` in [[loadExceptions]] reads once.
+  *  - tmp finished, `state/` missing (crash between the delete and the
+  *    rename): the swap is completed, so no committed row is lost.
   */
 final class DurableCdcState(spark: SparkSession, dir: String) {
   import spark.implicits._
 
   private val statePath = new Path(s"$dir/state")
   private val stateTmpPath = new Path(s"$dir/state._tmp")
-  private val exceptionsPath = s"$dir/exceptions"
+  private val exceptionsPath = new Path(s"$dir/exceptions")
+  private val tmpStatePath = new Path(stateTmpPath, "kind=state")
+  private val tmpExceptionsPath = new Path(stateTmpPath, "kind=exception")
 
   private def fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def loadState(): Dataset[CdcRecord] =
-    if (fs.exists(statePath)) spark.read.parquet(statePath.toString).as[CdcRecord]
-    else spark.emptyDataset[CdcRecord]
+  /** On-disk row schema: explicit, so a read runs no schema-inference job. */
+  private val rowSchema: StructType =
+    StructType(Encoders.product[ApplyOutcome].schema.filterNot(_.name == "kind"))
 
-  /** Replace the snapshot atomically-enough for a filesystem: write tmp,
-    * delete old, rename tmp into place. (On an object store this becomes a
-    * manifest pointer swap — same structure.)
-    */
-  def saveState(state: Dataset[CdcRecord]): Unit = {
-    state.write.mode(SaveMode.Overwrite).parquet(stateTmpPath.toString)
-    if (fs.exists(statePath)) fs.delete(statePath, true)
-    fs.rename(stateTmpPath, statePath)
+  recover()
+
+  private def rename(from: Path, to: Path): Unit =
+    if (!fs.rename(from, to)) throw new IOException(s"rename $from -> $to failed")
+
+  private def moveExceptions(): Unit =
+    if (fs.exists(tmpExceptionsPath)) {
+      fs.mkdirs(exceptionsPath)
+      // part-file names carry the write job's UUID, so they never collide
+      fs.listStatus(tmpExceptionsPath)
+        .foreach(f => rename(f.getPath, new Path(exceptionsPath, f.getPath.getName)))
+    }
+
+  private def swapState(): Unit = {
+    fs.delete(statePath, true)
+    if (fs.exists(tmpStatePath)) rename(tmpStatePath, statePath)
+    else fs.mkdirs(statePath) // no surviving row: an empty snapshot
+    fs.delete(stateTmpPath, true)
   }
 
-  def appendExceptions(ex: Dataset[ApplyOutcome]): Unit =
-    ex.write.mode(SaveMode.Append).parquet(exceptionsPath)
+  /** Resolve a merge interrupted by a crash (see the class doc). */
+  private def recover(): Unit = {
+    if (fs.exists(stateTmpPath)) {
+      if (!fs.exists(statePath) && fs.exists(new Path(stateTmpPath, "_SUCCESS"))) {
+        moveExceptions()
+        swapState()
+      } else fs.delete(stateTmpPath, true)
+    }
+    fs.mkdirs(statePath) // no-op unless this is a fresh dir: an empty snapshot
+  }
+
+  def loadState(): Dataset[CdcRecord] =
+    spark.read.schema(rowSchema).parquet(statePath.toString)
+      .select(lit(0L).as("seq"), lit(CdcParser.OpLoad).as("op"),
+        col("schema"), col("table"), col("pk"), col("values"))
+      .as[CdcRecord]
 
   def loadExceptions(): Dataset[ApplyOutcome] =
-    if (fs.exists(new Path(exceptionsPath)))
+    if (fs.exists(exceptionsPath))
       // a replayed micro-batch (at-least-once) re-appends identical rows;
       // (key, seq) identifies an exception uniquely, so dedup on read
-      spark.read.parquet(exceptionsPath).as[ApplyOutcome]
+      spark.read.schema(rowSchema).parquet(exceptionsPath.toString)
+        .withColumn("kind", lit("exception")).as[ApplyOutcome]
         .dropDuplicates("schema", "table", "pk", "lastSeq")
     else spark.emptyDataset[ApplyOutcome]
 
   /** Merge one parsed micro-batch into the snapshot with the distributed
-    * apply; returns the new state size. Seeds are re-tagged as LOAD records
-    * at seq 0 (below any change seq).
+    * apply, in one write (see the class doc for the commit order). Seeds are
+    * re-tagged as LOAD records at seq 0 (below any change seq).
     */
-  def mergeBatch(records: Dataset[CdcRecord]): Long = {
-    val seeded = loadState().union(records)
-    val outcomes = graft.cdc.CdcApply.run(spark, seeded)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      appendExceptions(outcomes.filter(_.kind == "exception"))
-      val newState = outcomes.filter(_.kind == "state").map { o =>
-        CdcRecord(0L, CdcParser.OpLoad, o.schema, o.table, o.pk, o.values)
-      }
-      saveState(newState)
-      loadState().count()
-    } finally outcomes.unpersist()
+  def mergeBatch(records: Dataset[CdcRecord]): Unit = {
+    recover()
+    CdcApply.run(spark, loadState().union(records))
+      .write.mode(SaveMode.Overwrite).partitionBy("kind").parquet(stateTmpPath.toString)
+    moveExceptions()
+    swapState()
   }
 }

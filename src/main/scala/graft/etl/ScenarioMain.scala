@@ -48,9 +48,13 @@ object ScenarioMain {
     // Durable-by-default: every CDC-applying runner in this scenario gets a
     // durable state dir, so the apply path exercised here is the
     // distributed parquet-snapshot merge (DurableCdcState.mergeBatch →
-    // CdcApply.run) — the in-memory driver-side double in TaskRunner stays
-    // test-only by construction. SPARK_GRAFT_STATE_ROOT pins the root
-    // (restart-resumable); default is a fresh temp root per run.
+    // CdcApply.run, written once per batch: the outcomes land in
+    // state._tmp partitioned by kind, the exception files move into
+    // exceptions/, kind=state is swapped in as state/) — the in-memory
+    // driver-side double in TaskRunner stays test-only by construction.
+    // SPARK_GRAFT_STATE_ROOT pins the root (restart-resumable, an
+    // interrupted swap is completed on open); default is a fresh temp root
+    // per run.
     val stateRoot = sys.env.get("SPARK_GRAFT_STATE_ROOT")
       .map(java.nio.file.Paths.get(_))
       .getOrElse(Files.createTempDirectory("graft-scenario-state"))

@@ -194,9 +194,9 @@ final class TaskRunner(
 
   /** Merge one parsed micro-batch into the running state. The durable path is
     * fully distributed (`DurableCdcState.mergeBatch` → `CdcApply.run`, one
-    * shuffle on the PK, nothing driver-side). The in-memory path is the test
-    * double for fixture replays — state lives on the driver by definition, so
-    * it drains the (fixture-sized) batch there.
+    * shuffle on the PK and one parquet write, nothing driver-side). The
+    * in-memory path is the test double for fixture replays — state lives on
+    * the driver by definition, so it drains the (fixture-sized) batch there.
     */
   private def applyBatch(records: Dataset[CdcRecord]): Unit = synchronized {
     durable match {
@@ -215,29 +215,39 @@ final class TaskRunner(
   /** Process one micro-batch DataFrame of (file, value) text rows: sequence by
     * (file seq × row index), parse, emit one envelope per op
     * (include_transaction_details, stack.py:125), then apply — all computed
-    * distributed; nothing batch-sized crosses the driver on the durable path.
+    * distributed; nothing batch-sized crosses the driver on the durable path
+    * except the events of the batch's one file, which the sink receives.
     *
     * Sequencing: text-source partitions are byte-offset ordered and
     * `monotonically_increasing_id` is monotone within a partition with the
     * partition index in its high bits, so ranking by it inside each file
     * reproduces the reference's file-sequence × row order (SURVEY §7) without
-    * the driver-side zipWithIndex+collect this used to do. The per-file
-    * row_number shuffle moves one micro-batch file per trigger
-    * (maxFilesPerTrigger=1) — bounded by construction.
+    * the driver-side zipWithIndex+collect this used to do.
+    *
+    * The batch is coalesced (no shuffle) into ONE partition before the
+    * per-file row_number, so the window needs no exchange and the sink's
+    * `orderBy("seq")` plans a local sort instead of a range-sort sample and
+    * shuffle; its partition-at-a-time handoff then holds the whole batch.
+    * That is one CDC file per trigger (maxFilesPerTrigger=1) — bounded by
+    * construction. A trigger is three Spark jobs on the durable path: the
+    * emission, the apply shuffle and the one state write
+    * (`DurableCdcState.mergeBatch`). There is no emptiness probe: a batch of
+    * blank lines emits nothing and rewrites an unchanged state.
     */
   private[etl] def processCdcBatch(batch: DataFrame): Unit = {
-    if (batch.isEmpty) return
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__fseq")).orderBy(col("__mono"))
     val sequenced = batch
       .select(input_file_name().as("__f"), col("value"))
-      .filter(trim(col("value")) =!= "")
+      // blank = nothing above U+0020, the String.trim rule of parseLines
+      .filter(col("value").rlike("[^\\x00-\\x20]"))
       .withColumn("__mono", monotonically_increasing_id())
       .withColumn("__fseq",
         coalesce(
           regexp_extract(element_at(split(col("__f"), "/"), -1), "(\\d+)[^0-9]*$", 1)
             .cast("long"),
           lit(0L)))
+      .coalesce(1)
       .select(
         (col("__fseq") * 1000000L + row_number().over(w)).as("seq"),
         col("value"))
@@ -248,7 +258,9 @@ final class TaskRunner(
     * for replays; the streaming path funnels here via processCdcBatch.
     */
   def processCdcBatchRecords(records: Seq[CdcRecord]): Unit =
-    processCdcRecords(spark.createDataset(records))
+    // one partition: the records are on the driver already, and the sink's
+    // seq order then needs no range shuffle
+    processCdcRecords(spark.createDataset(records).coalesce(1))
 
   /** Distributed envelope build + ordered emission + state merge. Envelope
     * construction is a map-only pass over the records (the per-table column
@@ -260,30 +272,29 @@ final class TaskRunner(
     val ts = nowIso()
     val colNames: Map[(String, String), Seq[String]] =
       selected.map(t => (t.owner, t.name) -> t.columns.map(_.name)).toMap
-    val cached = records.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val events = cached.map { r =>
-        val env =
-          if (r.op == CdcParser.OpAlterTable)
-            // schema-change marker → alter-table CONTROL event
-            // (include_table_alter_operations, stack.py:124)
-            Envelope.controlJson("alter-table", r.schema, r.table, ts)
-          else {
-            val fields = colNames.get((r.schema, r.table)) match {
-              case Some(ns) =>
-                ns.zip(r.values).map { case (n, v) => s""""$n":${TaskRunner.jsonValue(v)}""" }
-              case None =>
-                r.values.zipWithIndex.map { case (v, i) => s""""col${i + 1}":${TaskRunner.jsonValue(v)}""" }
-            }
-            val dataJson = fields.mkString("{", ",", "}")
-            s"""{"data":$dataJson,"metadata":{"timestamp":"$ts","record-type":"data","operation":"${r.op.toLowerCase}","partition-key-type":"schema-table","schema-name":"${r.schema}","table-name":"${r.table}","transaction-id":${r.seq}}}"""
+    val events = records.map { r =>
+      val env =
+        if (r.op == CdcParser.OpAlterTable)
+          // schema-change marker → alter-table CONTROL event
+          // (include_table_alter_operations, stack.py:124)
+          Envelope.controlJson("alter-table", r.schema, r.table, ts)
+        else {
+          val fields = colNames.get((r.schema, r.table)) match {
+            case Some(ns) =>
+              ns.zip(r.values).map { case (n, v) => s""""$n":${TaskRunner.jsonValue(v)}""" }
+            case None =>
+              r.values.zipWithIndex.map { case (v, i) => s""""col${i + 1}":${TaskRunner.jsonValue(v)}""" }
           }
-        (r.seq, s"${r.schema}.${r.table}", env)
-      }.toDF("seq", "partition_key", "envelope")
-      sink.appendOrdered(events)
-      // DDL markers never enter the row apply — they change no row state
-      applyBatch(cached.filter(_.op != CdcParser.OpAlterTable))
-    } finally cached.unpersist()
+          val dataJson = fields.mkString("{", ",", "}")
+          s"""{"data":$dataJson,"metadata":{"timestamp":"$ts","record-type":"data","operation":"${r.op.toLowerCase}","partition-key-type":"schema-table","schema-name":"${r.schema}","table-name":"${r.table}","transaction-id":${r.seq}}}"""
+        }
+      (r.seq, s"${r.schema}.${r.table}", env)
+    }.toDF("seq", "partition_key", "envelope")
+    sink.appendOrdered(events)
+    // DDL markers never enter the row apply — they change no row state.
+    // The merge re-reads the batch rather than caching it: recomputing one
+    // file's narrow plan is cheaper than the job that materializes a cache.
+    applyBatch(records.filter(_.op != CdcParser.OpAlterTable))
   }
 
   /** Start the CDC task: controls first (task starts before data exists,
@@ -361,6 +372,9 @@ object TaskRunner {
     if (m.nonEmpty) m.last.toLong else 0L
   }
 
+  // compiled once: jsonValue runs for every field of every envelope
+  private val IntegerLiteral = java.util.regex.Pattern.compile("-?\\d+")
+
   /** DMS-style scalar JSON encoding for envelope `data` fields: integers
     * unquoted, everything else a JSON string. Static so the distributed
     * envelope map doesn't capture the runner (which holds the SparkSession
@@ -368,6 +382,6 @@ object TaskRunner {
     */
   def jsonValue(v: String): String =
     if (v == null) "null"
-    else if (v.matches("-?\\d+")) v
+    else if (IntegerLiteral.matcher(v).matches()) v
     else "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cdc._
-import graft.etl.ReferenceFixtures
+import graft.etl.{ReferenceFixtures, TaskRunner}
 
 class CdcSpec extends AnyFunSuite {
 
@@ -15,6 +15,22 @@ class CdcSpec extends AnyFunSuite {
     // op, TABLE, schema order — not op, schema, table
     assert(short.schema == "hr")
     assertThrows[IllegalArgumentException](CdcParser.parseLine(3, "INSERT,employee"))
+  }
+
+  test("envelope field encoding: integers bare, everything else a JSON string") {
+    val j = TaskRunner.jsonValue _
+    assert(j("101") == "101")
+    assert(j("-7") == "-7")
+    assert(j("007") == "007")
+    assert(j("-") == "\"-\"")
+    assert(j("") == "\"\"")
+    assert(j("3.50") == "\"3.50\"")
+    assert(j("1e3") == "\"1e3\"")
+    assert(j(" 12") == "\" 12\"")
+    assert(j("12\n") == "\"12\n\"")
+    assert(j("say \"hi\"") == "\"say \\\"hi\\\"\"")
+    assert(j("C:\\tmp") == "\"C:\\\\tmp\"")
+    assert(j(null) == "null")
   }
 
   test("parseLines keeps file × row order and skips blanks") {

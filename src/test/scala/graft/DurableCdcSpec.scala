@@ -1,13 +1,18 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cdc.CdcParser
 import graft.etl._
 import graft.schema.{SelectionRule, SelectionRules}
 
 /** Durable CDC state: distributed parquet-snapshot merge per batch, restart
-  * recovery, idempotent state under batch replay.
+  * recovery (including a merge cut short by a crash), idempotent state under
+  * batch replay, and the Spark-job budget of one micro-batch.
   */
 class DurableCdcSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
@@ -19,6 +24,58 @@ class DurableCdcSpec extends AnyFunSuite {
   private def batchOf(body: String, fileSeq: Long) =
     CdcParser.parseLines(body.linesIterator.toSeq)
       .map(r => r.copy(seq = fileSeq * 1000000L + r.seq))
+
+  private def keys(r: TaskRunner) = r.currentState.map(s => (s.schema, s.table, s.pk))
+  private def exceptionKeys(r: TaskRunner) = r.exceptions.map(e => (e.table, e.pk))
+
+  private def copyTree(from: Path, to: Path): Unit = {
+    val paths = Files.walk(from)
+    try paths.iterator().asScala.foreach { p =>
+      val t = to.resolve(from.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+    } finally paths.close()
+  }
+
+  /** State dirs after cdc file 1 (`half`: an empty snapshot, no exception)
+    * and after files 1 and 2 (`full`: department 204, exception 301).
+    */
+  private lazy val (half, full) = {
+    val h = Files.createTempDirectory("graft-half")
+    runner(h.toString).processCdcBatchRecords(batchOf(ReferenceFixtures.cdcFile1, 1))
+    val f = Files.createTempDirectory("graft-full")
+    copyTree(h, f)
+    runner(f.toString).processCdcBatchRecords(batchOf(ReferenceFixtures.cdcFile2, 2))
+    (h, f)
+  }
+
+  /** Jobs submitted under the job group `group` while `body` runs. */
+  private def jobsIn(group: => String)(body: => Unit): Int = {
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      ListenerBusAccess.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    val g = group
+    groups.asScala.count(_ == g)
+  }
+
+  private def seededRunner(stateDir: String): TaskRunner = {
+    val src = Files.createTempDirectory("graft-seed-src")
+    ReferenceFixtures.fullLoadCsvs.foreach { case (table, body) =>
+      val d = Files.createDirectories(src.resolve(s"hr/$table"))
+      Files.writeString(d.resolve(s"LOAD_$table.csv"), body)
+    }
+    val r = runner(stateDir)
+    r.runFullLoadAndSeedCdc(src.toString)
+    r
+  }
 
   test("restarted runner resumes from the committed snapshot") {
     val dir = Files.createTempDirectory("graft-durable").toString
@@ -122,5 +179,99 @@ class DurableCdcSpec extends AnyFunSuite {
     assert(r2.currentState.map(r => (r.schema, r.table, r.pk)) ==
       Seq(("hr", "department", "204")))
     assert(r2.exceptions.map(e => (e.table, e.pk)) == Seq(("department", "301")))
+  }
+
+  test("a CDC file of only blank lines emits no data event and changes nothing") {
+    val cdcDir = Files.createTempDirectory("graft-cdc-blank")
+    val ckpt = Files.createTempDirectory("graft-ckpt-blank")
+    val sink = new MemoryEventSink
+    val r = runner(Files.createTempDirectory("graft-state-blank").toString, sink)
+    val q = r.startCdc(cdcDir.toString, ckpt.toString)
+    try {
+      Files.writeString(cdcDir.resolve("cdc0000000001.csv"), ReferenceFixtures.cdcFile1)
+      Files.writeString(cdcDir.resolve("cdc0000000002.csv"), ReferenceFixtures.cdcFile2)
+      q.processAllAvailable()
+      val (events, state, ex) = (sink.all, r.currentState, r.exceptions)
+      Files.writeString(cdcDir.resolve("cdc0000000003.csv"), "\n   \n\t\n")
+      q.processAllAvailable()
+      assert(q.recentProgress.count(_.numInputRows > 0) == 3, "the blank file ran as a batch")
+      assert(sink.all == events)
+      assert(r.currentState == state && state.map(_.pk) == Seq("204"))
+      assert(r.exceptions == ex && ex.map(_.pk) == Seq("301"))
+    } finally q.stop()
+  }
+
+  test("crash mid-write: an unfinished state._tmp is ignored on restart and by the next merge") {
+    val dir = Files.createTempDirectory("graft-crash-write")
+    copyTree(half, dir)
+    // a partial write: rows under both kinds, no _SUCCESS marker
+    copyTree(full.resolve("state"), dir.resolve("state._tmp/kind=state"))
+    copyTree(full.resolve("state"), dir.resolve("state._tmp/kind=exception"))
+    val r = runner(dir.toString)
+    assert(keys(r).isEmpty)
+    assert(r.exceptions.isEmpty)
+    r.processCdcBatchRecords(batchOf(ReferenceFixtures.cdcFile2, 2))
+    assert(keys(r) == Seq(("hr", "department", "204")))
+    assert(exceptionKeys(r) == Seq(("department", "301")))
+    assert(!Files.exists(dir.resolve("state._tmp")))
+  }
+
+  test("crash mid-swap: a finished state._tmp with state/ deleted is swapped in on restart") {
+    val dir = Files.createTempDirectory("graft-crash-swap")
+    copyTree(full, dir)
+    val tmp = Files.createDirectories(dir.resolve("state._tmp"))
+    Files.move(dir.resolve("state"), tmp.resolve("kind=state"))
+    Files.move(dir.resolve("exceptions"), tmp.resolve("kind=exception"))
+    Files.createFile(tmp.resolve("_SUCCESS"))
+    val r = runner(dir.toString)
+    assert(keys(r) == Seq(("hr", "department", "204")))
+    assert(exceptionKeys(r) == Seq(("department", "301")))
+    assert(!Files.exists(tmp))
+  }
+
+  test("crash after the exception moves: the old snapshot stays and the replay is exactly once") {
+    val dir = Files.createTempDirectory("graft-crash-moved")
+    copyTree(half, dir)
+    copyTree(full.resolve("exceptions"), dir.resolve("exceptions"))
+    copyTree(full.resolve("state"), dir.resolve("state._tmp/kind=state"))
+    Files.createFile(dir.resolve("state._tmp/_SUCCESS"))
+    val r = runner(dir.toString)
+    assert(keys(r).isEmpty, "state/ is present, so the unswapped write is dropped")
+    // the replayed micro-batch re-appends the moved exception: read once
+    r.processCdcBatchRecords(batchOf(ReferenceFixtures.cdcFile2, 2))
+    assert(keys(r) == Seq(("hr", "department", "204")))
+    assert(exceptionKeys(r) == Seq(("department", "301")))
+  }
+
+  test("a durable micro-batch on a seeded state stays within its Spark-job budget") {
+    val r = seededRunner(Files.createTempDirectory("graft-jobs").toString)
+    val sc = spark.sparkContext
+    val replay = jobsIn("durable-replay") {
+      sc.setJobGroup("durable-replay", "one replayed batch")
+      try r.processCdcBatchRecords(batchOf(ReferenceFixtures.cdcFile1, 1))
+      finally sc.clearJobGroup()
+    }
+    // the emission, the apply shuffle and the one state write
+    assert(replay <= 3, s"processCdcBatchRecords ran $replay jobs")
+
+    val cdcDir = Files.createTempDirectory("graft-cdc-jobs")
+    var q: org.apache.spark.sql.streaming.StreamingQuery = null
+    // the stream's jobs run under its run id as the job group
+    val streamed = jobsIn(q.runId.toString) {
+      q = r.startCdc(cdcDir.toString, Files.createTempDirectory("graft-ckpt-jobs").toString,
+        emitStartControls = false)
+      try {
+        Files.writeString(cdcDir.resolve("cdc0000000002.csv"), ReferenceFixtures.cdcFile2)
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    assert(q.recentProgress.count(_.numInputRows > 0) == 1)
+    assert(streamed <= 3, s"one streaming file ran $streamed jobs")
+    // seeded rows 201-203 / 101-104 / 301-303; file 1 deletes employee 101
+    // (its INSERT of a loaded key excepts), file 2 nets to department 204
+    assert(keys(r).map(k => s"${k._2}#${k._3}") == Seq("department#201", "department#202",
+      "department#203", "department#204", "employee#102", "employee#103", "employee#104",
+      "project#301", "project#302", "project#303"))
+    assert(exceptionKeys(r) == Seq(("employee", "101"), ("department", "301")))
   }
 }
