@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.StructType
 import graft.cdc.{ApplyOutcome, CdcApply, CdcParser, CdcRecord}
+import graft.util.Overlap
 
 /** Durable CDC apply state: current full row images as a parquet snapshot,
   * exceptions as an append-only parquet log.
@@ -29,8 +30,16 @@ import graft.cdc.{ApplyOutcome, CdcApply, CdcParser, CdcRecord}
   * by `kind`, then the `kind=exception` files move into `exceptions/`, then
   * `state/` is deleted and `kind=state` renamed into its place, then the tmp
   * dir goes. (On an object store the last two steps become a manifest pointer
-  * swap — same structure.) Crash cases, resolved when the state is opened and
-  * before every merge:
+  * swap — same structure.)
+  *
+  * The write runs on a helper thread while the caller emits the same step's
+  * events; the moves and the swap (the commit) start only after the emission
+  * has returned. So the events are out before the state moves, nothing
+  * rewrites `state/` or `exceptions/` while the emission runs, and the crash
+  * cases are those of a sequential merge: a failed or interrupted emission
+  * leaves a tmp that is unfinished (dropped) or finished with `state/`
+  * present (dropped) — the replayed step then redoes both. Crash cases,
+  * resolved when the state is opened and before every merge:
   *  - tmp without `_SUCCESS` (write unfinished): dropped; `state/` is intact.
   *  - tmp finished, `state/` present (crash before or after the state swap):
   *    dropped. `state/` is either the old snapshot, with the batch's
@@ -39,6 +48,9 @@ import graft.cdc.{ApplyOutcome, CdcApply, CdcParser, CdcRecord}
   *    `(schema, table, pk, lastSeq)` in [[loadExceptions]] reads once.
   *  - tmp finished, `state/` missing (crash between the delete and the
   *    rename): the swap is completed, so no committed row is lost.
+  *
+  * One handle writes a dir at a time: opening a second handle runs the
+  * recovery, which drops the tmp of a merge in flight.
   */
 final class DurableCdcState(spark: SparkSession, dir: String) {
   import spark.implicits._
@@ -102,13 +114,18 @@ final class DurableCdcState(spark: SparkSession, dir: String) {
     else spark.emptyDataset[ApplyOutcome]
 
   /** Merge one parsed micro-batch into the snapshot with the distributed
-    * apply, in one write (see the class doc for the commit order). Seeds are
-    * re-tagged as LOAD records at seq 0 (below any change seq).
+    * apply, in one write, while `alongside` (the step's event emission) runs
+    * on the calling thread. `records` is built on the writing thread, so its
+    * planning overlaps the emission too. The commit runs only after both have
+    * returned and only if both succeeded (see the class doc). Snapshot rows
+    * re-enter the apply as LOAD records at seq 0 (below any change seq).
     */
-  def mergeBatch(records: Dataset[CdcRecord]): Unit = {
+  def mergeBatch(records: => Dataset[CdcRecord], alongside: => Unit = ()): Unit = {
     recover()
-    CdcApply.run(spark, loadState().union(records))
-      .write.mode(SaveMode.Overwrite).partitionBy("kind").parquet(stateTmpPath.toString)
+    Overlap.run {
+      CdcApply.run(spark, loadState().union(records))
+        .write.mode(SaveMode.Overwrite).partitionBy("kind").parquet(stateTmpPath.toString)
+    }(alongside)
     moveExceptions()
     swapState()
   }

@@ -49,8 +49,9 @@ object ScenarioMain {
     // durable state dir, so the apply path exercised here is the
     // distributed parquet-snapshot merge (DurableCdcState.mergeBatch →
     // CdcApply.run, written once per batch: the outcomes land in
-    // state._tmp partitioned by kind, the exception files move into
-    // exceptions/, kind=state is swapped in as state/) — the in-memory
+    // state._tmp partitioned by kind while the batch's events are emitted,
+    // then, once the emission has returned, the exception files move into
+    // exceptions/ and kind=state is swapped in as state/) — the in-memory
     // driver-side double in TaskRunner stays test-only by construction.
     // SPARK_GRAFT_STATE_ROOT pins the root (restart-resumable, an
     // interrupted swap is completed on open); default is a fresh temp root

@@ -19,6 +19,12 @@ import graft.schema.{SelectionRule, SelectionRules, TableDef}
   * reference's 1-shard Kinesis bottleneck by design (stack.py:268) — an
   * N-shard service sink overrides `EventSink.appendOrdered` with a
   * per-partition-key `foreachPartition` put and the bottleneck disappears.
+  * Each replication step (the full load, a CDC batch) does two independent
+  * things, the emission and the state merge, and runs them at the same time:
+  * the durable state write goes on a helper thread while the emission stays
+  * on the calling thread, and the state commits after the emission returns
+  * (`DurableCdcState.mergeBatch`). The emission must stay on the caller:
+  * `transition` and `applyBatch` both lock the runner.
   */
 final class TaskRunner(
     spark: SparkSession,
@@ -119,13 +125,21 @@ final class TaskRunner(
     * (UPDATE/DELETE of a loaded PK is then valid, INSERT of one excepts).
     * The reference deploys the two task types separately (stack.py:87,98);
     * this is the combined public DMS mode.
+    *
+    * The seed reads the source, not the events, so with a durable state its
+    * merge (scan planning, apply shuffle, write) runs while the full load
+    * emits; the seeded state commits once the full load has returned. A
+    * failed full load leaves the state unseeded.
     */
-  def runFullLoadAndSeedCdc(sourceRoot: String): Unit = {
-    runFullLoad(sourceRoot)
-    // Seed records are built distributed (a map over each table's scan) and
-    // merged with the same distributed apply as any CDC batch — the loaded
-    // tables never cross the driver.
-    val seeds: Seq[Dataset[CdcRecord]] = selected.map { t =>
+  def runFullLoadAndSeedCdc(sourceRoot: String): Unit =
+    applyBatch(seedRecords(sourceRoot))(runFullLoad(sourceRoot))
+
+  /** The loaded rows as LOAD records, built distributed (a map over each
+    * table's scan) and merged with the same distributed apply as any CDC
+    * batch — the loaded tables never cross the driver.
+    */
+  private def seedRecords(sourceRoot: String): Dataset[CdcRecord] =
+    selected.map { t =>
       val owner = t.owner
       val name = t.name
       val nCols = t.columns.size
@@ -148,9 +162,7 @@ final class TaskRunner(
           }
           CdcRecord(0L, CdcParser.OpLoad, owner, name, values.head, values)
         }
-    }
-    seeds.reduceOption(_ union _).foreach(applyBatch)
-  }
+    }.reduceOption(_ union _).getOrElse(spark.emptyDataset[CdcRecord])
 
   // ---- CDC -----------------------------------------------------------------
 
@@ -192,17 +204,21 @@ final class TaskRunner(
       Envelope.controlJson("create-table", "dms", "awsdms_apply_exceptions", ts))))
   }
 
-  /** Merge one parsed micro-batch into the running state. The durable path is
-    * fully distributed (`DurableCdcState.mergeBatch` → `CdcApply.run`, one
-    * shuffle on the PK and one parquet write, nothing driver-side). The
-    * in-memory path is the test double for fixture replays — state lives on
-    * the driver by definition, so it drains the (fixture-sized) batch there.
+  /** Run one replication step: `emit` its events and merge `records` into
+    * the running state. The durable path is fully distributed
+    * (`DurableCdcState.mergeBatch` → `CdcApply.run`, one shuffle on the PK
+    * and one parquet write, nothing driver-side); it builds and writes the
+    * records on a helper thread while `emit` runs here, and commits after
+    * `emit` returns. The in-memory path is the test double for fixture
+    * replays — state lives on the driver by definition, so it emits, then
+    * drains the (fixture-sized) batch there.
     */
-  private def applyBatch(records: Dataset[CdcRecord]): Unit = synchronized {
+  private def applyBatch(records: => Dataset[CdcRecord])(emit: => Unit): Unit = synchronized {
     durable match {
       case Some(st) =>
-        st.mergeBatch(records)
+        st.mergeBatch(records, emit)
       case None =>
+        emit
         val batch = records.collect().toSeq.sortBy(_.seq)
         val outcomes = CdcApply.runLocal(stateRecords ++ batch)
         stateRecords = outcomes.filter(_.kind == "state").map { o =>
@@ -214,7 +230,7 @@ final class TaskRunner(
 
   /** Process one micro-batch DataFrame of (file, value) text rows: sequence by
     * (file seq × row index), parse, emit one envelope per op
-    * (include_transaction_details, stack.py:125), then apply — all computed
+    * (include_transaction_details, stack.py:125) and apply — all computed
     * distributed; nothing batch-sized crosses the driver on the durable path
     * except the events of the batch's one file, which the sink receives.
     *
@@ -230,14 +246,19 @@ final class TaskRunner(
     * shuffle; its partition-at-a-time handoff then holds the whole batch.
     * That is one CDC file per trigger (maxFilesPerTrigger=1) — bounded by
     * construction. A trigger is three Spark jobs on the durable path: the
-    * emission, the apply shuffle and the one state write
+    * emission, and alongside it the apply shuffle and the one state write
     * (`DurableCdcState.mergeBatch`). There is no emptiness probe: a batch of
     * blank lines emits nothing and rewrites an unchanged state.
+    *
+    * A file may hold at most `SeqStride - 1` non-blank rows: past that its
+    * seqs would run into the next file's and become duplicate
+    * transaction-ids (and exception keys), so the batch fails instead. The
+    * stride itself is fixed: persisted `lastSeq`s must stay comparable.
     */
   private[etl] def processCdcBatch(batch: DataFrame): Unit = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__fseq")).orderBy(col("__mono"))
-    val sequenced = batch
+    val numbered = batch
       .select(input_file_name().as("__f"), col("value"))
       // blank = nothing above U+0020, the String.trim rule of parseLines
       .filter(col("value").rlike("[^\\x00-\\x20]"))
@@ -248,9 +269,14 @@ final class TaskRunner(
             .cast("long"),
           lit(0L)))
       .coalesce(1)
-      .select(
-        (col("__fseq") * 1000000L + row_number().over(w)).as("seq"),
-        col("value"))
+    val rowNo = row_number().over(w)
+    val tooLong = raise_error(concat(lit("CDC file "), col("__f"),
+      lit(s" has more than ${TaskRunner.SeqStride - 1} non-blank rows;" +
+        " its seqs would collide with the next file's")))
+    val sequenced = numbered.select(
+      when(rowNo >= TaskRunner.SeqStride, tooLong)
+        .otherwise(col("__fseq") * TaskRunner.SeqStride + rowNo).as("seq"),
+      col("value"))
     processCdcRecords(CdcParser.parse(spark, sequenced))
   }
 
@@ -266,7 +292,10 @@ final class TaskRunner(
     * construction is a map-only pass over the records (the per-table column
     * names travel to executors as a tiny captured Map); the emitted
     * transaction-id is the record's global seq — unique and order-correlated,
-    * which is all include_transaction_details pins down.
+    * which is all include_transaction_details pins down. On the durable path
+    * the merge runs while the events stream out and commits after the
+    * emission returns: a failed emission fails the batch with the state
+    * unchanged, and the replayed batch redoes both.
     */
   private def processCdcRecords(records: Dataset[CdcRecord]): Unit = {
     val ts = nowIso()
@@ -290,11 +319,10 @@ final class TaskRunner(
         }
       (r.seq, s"${r.schema}.${r.table}", env)
     }.toDF("seq", "partition_key", "envelope")
-    sink.appendOrdered(events)
     // DDL markers never enter the row apply — they change no row state.
     // The merge re-reads the batch rather than caching it: recomputing one
     // file's narrow plan is cheaper than the job that materializes a cache.
-    applyBatch(records.filter(_.op != CdcParser.OpAlterTable))
+    applyBatch(records.filter(_.op != CdcParser.OpAlterTable))(sink.appendOrdered(events))
   }
 
   /** Start the CDC task: controls first (task starts before data exists,
@@ -363,6 +391,9 @@ final class TaskRunner(
 }
 
 object TaskRunner {
+  /** CDC seq = file seq × `SeqStride` + the row's 1-based number in its file. */
+  val SeqStride = 1000000L
+
   /** Extract the file sequence from `cdcNNNNNNNNNN.csv` (run.py:193-195).
     * (The streaming path computes the same thing with `regexp_extract` in the
     * plan; this is the scalar twin for tests and replays.)

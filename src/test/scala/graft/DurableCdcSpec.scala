@@ -5,6 +5,8 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import org.apache.spark.ListenerBusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cdc.CdcParser
 import graft.etl._
@@ -12,7 +14,8 @@ import graft.schema.{SelectionRule, SelectionRules}
 
 /** Durable CDC state: distributed parquet-snapshot merge per batch, restart
   * recovery (including a merge cut short by a crash), idempotent state under
-  * batch replay, and the Spark-job budget of one micro-batch.
+  * batch replay, the commit after the emission, and the Spark-job budget of
+  * a full load and of one micro-batch.
   */
 class DurableCdcSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
@@ -48,13 +51,12 @@ class DurableCdcSpec extends AnyFunSuite {
     (h, f)
   }
 
-  /** Jobs submitted under the job group `group` while `body` runs. */
-  private def jobsIn(group: => String)(body: => Unit): Int = {
-    val groups = new ConcurrentLinkedQueue[String]()
+  /** The job group of every job submitted while `body` runs (None: no group). */
+  private def jobGroupsIn(body: => Unit): Seq[Option[String]] = {
+    val groups = new ConcurrentLinkedQueue[Option[String]]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(groups.add)
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))))
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
@@ -62,19 +64,46 @@ class DurableCdcSpec extends AnyFunSuite {
       body
       ListenerBusAccess.drain(sc)
     } finally sc.removeSparkListener(listener)
-    val g = group
-    groups.asScala.count(_ == g)
+    groups.asScala.toSeq
   }
 
-  private def seededRunner(stateDir: String): TaskRunner = {
+  /** A full-load source tree holding the reference fixtures. */
+  private def fixtureSource(): Path = {
     val src = Files.createTempDirectory("graft-seed-src")
     ReferenceFixtures.fullLoadCsvs.foreach { case (table, body) =>
       val d = Files.createDirectories(src.resolve(s"hr/$table"))
       Files.writeString(d.resolve(s"LOAD_$table.csv"), body)
     }
-    val r = runner(stateDir)
-    r.runFullLoadAndSeedCdc(src.toString)
+    src
+  }
+
+  private def seededRunner(stateDir: String, sink: EventSink = new MemoryEventSink): TaskRunner = {
+    val r = runner(stateDir, sink)
+    r.runFullLoadAndSeedCdc(fixtureSource().toString)
     r
+  }
+
+  /** A memory sink that runs `before` and `after` around every ordered
+    * emission, or fails it when `failOrdered`.
+    */
+  private final class ProbeSink(
+      before: () => Unit = () => (), after: () => Unit = () => (), failOrdered: Boolean = false
+  ) extends EventSink {
+    private val inner = new MemoryEventSink
+    override def append(events: Seq[(String, String)]): Unit = inner.append(events)
+    override def appendOrdered(events: DataFrame): Unit = {
+      if (failOrdered) throw new IllegalStateException("stream unavailable")
+      before()
+      super.appendOrdered(events)
+      after()
+    }
+    override def all: Seq[EventRecord] = inner.all
+  }
+
+  private def awaitFile(p: Path): Unit = {
+    val deadline = System.currentTimeMillis() + 60000L
+    while (!Files.exists(p) && System.currentTimeMillis() < deadline) Thread.sleep(5)
+    assert(Files.exists(p), s"$p never appeared")
   }
 
   test("restarted runner resumes from the committed snapshot") {
@@ -244,20 +273,32 @@ class DurableCdcSpec extends AnyFunSuite {
   }
 
   test("a durable micro-batch on a seeded state stays within its Spark-job budget") {
-    val r = seededRunner(Files.createTempDirectory("graft-jobs").toString)
+    // the full load that seeds the state has a budget of its own
     val sc = spark.sparkContext
-    val replay = jobsIn("durable-replay") {
+    var r: TaskRunner = null
+    val load = jobGroupsIn {
+      sc.setJobGroup("durable-fullload", "full load and seed")
+      try r = seededRunner(Files.createTempDirectory("graft-jobs").toString)
+      finally sc.clearJobGroup()
+    }
+    // per table the window shuffle and the ordered handoff, then the apply
+    // shuffle and the one state write; the write runs on a helper thread,
+    // which must carry the caller's job group like every other job
+    assert(load.nonEmpty && load.size <= 8, s"runFullLoadAndSeedCdc ran ${load.size} jobs")
+    assert(load.forall(_.contains("durable-fullload")), s"jobs outside the caller's group: $load")
+
+    val replay = jobGroupsIn {
       sc.setJobGroup("durable-replay", "one replayed batch")
       try r.processCdcBatchRecords(batchOf(ReferenceFixtures.cdcFile1, 1))
       finally sc.clearJobGroup()
-    }
+    }.count(_.contains("durable-replay"))
     // the emission, the apply shuffle and the one state write
     assert(replay <= 3, s"processCdcBatchRecords ran $replay jobs")
 
     val cdcDir = Files.createTempDirectory("graft-cdc-jobs")
     var q: org.apache.spark.sql.streaming.StreamingQuery = null
     // the stream's jobs run under its run id as the job group
-    val streamed = jobsIn(q.runId.toString) {
+    val streamGroups = jobGroupsIn {
       q = r.startCdc(cdcDir.toString, Files.createTempDirectory("graft-ckpt-jobs").toString,
         emitStartControls = false)
       try {
@@ -265,6 +306,7 @@ class DurableCdcSpec extends AnyFunSuite {
         q.processAllAvailable()
       } finally q.stop()
     }
+    val streamed = streamGroups.count(_.contains(q.runId.toString))
     assert(q.recentProgress.count(_.numInputRows > 0) == 1)
     assert(streamed <= 3, s"one streaming file ran $streamed jobs")
     // seeded rows 201-203 / 101-104 / 301-303; file 1 deletes employee 101
@@ -273,5 +315,71 @@ class DurableCdcSpec extends AnyFunSuite {
       "department#203", "department#204", "employee#102", "employee#103", "employee#104",
       "project#301", "project#302", "project#303"))
     assert(exceptionKeys(r) == Seq(("employee", "101"), ("department", "301")))
+  }
+
+  test("the state commits only after the emission: each ordered batch sees the pre-step state") {
+    val dir = Files.createTempDirectory("graft-commit-order")
+    var r: TaskRunner = null
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+    def visible(): Unit = seen += ((keys(r).size, r.exceptions.size))
+    // after each emission, wait until the step's state write has finished:
+    // the state must still not have moved
+    val sink = new ProbeSink(before = () => visible(),
+      after = () => { awaitFile(dir.resolve("state._tmp/_SUCCESS")); visible() })
+    r = runner(dir.toString, sink)
+    r.runFullLoadAndSeedCdc(fixtureSource().toString)
+    assert(seen.toSeq == Seq.fill(6)((0, 0)), "the seed was visible during the full load")
+    assert(keys(r).size == 10)
+    seen.clear()
+    // file 1 deletes employee 101; its INSERT of the loaded key excepts
+    r.processCdcBatchRecords(batchOf(ReferenceFixtures.cdcFile1, 1))
+    assert(seen.toSeq == Seq((10, 0), (10, 0)), "the batch's state was visible during its emission")
+    assert((keys(r).size, r.exceptions.size) == ((9, 1)))
+    assert(!Files.exists(dir.resolve("state._tmp")))
+  }
+
+  test("a failed CDC emission commits nothing, and the replay equals a clean run") {
+    val dir = Files.createTempDirectory("graft-emit-fail")
+    copyTree(half, dir)
+    val failing = runner(dir.toString, new ProbeSink(failOrdered = true))
+    val e = intercept[IllegalStateException] {
+      failing.processCdcBatchRecords(batchOf(ReferenceFixtures.cdcFile2, 2))
+    }
+    assert(e.getMessage == "stream unavailable")
+    assert(!Files.exists(dir.resolve("exceptions")), "the batch's exceptions were committed")
+    val reopened = runner(dir.toString)
+    assert(keys(reopened).isEmpty && reopened.exceptions.isEmpty)
+    assert(!Files.exists(dir.resolve("state._tmp")))
+    // the replayed batch with a working sink
+    reopened.processCdcBatchRecords(batchOf(ReferenceFixtures.cdcFile2, 2))
+    val clean = runner(full.toString)
+    assert(reopened.currentState == clean.currentState)
+    assert(reopened.exceptions == clean.exceptions)
+  }
+
+  test("a failed full-load emission leaves the state unseeded") {
+    val dir = Files.createTempDirectory("graft-fl-fail").toString
+    val e = intercept[IllegalStateException](seededRunner(dir, new ProbeSink(failOrdered = true)))
+    assert(e.getMessage == "stream unavailable")
+    val reopened = runner(dir)
+    assert(keys(reopened).isEmpty && reopened.exceptions.isEmpty)
+    assert(!Files.exists(Path.of(dir, "state._tmp")))
+    assert(keys(seededRunner(dir)).size == 10)
+  }
+
+  test("a CDC file past the seq stride fails its batch instead of reusing the next file's seqs") {
+    val cdcDir = Files.createTempDirectory("graft-cdc-stride")
+    // row 1,000,001 would get file 2's first seq (2 x 1,000,000 + 1)
+    val w = Files.newBufferedWriter(cdcDir.resolve("cdc0000000001.csv"))
+    try (0 until 1000001).foreach(_ => w.write("DELETE,t,s,1\n")) finally w.close()
+    val sink = new MemoryEventSink
+    val r = runner(Files.createTempDirectory("graft-state-stride").toString, sink)
+    val q = r.startCdc(cdcDir.toString, Files.createTempDirectory("graft-ckpt-stride").toString)
+    val e = try intercept[StreamingQueryException](q.processAllAvailable()) finally q.stop()
+    def chain(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: (chain(t.getCause) ++ t.getSuppressed.toSeq.flatMap(chain))
+    assert(chain(e).exists(t => String.valueOf(t.getMessage).contains("has more than 999999 non-blank rows")), e)
+    assert(sink.size == 4, "only the start controls may be out")
+    assert(keys(r).isEmpty && r.exceptions.isEmpty)
   }
 }
