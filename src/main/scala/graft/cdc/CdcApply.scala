@@ -90,7 +90,10 @@ object CdcApply {
       }
   }
 
-  /** Local (driver-side) apply for small fixture replays and property tests. */
+  /** Driver-side sequential apply: the reference that the distributed [[run]]
+    * is tested against. No replication path calls it; `TaskRunner` always
+    * merges through `DurableCdcState`.
+    */
   def runLocal(records: Seq[CdcRecord]): Seq[ApplyOutcome] =
     records
       .groupBy(r => (r.schema, r.table, r.pk))

@@ -46,34 +46,3 @@ object EventConsumer {
       get_json_object($"envelope", "$.data").as("data_json"))
   }
 }
-
-/** Engine configuration surface (reference O18): the reference resolves
-  * bucket/folder/cdc names from CFN outputs + a SecretsManager secret
-  * (run.py:31-45, 69-72; written at stack.py:286-295). Natively that's just a
-  * config record.
-  */
-final case class EngineConfig(
-    sourceRoot: String,
-    bucketFolder: String = "sourceData",
-    changeData: String = "changedata",
-    checkpointDir: String = "/tmp/graft-checkpoints"
-) {
-  def fullLoadRoot: String = s"$sourceRoot/$bucketFolder"
-  def cdcPath: String = s"$sourceRoot/$changeData"
-}
-
-/** Fixed-budget retry (reference O17: run.py:51-62 — `retries`× with constant
-  * sleep; 10×1s local profile).
-  */
-object Retry {
-  def apply[T](retries: Int = 10, sleepMs: Long = 1000L)(f: => T): T = {
-    var last: Throwable = null
-    var i = 0
-    while (i < retries) {
-      try return f
-      catch { case e: Throwable => last = e; Thread.sleep(sleepMs) }
-      i += 1
-    }
-    throw last
-  }
-}

@@ -21,23 +21,12 @@ final class FileEventSink(dir: String, val shards: Int = 1) extends EventSink {
 
   private var seq: Long = all.map(_.seqNo + 1).maxOption.getOrElse(0L)
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
   override def append(events: Seq[(String, String)]): Unit = synchronized {
     val now = System.currentTimeMillis()
     events.groupBy { case (pk, _) => shardOf(pk) }.foreach { case (s, evs) =>
       val lines = evs.map { case (pk, env) =>
         val line =
-          s"""{"seq":$seq,"partitionKey":"${esc(pk)}","arrivalTs":$now,"envelope":"${esc(env)}"}"""
+          s"""{"seq":$seq,"partitionKey":"${Envelope.escape(pk)}","arrivalTs":$now,"envelope":"${Envelope.escape(env)}"}"""
         seq += 1
         line
       }

@@ -45,15 +45,14 @@ object ScenarioMain {
     println("[full-load] table statistics:")
     fl.tableStatistics().show(truncate = false)
 
-    // Durable-by-default: every CDC-applying runner in this scenario gets a
-    // durable state dir, so the apply path exercised here is the
-    // distributed parquet-snapshot merge (DurableCdcState.mergeBatch →
-    // CdcApply.run, written once per batch: the outcomes land in
-    // state._tmp partitioned by kind while the batch's events are emitted,
-    // then, once the emission has returned, the exception files move into
-    // exceptions/ and kind=state is swapped in as state/) — the in-memory
-    // driver-side double in TaskRunner stays test-only by construction.
-    // SPARK_GRAFT_STATE_ROOT pins the root (restart-resumable, an
+    // Every runner applies through the distributed parquet-snapshot merge
+    // (DurableCdcState.mergeBatch → CdcApply.run, written once per batch:
+    // the outcomes land in state._tmp partitioned by kind while the batch's
+    // events are emitted, then, once the emission has returned, the
+    // exception files move into exceptions/ and kind=state is swapped in as
+    // state/). The CDC-applying runners here get a named state dir under
+    // one root; a runner given none keeps its state in a temp dir of its
+    // own. SPARK_GRAFT_STATE_ROOT pins the root (restart-resumable, an
     // interrupted swap is completed on open); default is a fresh temp root
     // per run.
     val stateRoot = sys.env.get("SPARK_GRAFT_STATE_ROOT")

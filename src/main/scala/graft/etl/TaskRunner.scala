@@ -1,9 +1,11 @@
 package graft.etl
 
+import java.nio.file.Files
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.cdc.{ApplyOutcome, CdcApply, CdcParser, CdcRecord}
+import graft.cdc.{ApplyOutcome, CdcParser, CdcRecord}
 import graft.schema.{SelectionRule, SelectionRules, TableDef}
 
 /** Replication task lifecycle (reference O20): full-load batch job + CDC
@@ -25,6 +27,14 @@ import graft.schema.{SelectionRule, SelectionRules, TableDef}
   * on the calling thread, and the state commits after the emission returns
   * (`DurableCdcState.mergeBatch`). The emission must stay on the caller:
   * `transition` and `applyBatch` both lock the runner.
+  *
+  * State: every runner applies through one `DurableCdcState`, opened at
+  * construction. `stateDir` only picks where it lives: given a dir, a
+  * restarted runner on the same dir resumes from its committed snapshot;
+  * `None` means a fresh temp dir, deleted at JVM exit, that nothing resumes.
+  * Only selected tables replicate: the full load, the CDC start controls and
+  * every CDC event and apply follow `rules` (DMS table mappings bind the
+  * whole task, stack.py:65-78).
   */
 final class TaskRunner(
     spark: SparkSession,
@@ -96,13 +106,8 @@ final class TaskRunner(
         (t.qualifiedName, Envelope.controlJson("drop-table", t.owner, t.name, ts)),
         (t.qualifiedName, Envelope.controlJson("create-table", t.owner, t.name, ts))
       ))
-      val rows = spark.read
-        .schema(t.structType)
-        .option("header", "false")
-        .option("timestampFormat", "yyyy-MM-dd[ HH:mm:ss]")
-        .csv(s"$sourceRoot/${t.path}")
       val envelopes = Envelope.forData(
-        rows, t.owner, t.name,
+        readSource(sourceRoot, t), t.owner, t.name,
         operation = lit("load"),
         timestamp = lit(ts),
         transactionId = lit(null).cast("long"))
@@ -126,10 +131,10 @@ final class TaskRunner(
     * The reference deploys the two task types separately (stack.py:87,98);
     * this is the combined public DMS mode.
     *
-    * The seed reads the source, not the events, so with a durable state its
-    * merge (scan planning, apply shuffle, write) runs while the full load
-    * emits; the seeded state commits once the full load has returned. A
-    * failed full load leaves the state unseeded.
+    * The seed reads the source, not the events, so its merge (scan
+    * planning, apply shuffle, write) runs while the full load emits; the
+    * seeded state commits once the full load has returned. A failed full
+    * load leaves the state unseeded.
     */
   def runFullLoadAndSeedCdc(sourceRoot: String): Unit =
     applyBatch(seedRecords(sourceRoot))(runFullLoad(sourceRoot))
@@ -143,53 +148,47 @@ final class TaskRunner(
       val owner = t.owner
       val name = t.name
       val nCols = t.columns.size
-      spark.read
-        .schema(t.structType)
-        .option("header", "false")
-        .option("timestampFormat", "yyyy-MM-dd[ HH:mm:ss]")
-        .csv(s"$sourceRoot/${t.path}")
-        .map { row =>
-          val values = (0 until nCols).map { i =>
-            val v = row.get(i)
-            if (v == null) null
-            else v match {
-              case ts: java.sql.Timestamp =>
-                // keep the CSV lexical form for date-valued timestamps
-                val s = ts.toString
-                if (s.endsWith(" 00:00:00.0")) s.dropRight(11) else s
-              case other => other.toString
-            }
+      readSource(sourceRoot, t).map { row =>
+        val values = (0 until nCols).map { i =>
+          val v = row.get(i)
+          if (v == null) null
+          else v match {
+            case ts: java.sql.Timestamp =>
+              // keep the CSV lexical form for date-valued timestamps
+              val s = ts.toString
+              if (s.endsWith(" 00:00:00.0")) s.dropRight(11) else s
+            case other => other.toString
           }
-          CdcRecord(0L, CdcParser.OpLoad, owner, name, values.head, values)
         }
+        CdcRecord(0L, CdcParser.OpLoad, owner, name, values.head, values)
+      }
     }.reduceOption(_ union _).getOrElse(spark.emptyDataset[CdcRecord])
+
+  /** A table's source rows: headerless CSV in the table's schema. */
+  private def readSource(sourceRoot: String, t: TableDef): DataFrame =
+    spark.read
+      .schema(t.structType)
+      .option("header", "false")
+      .option("timestampFormat", "yyyy-MM-dd[ HH:mm:ss]")
+      .csv(s"$sourceRoot/${t.path}")
 
   // ---- CDC -----------------------------------------------------------------
 
-  /** Current applied state (full row images per surviving PK) and accumulated
-    * apply exceptions. Kept as plain Datasets checkpointed per batch — the
-    * merge-on-read shape; a real deployment would persist these as table
-    * formats. LOAD-seeded records carry seq below any change seq.
-    */
-  @volatile private var stateRecords: Seq[CdcRecord] = Seq.empty
-  @volatile private var exceptionLog: Seq[ApplyOutcome] = Seq.empty
+  /** The replication state (see the class doc for where it lives). */
+  private val state = new DurableCdcState(spark, stateDir.getOrElse {
+    val tmp = new Path("file", null, Files.createTempDirectory("graft-cdc-state").toString)
+    tmp.getFileSystem(spark.sparkContext.hadoopConfiguration).deleteOnExit(tmp)
+    tmp.toString
+  })
 
-  /** Durable, distributed state (parquet snapshot + exception log) when a
-    * stateDir is configured; a restarted runner on the same dir resumes from
-    * the committed snapshot. In-memory otherwise (tests, ephemeral replays).
+  /** Current applied state (full row images per surviving PK) and
+    * accumulated apply exceptions. LOAD-seeded records carry seq below any
+    * change seq.
     */
-  private val durable: Option[DurableCdcState] =
-    stateDir.map(d => new DurableCdcState(spark, d))
-
-  def currentState: Seq[CdcRecord] = durable match {
-    case Some(st) => st.loadState().collect().toSeq
-      .sortBy(r => (r.schema, r.table, r.pk))
-    case None => stateRecords
-  }
-  def exceptions: Seq[ApplyOutcome] = durable match {
-    case Some(st) => st.loadExceptions().collect().toSeq.sortBy(_.lastSeq)
-    case None => exceptionLog
-  }
+  def currentState: Seq[CdcRecord] =
+    state.loadState().collect().toSeq.sortBy(r => (r.schema, r.table, r.pk))
+  def exceptions: Seq[ApplyOutcome] =
+    state.loadExceptions().collect().toSeq.sortBy(_.lastSeq)
 
   /** Emit CDC start controls: create-table per selected table + the DMS
     * internal awsdms_apply_exceptions table (README.md:84 — "3 create +
@@ -205,34 +204,19 @@ final class TaskRunner(
   }
 
   /** Run one replication step: `emit` its events and merge `records` into
-    * the running state. The durable path is fully distributed
-    * (`DurableCdcState.mergeBatch` → `CdcApply.run`, one shuffle on the PK
-    * and one parquet write, nothing driver-side); it builds and writes the
-    * records on a helper thread while `emit` runs here, and commits after
-    * `emit` returns. The in-memory path is the test double for fixture
-    * replays — state lives on the driver by definition, so it emits, then
-    * drains the (fixture-sized) batch there.
+    * the state, fully distributed (`DurableCdcState.mergeBatch` →
+    * `CdcApply.run`, one shuffle on the PK and one parquet write, nothing
+    * driver-side). The records are built and written on a helper thread
+    * while `emit` runs here; the state commits after `emit` returns.
     */
-  private def applyBatch(records: => Dataset[CdcRecord])(emit: => Unit): Unit = synchronized {
-    durable match {
-      case Some(st) =>
-        st.mergeBatch(records, emit)
-      case None =>
-        emit
-        val batch = records.collect().toSeq.sortBy(_.seq)
-        val outcomes = CdcApply.runLocal(stateRecords ++ batch)
-        stateRecords = outcomes.filter(_.kind == "state").map { o =>
-          CdcRecord(0L, CdcParser.OpLoad, o.schema, o.table, o.pk, o.values)
-        }
-        exceptionLog = exceptionLog ++ outcomes.filter(_.kind == "exception")
-    }
-  }
+  private def applyBatch(records: => Dataset[CdcRecord])(emit: => Unit): Unit =
+    synchronized(state.mergeBatch(records, emit))
 
   /** Process one micro-batch DataFrame of (file, value) text rows: sequence by
     * (file seq × row index), parse, emit one envelope per op
     * (include_transaction_details, stack.py:125) and apply — all computed
-    * distributed; nothing batch-sized crosses the driver on the durable path
-    * except the events of the batch's one file, which the sink receives.
+    * distributed; nothing batch-sized crosses the driver except the events
+    * of the batch's one file, which the sink receives.
     *
     * Sequencing: text-source partitions are byte-offset ordered and
     * `monotonically_increasing_id` is monotone within a partition with the
@@ -245,8 +229,8 @@ final class TaskRunner(
     * `orderBy("seq")` plans a local sort instead of a range-sort sample and
     * shuffle; its partition-at-a-time handoff then holds the whole batch.
     * That is one CDC file per trigger (maxFilesPerTrigger=1) — bounded by
-    * construction. A trigger is three Spark jobs on the durable path: the
-    * emission, and alongside it the apply shuffle and the one state write
+    * construction. A trigger is three Spark jobs: the emission, and
+    * alongside it the apply shuffle and the one state write
     * (`DurableCdcState.mergeBatch`). There is no emptiness probe: a batch of
     * blank lines emits nothing and rewrites an unchanged state.
     *
@@ -254,6 +238,11 @@ final class TaskRunner(
     * seqs would run into the next file's and become duplicate
     * transaction-ids (and exception keys), so the batch fails instead. The
     * stride itself is fixed: persisted `lastSeq`s must stay comparable.
+    *
+    * The file seq is the last digit run of the file name (`cdcNNNNNNNNNN.csv`,
+    * run.py:193-195), and it is the change order. A file whose name has no
+    * digit run, or one too long for a long, fails its batch, naming the file:
+    * any constant stand-in would alias another file's seqs.
     */
   private[etl] def processCdcBatch(batch: DataFrame): Unit = {
     val w = org.apache.spark.sql.expressions.Window
@@ -264,17 +253,15 @@ final class TaskRunner(
       .filter(col("value").rlike("[^\\x00-\\x20]"))
       .withColumn("__mono", monotonically_increasing_id())
       .withColumn("__fseq",
-        coalesce(
-          regexp_extract(element_at(split(col("__f"), "/"), -1), "(\\d+)[^0-9]*$", 1)
-            .cast("long"),
-          lit(0L)))
+        regexp_extract(element_at(split(col("__f"), "/"), -1), "(\\d+)[^0-9]*$", 1)
+          .try_cast("long"))
       .coalesce(1)
     val rowNo = row_number().over(w)
-    val tooLong = raise_error(concat(lit("CDC file "), col("__f"),
-      lit(s" has more than ${TaskRunner.SeqStride - 1} non-blank rows;" +
-        " its seqs would collide with the next file's")))
+    def fail(why: String) = raise_error(concat(lit("CDC file "), col("__f"), lit(why)))
     val sequenced = numbered.select(
-      when(rowNo >= TaskRunner.SeqStride, tooLong)
+      when(col("__fseq").isNull, fail(" has no sequence number in its name"))
+        .when(rowNo >= TaskRunner.SeqStride, fail(s" has more than ${TaskRunner.SeqStride - 1}" +
+          " non-blank rows; its seqs would collide with the next file's"))
         .otherwise(col("__fseq") * TaskRunner.SeqStride + rowNo).as("seq"),
       col("value"))
     processCdcRecords(CdcParser.parse(spark, sequenced))
@@ -288,12 +275,13 @@ final class TaskRunner(
     // seq order then needs no range shuffle
     processCdcRecords(spark.createDataset(records).coalesce(1))
 
-  /** Distributed envelope build + ordered emission + state merge. Envelope
-    * construction is a map-only pass over the records (the per-table column
-    * names travel to executors as a tiny captured Map); the emitted
-    * transaction-id is the record's global seq — unique and order-correlated,
-    * which is all include_transaction_details pins down. On the durable path
-    * the merge runs while the events stream out and commits after the
+  /** Distributed envelope build + ordered emission + state merge. Records
+    * of unselected tables are dropped first: they are neither emitted nor
+    * applied. Envelope construction is a map-only pass over the records (the
+    * per-table column names travel to executors as a tiny captured Map); the
+    * emitted transaction-id is the record's global seq — unique and
+    * order-correlated, which is all include_transaction_details pins down.
+    * The merge runs while the events stream out and commits after the
     * emission returns: a failed emission fails the batch with the state
     * unchanged, and the replayed batch redoes both.
     */
@@ -301,28 +289,21 @@ final class TaskRunner(
     val ts = nowIso()
     val colNames: Map[(String, String), Seq[String]] =
       selected.map(t => (t.owner, t.name) -> t.columns.map(_.name)).toMap
-    val events = records.map { r =>
+    val kept = records.filter(r => colNames.contains((r.schema, r.table)))
+    val events = kept.map { r =>
       val env =
         if (r.op == CdcParser.OpAlterTable)
           // schema-change marker → alter-table CONTROL event
           // (include_table_alter_operations, stack.py:124)
           Envelope.controlJson("alter-table", r.schema, r.table, ts)
-        else {
-          val fields = colNames.get((r.schema, r.table)) match {
-            case Some(ns) =>
-              ns.zip(r.values).map { case (n, v) => s""""$n":${TaskRunner.jsonValue(v)}""" }
-            case None =>
-              r.values.zipWithIndex.map { case (v, i) => s""""col${i + 1}":${TaskRunner.jsonValue(v)}""" }
-          }
-          val dataJson = fields.mkString("{", ",", "}")
-          s"""{"data":$dataJson,"metadata":{"timestamp":"$ts","record-type":"data","operation":"${r.op.toLowerCase}","partition-key-type":"schema-table","schema-name":"${r.schema}","table-name":"${r.table}","transaction-id":${r.seq}}}"""
-        }
+        else Envelope.cdcDataJson(colNames((r.schema, r.table)), r.values,
+          r.op.toLowerCase, r.schema, r.table, ts, r.seq)
       (r.seq, s"${r.schema}.${r.table}", env)
     }.toDF("seq", "partition_key", "envelope")
     // DDL markers never enter the row apply — they change no row state.
     // The merge re-reads the batch rather than caching it: recomputing one
     // file's narrow plan is cheaper than the job that materializes a cache.
-    applyBatch(records.filter(_.op != CdcParser.OpAlterTable))(sink.appendOrdered(events))
+    applyBatch(kept.filter(_.op != CdcParser.OpAlterTable))(sink.appendOrdered(events))
   }
 
   /** Start the CDC task: controls first (task starts before data exists,
@@ -393,26 +374,4 @@ final class TaskRunner(
 object TaskRunner {
   /** CDC seq = file seq × `SeqStride` + the row's 1-based number in its file. */
   val SeqStride = 1000000L
-
-  /** Extract the file sequence from `cdcNNNNNNNNNN.csv` (run.py:193-195).
-    * (The streaming path computes the same thing with `regexp_extract` in the
-    * plan; this is the scalar twin for tests and replays.)
-    */
-  def fileSeq(path: String): Long = {
-    val m = "(\\d+)".r.findAllIn(path.split("/").last).toSeq
-    if (m.nonEmpty) m.last.toLong else 0L
-  }
-
-  // compiled once: jsonValue runs for every field of every envelope
-  private val IntegerLiteral = java.util.regex.Pattern.compile("-?\\d+")
-
-  /** DMS-style scalar JSON encoding for envelope `data` fields: integers
-    * unquoted, everything else a JSON string. Static so the distributed
-    * envelope map doesn't capture the runner (which holds the SparkSession
-    * and sink).
-    */
-  def jsonValue(v: String): String =
-    if (v == null) "null"
-    else if (IntegerLiteral.matcher(v).matches()) v
-    else "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 }

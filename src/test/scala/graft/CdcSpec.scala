@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cdc._
-import graft.etl.{ReferenceFixtures, TaskRunner}
+import graft.etl.{Envelope, ReferenceFixtures}
 
 class CdcSpec extends AnyFunSuite {
 
@@ -18,16 +18,16 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("envelope field encoding: integers bare, everything else a JSON string") {
-    val j = TaskRunner.jsonValue _
+    val j = Envelope.jsonValue _
     assert(j("101") == "101")
     assert(j("-7") == "-7")
-    assert(j("007") == "007")
+    assert(j("007") == "\"007\"")
     assert(j("-") == "\"-\"")
     assert(j("") == "\"\"")
     assert(j("3.50") == "\"3.50\"")
     assert(j("1e3") == "\"1e3\"")
     assert(j(" 12") == "\" 12\"")
-    assert(j("12\n") == "\"12\n\"")
+    assert(j("12\n") == "\"12\\n\"")
     assert(j("say \"hi\"") == "\"say \\\"hi\\\"\"")
     assert(j("C:\\tmp") == "\"C:\\\\tmp\"")
     assert(j(null) == "null")

@@ -368,18 +368,28 @@ class DurableCdcSpec extends AnyFunSuite {
   }
 
   test("a CDC file past the seq stride fails its batch instead of reusing the next file's seqs") {
-    val cdcDir = Files.createTempDirectory("graft-cdc-stride")
+    def failsAlone(name: String, message: String)(write: java.io.Writer => Unit): Unit = {
+      val cdcDir = Files.createTempDirectory("graft-cdc-stride")
+      val w = Files.newBufferedWriter(cdcDir.resolve(name))
+      try write(w) finally w.close()
+      val sink = new MemoryEventSink
+      val r = runner(Files.createTempDirectory("graft-state-stride").toString, sink)
+      val q = r.startCdc(cdcDir.toString, Files.createTempDirectory("graft-ckpt-stride").toString)
+      val e = try intercept[StreamingQueryException](q.processAllAvailable()) finally q.stop()
+      def chain(t: Throwable): Seq[Throwable] =
+        if (t == null) Nil else t +: (chain(t.getCause) ++ t.getSuppressed.toSeq.flatMap(chain))
+      assert(chain(e).exists(t => String.valueOf(t.getMessage).contains(message)), e)
+      assert(sink.size == 4, "only the start controls may be out")
+      assert(keys(r).isEmpty && r.exceptions.isEmpty)
+    }
     // row 1,000,001 would get file 2's first seq (2 x 1,000,000 + 1)
-    val w = Files.newBufferedWriter(cdcDir.resolve("cdc0000000001.csv"))
-    try (0 until 1000001).foreach(_ => w.write("DELETE,t,s,1\n")) finally w.close()
-    val sink = new MemoryEventSink
-    val r = runner(Files.createTempDirectory("graft-state-stride").toString, sink)
-    val q = r.startCdc(cdcDir.toString, Files.createTempDirectory("graft-ckpt-stride").toString)
-    val e = try intercept[StreamingQueryException](q.processAllAvailable()) finally q.stop()
-    def chain(t: Throwable): Seq[Throwable] =
-      if (t == null) Nil else t +: (chain(t.getCause) ++ t.getSuppressed.toSeq.flatMap(chain))
-    assert(chain(e).exists(t => String.valueOf(t.getMessage).contains("has more than 999999 non-blank rows")), e)
-    assert(sink.size == 4, "only the start controls may be out")
-    assert(keys(r).isEmpty && r.exceptions.isEmpty)
+    failsAlone("cdc0000000001.csv", "has more than 999999 non-blank rows")(w =>
+      (0 until 1000001).foreach(_ => w.write("DELETE,t,s,1\n")))
+    // a file seq is the change order: a name without one (or past a long)
+    // has no place in it
+    failsAlone("changes.csv", "changes.csv has no sequence number in its name")(
+      _.write(ReferenceFixtures.cdcFile1))
+    failsAlone("cdc99999999999999999999.csv", "cdc99999999999999999999.csv has no sequence number")(
+      _.write(ReferenceFixtures.cdcFile1))
   }
 }
