@@ -120,10 +120,8 @@ object Bench {
   /** One draw of the host-speed calibration probe (~1.7–2 s of suite-shaped
     * mixed work: a parquet scan of the pinned sf0.001 corpus, codegen'd
     * md5+string CPU, an explode fan-out, a hash-agg shuffle, a final sort).
-    * Shared with the scale tools so their published figures carry the same
-    * calibration unit as the official bench JSONs.
     */
-  def calibrateOnce(spark: SparkSession, warmDir: String): Double = {
+  private def calibrateOnce(spark: SparkSession, warmDir: String): Double = {
     val t0 = System.nanoTime()
     val docs = spark.read.parquet(s"$warmDir/documents.parquet")
       .selectExpr("doc_id % 97 AS k", "md5(text) AS h")

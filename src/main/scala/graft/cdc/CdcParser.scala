@@ -8,7 +8,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * `OP,<table>,<schema>,v1,...,vn` — note the order is op, **table**, schema —
   * with variable arity per target table (full row image; v1 is the PK value
   * for every reference table). `seq` is the global apply order: file sequence
-  * number × row position (single-shard total order, stack.py:268).
+  * number × [[CdcParser.SeqStride]] + row number (single-shard total order,
+  * stack.py:268).
   */
 final case class CdcRecord(
     seq: Long,
@@ -49,11 +50,23 @@ object CdcParser {
     }
   }
 
-  /** Parse an ordered collection of raw lines (already in file × row order). */
-  def parseLines(lines: Seq[String]): Seq[CdcRecord] =
-    lines.zipWithIndex.collect {
-      case (l, i) if l.trim.nonEmpty => parseLine(i + 1L, l)
-    }
+  /** CDC seq = file seq × `SeqStride` + the row's 1-based number among its
+    * file's non-blank rows: one rule for the stream and for replays. The
+    * stride is fixed: persisted `lastSeq`s must stay comparable.
+    */
+  val SeqStride = 1000000L
+
+  /** Parse one CDC file's raw lines, in file order, under the stream's seq
+    * rule: blank lines (nothing above U+0020, the `String.trim` rule) are
+    * skipped and not counted, and a file with `SeqStride` or more non-blank
+    * rows fails, as its batch does in the stream.
+    */
+  def parseLines(lines: Seq[String], fileSeq: Long = 0L): Seq[CdcRecord] = {
+    val rows = lines.filter(_.trim.nonEmpty)
+    require(rows.size < SeqStride, s"CDC file $fileSeq has more than ${SeqStride - 1} " +
+      "non-blank rows; its seqs would collide with the next file's")
+    rows.zipWithIndex.map { case (l, i) => parseLine(fileSeq * SeqStride + i + 1, l) }
+  }
 
   /** Distributed parse of a DataFrame of (seq, line). Used by the streaming
     * task runner, where seq is derived from (file sequence, row index) so the

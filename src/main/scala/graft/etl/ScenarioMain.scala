@@ -93,8 +93,7 @@ object ScenarioMain {
       stateDirFor("full-load-and-cdc"))
     flc.runFullLoadAndSeedCdc(root.toString)
     flc.processCdcBatchRecords(
-      graft.cdc.CdcParser.parseLines(ReferenceFixtures.cdcFile1.linesIterator.toSeq)
-        .map(r => r.copy(seq = 1000000L + r.seq)))
+      graft.cdc.CdcParser.parseLines(ReferenceFixtures.cdcFile1.linesIterator.toSeq, fileSeq = 1))
     println(s"[full-load-and-cdc] state after seed+cdc1: ${flc.currentState.size} rows " +
       s"(expect 9: 10 loaded, 101 deleted), exceptions=${flc.exceptions.size} (expect 1 dup-insert)")
 
@@ -118,14 +117,12 @@ object ScenarioMain {
     val d1 = new TaskRunner(spark, SelectionRules.referenceTables,
       Seq(SelectionRule("%", "%", "include")), new MemoryEventSink, Some(stateDir))
     d1.processCdcBatchRecords(
-      graft.cdc.CdcParser.parseLines(ReferenceFixtures.cdcFile1.linesIterator.toSeq)
-        .map(r => r.copy(seq = 1000000L + r.seq)))
+      graft.cdc.CdcParser.parseLines(ReferenceFixtures.cdcFile1.linesIterator.toSeq, fileSeq = 1))
     // simulated crash: a brand-new runner resumes from the snapshot
     val d2 = new TaskRunner(spark, SelectionRules.referenceTables,
       Seq(SelectionRule("%", "%", "include")), new MemoryEventSink, Some(stateDir))
     d2.processCdcBatchRecords(
-      graft.cdc.CdcParser.parseLines(ReferenceFixtures.cdcFile2.linesIterator.toSeq)
-        .map(r => r.copy(seq = 2000000L + r.seq)))
+      graft.cdc.CdcParser.parseLines(ReferenceFixtures.cdcFile2.linesIterator.toSeq, fileSeq = 2))
     println(s"[durable-cdc] state after restart+batch2: " +
       d2.currentState.map(r => s"${r.schema}.${r.table}#${r.pk}").mkString(", ") +
       s" (expect hr.department#204); exceptions=${d2.exceptions.size} (expect 1)")

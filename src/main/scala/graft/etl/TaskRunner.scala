@@ -234,10 +234,11 @@ final class TaskRunner(
     * (`DurableCdcState.mergeBatch`). There is no emptiness probe: a batch of
     * blank lines emits nothing and rewrites an unchanged state.
     *
-    * A file may hold at most `SeqStride - 1` non-blank rows: past that its
-    * seqs would run into the next file's and become duplicate
-    * transaction-ids (and exception keys), so the batch fails instead. The
-    * stride itself is fixed: persisted `lastSeq`s must stay comparable.
+    * The seq rule is `CdcParser.SeqStride`'s, the same one replays get from
+    * `CdcParser.parseLines(lines, fileSeq)`. A file may hold at most
+    * `SeqStride - 1` non-blank rows: past that its seqs would run into the
+    * next file's and become duplicate transaction-ids (and exception keys),
+    * so the batch fails instead.
     *
     * The file seq is the last digit run of the file name (`cdcNNNNNNNNNN.csv`,
     * run.py:193-195), and it is the change order. A file whose name has no
@@ -260,15 +261,17 @@ final class TaskRunner(
     def fail(why: String) = raise_error(concat(lit("CDC file "), col("__f"), lit(why)))
     val sequenced = numbered.select(
       when(col("__fseq").isNull, fail(" has no sequence number in its name"))
-        .when(rowNo >= TaskRunner.SeqStride, fail(s" has more than ${TaskRunner.SeqStride - 1}" +
+        .when(rowNo >= CdcParser.SeqStride, fail(s" has more than ${CdcParser.SeqStride - 1}" +
           " non-blank rows; its seqs would collide with the next file's"))
-        .otherwise(col("__fseq") * TaskRunner.SeqStride + rowNo).as("seq"),
+        .otherwise(col("__fseq") * CdcParser.SeqStride + rowNo).as("seq"),
       col("value"))
     processCdcRecords(CdcParser.parse(spark, sequenced))
   }
 
   /** Apply an already-parsed, already-sequenced record batch — the direct API
-    * for replays; the streaming path funnels here via processCdcBatch.
+    * for replays; the streaming path funnels here via processCdcBatch. A
+    * replay of CDC file n parses it with `CdcParser.parseLines(lines, n)`, so
+    * its transaction-ids equal the streamed file's.
     */
   def processCdcBatchRecords(records: Seq[CdcRecord]): Unit =
     // one partition: the records are on the driver already, and the sink's
@@ -369,9 +372,4 @@ final class TaskRunner(
         count(when($"operation".isin("create-table", "drop-table", "alter-table"), 1)).as("ddls"))
       .orderBy($"schema_name", $"table_name")
   }
-}
-
-object TaskRunner {
-  /** CDC seq = file seq × `SeqStride` + the row's 1-based number in its file. */
-  val SeqStride = 1000000L
 }

@@ -28,7 +28,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Why fused: the HOF pair walks interpreted lambdas twice per gram and
   * builds each gram string through the generic concat_ws path; profiled at
   * sf0.1 the grams+hash stages cost 0.58 s of each ~2 s family query
-  * (tools/ShingleProfile). Here the gram is assembled once as a UTF8String
+  * (recorded in commit f32d8dd). Here the gram is assembled once as a UTF8String
   * and digested in compiled code — the [[SimHash16]] pattern.
   *
   * Edge semantics: size(tok) < 3 returns an EMPTY array (the HOF form's

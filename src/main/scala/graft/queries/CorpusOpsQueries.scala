@@ -51,8 +51,9 @@ object CorpusOpsQueries {
     *    no argmin aggregate, no re-attach join); bit-identical to the
     *    literal path BY CONSTRUCTION (`Round10OpsSpec` proves it
     *    end-to-end; q_semdedup_table shares q_semdedup's oracle).
-    *    `tools.SemDedupScaleProof` exercises this branch past the
-    *    262k-vector literal cap.
+    *    BENCH_SCALING ("Round-10 scale point: SemDeDup past the
+    *    plan-literal cap") records this branch past the 262k-vector
+    *    literal cap.
     *  - K > 2×10⁶ (or "hier"): the centroid matrix outgrows the executor
     *    ceiling (~0.5 GB/10⁶ centroids ⇒ ≈5×10⁸ vectors under n/256), so
     *    the quantizer goes hierarchical: ⌈√K⌉ coarse cells via the
@@ -536,9 +537,9 @@ object CorpusOpsQueries {
     bpeTrainLoop(s, bpeVocab(s, d), nMerges, batchM, poolK, minPairCount)
 
   /** The trainer loop of [[bpeTrainBatched]] starting from an
-    * already-materialized wrapped-symbol vocabulary — split out so
-    * tools/BpeTrainBench can time the iteration protocol in isolation
-    * from the shared corpus→vocabulary pass. `poolK = -1` resolves to
+    * already-materialized wrapped-symbol vocabulary (its timings, apart
+    * from the shared corpus→vocabulary pass, are recorded in BENCH_SCALING
+    * round 16, "The batched trainer loop, measured"). `poolK = -1` resolves to
     * [[adaptivePoolK]]. NATURAL STOP RULE (round 17): training ends at
     * `nMerges` OR when no remaining pair reaches `minPairCount` —
     * production BPE's termination (a merge seen once generalizes to

@@ -321,8 +321,8 @@ object PipelineQueries {
     * only the cross-engine parity contract (DuckDB must rebuild the
     * identical bitmap); a deployment that doesn't need DuckDB-reproducible
     * flags gets the same plan, the same false-negative-free guarantee, and
-    * the same sizing policy with a cheaper probe (measured via
-    * `graft.tools.BloomHashBench` at sf1: 8.0 s → 5.6 s, 1.42× — the hash
+    * the same sizing policy with a cheaper probe (measured at sf1:
+    * 8.0 s → 5.6 s, 1.42×, BENCH_SCALING round 7 — the hash
     * is real but NOT dominant; the gram explode and aggregates are the
     * floor, so the old "3-5× cheaper" folklore overstated it). Flagged docs
     * can differ ONLY in the false-positive minority (different hash,
@@ -436,30 +436,6 @@ object PipelineQueries {
     var m = 1L << 16
     while (m < 64L * nGrams && m < (1L << 32)) m <<= 1
     m
-  }
-
-  /** Collects the benchmark Bloom bitmap as a words array (md5 probe
-    * hashes, 63-bit words): the broadcast-sketch form the STREAMING
-    * decontamination filter bakes into its stateless plan. Unlike the
-    * batch probe there is no join fallback past [[LiteralProbeMaxWords]] —
-    * a stateless stream projection cannot probe via joins — so the literal
-    * grows with the policy (1 MB at sf1's 2^23 bits; past ~2^27 bits the
-    * production stream path is a broadcast-variable filter UDF, not a plan
-    * literal). Returns (mBits, words).
-    */
-  private[graft] def benchBloomWords(s: SparkSession, d: String): (Long, Array[Long]) = {
-    import s.implicits._
-    val benchGrams = grams5(documents(s, d).filter(pmod($"doc_id", lit(31)) === 0))
-      .select($"g").distinct()
-    val mBits = bloomPolicyBits(benchGrams.count())
-    // Literal contract: this accessor's result is DESTINED for a plan
-    // literal, so it keeps the 2^27 fail-fast. The production path beyond
-    // (broadcast-variable probe) is streamBloomGate, which auto-selects.
-    require(mBits <= (1L << 27),
-      s"benchBloomWords: policy sized the bitmap at $mBits bits (> 2^27); " +
-        "a plan-literal bitmap this large is not viable — use " +
-        "streamBloomGate, whose broadcast-variable branch covers this scale")
-    (mBits, collectBloomWords(benchGrams, mBits))
   }
 
   /** Bitmap build shared by every probe mechanism: md5-word bits OR'd into
@@ -624,10 +600,10 @@ object PipelineQueries {
     * without a measured recall).
     */
   /** @param nprobe how many nearest cells each corpus vector probes. The
-    *   shipped tier (and its oracle) pin nprobe=2; `tools/IvfRecallCurve`
-    *   sweeps 1/2/4 to publish the recall-vs-cost curve at the scales where
-    *   the tier is forced (the round-12 verdict's measurement-completion
-    *   item).
+    *   shipped tier (and its oracle) pin nprobe=2; the recall-vs-cost
+    *   curve over 1/2/4 at the scales where the tier is forced is recorded
+    *   in BENCH_SCALING ("Round-13: the IVF decontamination tier's
+    *   recall-vs-cost curve").
     */
   private[graft] def semanticDecontamIvf(
       s: SparkSession, d: String, nprobe: Int = 2): DataFrame =
@@ -1741,8 +1717,8 @@ object PipelineQueries {
     * cacheable the same way — deletes arrive between triggers and a
     * stale mask would serve taken-down vectors — so it is re-read per
     * call (one tiny parquet read, vs the meta's read+collect).
-    * `StreamLatencyBench`'s serve arm measures both shapes to price the
-    * per-trigger fixed cost. */
+    * The per-trigger fixed cost of both shapes is recorded in
+    * BENCH_SCALING round 18 ("Streaming vector-serve latency"). */
   private[graft] def ivfIndexServeQueriesWith(
       s: SparkSession, store: String,
       meta: (Seq[(Long, Seq[Double])], Double), queries: DataFrame,
@@ -1805,8 +1781,8 @@ object PipelineQueries {
     * ephemeral store (the DuckDB hash certifies that persistence + append
     * added and lost nothing). Production runs the three entry points
     * separately against a named shared-storage store — serve-only
-    * wall-clock and pruned-bytes fraction are measured by
-    * `graft.tools.IndexServeBench` and recorded in BENCH_SCALING.
+    * wall-clock and pruned-bytes fraction are recorded in BENCH_SCALING
+    * round 17 ("Second wave: the persisted index actually persists").
     */
   private[graft] def ivfIndexServe(
       s: SparkSession, d: String,
@@ -2987,8 +2963,8 @@ object PipelineQueries {
       // global-scale codes and norm-corrected shortlist
       // (quantizedShortlistFrom — the query side here carries one row per
       // PROBED CELL), the family's round-4 rescore. nprobe=8 is a
-      // MEASURED knee, not a guess (tools/IvfQuantizedCurve, BENCH_SCALING
-      // round 16): this corpus's near-uniform synthetic vectors spread
+      // MEASURED knee, not a guess (BENCH_SCALING round 16, "Fourth wave:
+      // the composed IVF × int8 index"): this corpus's near-uniform synthetic vectors spread
       // true neighbors across the K≤16 coarse cells, so nprobe=2 recalls
       // only 0.47–0.53@3 while 8 reaches 0.87–0.97 at flat wall-clock (a
       // real embedding corpus is clustered and sits left of this knee).
@@ -5189,8 +5165,8 @@ object PipelineQueries {
       // The DuckDB oracle derives the SAME width from the SAME trained
       // centroid table (npol CTE: GREATEST(2, CEIL(COUNT(*)/8)) over c2),
       // so any drift between engine policy and published policy breaks
-      // the hash. Recall delivered by the policy is measured at the
-      // forced scales by tools/IvfRecallCurve (BENCH_SCALING round 14).
+      // the hash. Recall delivered by the policy at the forced scales is
+      // recorded in BENCH_SCALING round 14.
       (s, d) => semanticDecontamIvf(
         s, d, graft.operators.IvfKMeans.adaptiveNprobe, 3L, Long.MaxValue),
       Some(s"""WITH ${semanticIvfCtes(3,
@@ -5311,8 +5287,8 @@ object PipelineQueries {
       // md5-derived hashes over 63-bit words — DuckDB overflow-checks
       // 1 << 63, and the oracle must rebuild the identical bitmap; md5 is
       // likewise the parity contract, not the fast choice: the
-      // `fastHash = true` xxhash64 path measures 1.42× end-to-end at sf1
-      // via graft.tools.BloomHashBench). The bitmap is sized by
+      // `fastHash = true` xxhash64 path measures 1.42× end-to-end at sf1,
+      // BENCH_SCALING round 7). The bitmap is sized by
       // the occupancy-adaptive policy and probed map-side via plan
       // literals (or broadcast word joins past the literal cap) — see
       // [[bloomDecontaminate]] for the policy, the saturation measurement

@@ -205,7 +205,7 @@ object RelationalQueries {
       // plain join; (3) hot keys scatter across 8 salts. All rungs are
       // row-identical (spec + ScalaCheck-proven, including degraded paths).
       // The insurance's PAYOFF is measured against a planted 20%-hot key
-      // (round 19, tools/SkewArmBench; BENCH_SCALING "Planted-skew arm"):
+      // (round 19, BENCH_SCALING "Planted-skew arm"):
       // at sf4 with broadcast off, salting beats the naked-skew join on
       // both wall (-14%) and max-task (-36%), and beats AQE's skew-join;
       // at sf1 the straggler is too small to repay the pre-pass — exactly
@@ -570,8 +570,8 @@ object RelationalQueries {
       // approx_count_distinct with countDistinct in ONE agg makes Spark's
       // distinct-rewrite evaluate the HLL partial per (group, user) pair —
       // thousands of dense rsd=0.01 sketch buffers (16 KB each) through the
-      // shuffle (profiled 1.8 s vs 0.23+0.76 s separate at sf0.1,
-      // tools/AggProfile). HLL registers are max-based, so sketching the
+      // shuffle (profiled 1.8 s vs 0.23+0.76 s separate at sf0.1, recorded
+      // in commit 2546fe3). HLL registers are max-based, so sketching the
       // DISTINCT pairs yields the bit-identical estimate; the pair pre-agg
       // is one row-shuffle and the sketch runs once per surviving pair.
       (s, d) => {
@@ -604,7 +604,7 @@ object RelationalQueries {
       // pattern for when a single key's partials still overwhelm one
       // reducer — high-cardinality agg states, collect_list, etc.)
       // Measured against a planted 20%-hot event_type (round 19,
-      // tools/SkewArmBench; BENCH_SCALING "Planted-skew arm"): the direct
+      // BENCH_SCALING "Planted-skew arm"): the direct
       // groupBy wins at every tested sf for BOTH sum and collect_list
       // states — map-side combine absorbs the hot key and the salted form
       // pays an extra shuffle. The two-phase shape stays as insurance for
@@ -2032,8 +2032,7 @@ object RelationalQueries {
   private[graft] def pageRank(
       s: org.apache.spark.sql.SparkSession,
       d: String,
-      materialize: Boolean = true,
-      checkpointRounds: Boolean = true): org.apache.spark.sql.DataFrame = {
+      materialize: Boolean = true): org.apache.spark.sql.DataFrame = {
     import s.implicits._
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // one trade year scopes the graph (filter lands in the parquet
@@ -2089,8 +2088,9 @@ object RelationalQueries {
       // nest into ONE plan whose single final action runs 3 chained
       // shuffles + 3 broadcast builds in one window — the suite's
       // noisiest query (r12 verdict: 3.30–12.05 s across same-session
-      // sf0.1 trials). Diagnosis (tools/PageRankProfile, 8 trials/form at
-      // sf0.1, per-trial GC telemetry): GC is NOT the isolated-trial
+      // sf0.1 trials). Diagnosis (8 trials/form at sf0.1, per-trial GC
+      // telemetry; BENCH_SCALING "Round-13: q_graph_pagerank variance
+      // diagnosis + fix"): GC is NOT the isolated-trial
       // cause (young-gen only, ≤ 0.4 s in every trial, old-gen zero);
       // isolated spread is ~1.32× under either form, so the r12 in-suite
       // 3.7× tail is the known MIGRATING measurement tax (r4/r7/r8
@@ -2102,7 +2102,7 @@ object RelationalQueries {
       // 3-deep DAG re-planned as a whole. Intermediate checkpoints are
       // unreferenced once the next round materializes; ContextCleaner
       // reclaims them on GC.
-      if (checkpointRounds && it < 2) ranks = ranks.localCheckpoint()
+      if (it < 2) ranks = ranks.localCheckpoint()
     }
     // Top-20 via orderBy().limit() → TakeOrderedAndProject: each
     // partition keeps a 20-row heap and the driver merges heaps — no

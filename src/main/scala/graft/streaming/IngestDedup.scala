@@ -224,10 +224,7 @@ object IngestDedup {
       newDocs: DataFrame,
       corpusFps: DataFrame,
       nShards: Int,
-      prep: DataFrame => DataFrame = identity,
-      // per-micro-batch progress hook (latency evidence — StreamLatencyBench);
-      // called once with the completed replay's full progress history
-      onProgress: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] => Unit = _ => ()
+      prep: DataFrame => DataFrame = identity
   ): IngestRun = {
     val runId = java.util.UUID.randomUUID().toString.replace("-", "")
     val base = java.nio.file.Paths.get(
@@ -312,7 +309,6 @@ object IngestDedup {
           s"${StreamOps.fastCheckpointRoot}/ingest_$runId")
         .start()
       q.awaitTermination()
-      onProgress(q.recentProgress.toSeq)
       // empty shards replay as real (0-row) micro-batches, so the
       // collapsed-replay guard counts only the shards that carried rows
       val dataBatches = q.recentProgress.count(_.numInputRows > 0)

@@ -35,8 +35,14 @@ class CdcSpec extends AnyFunSuite {
 
   test("parseLines keeps file × row order and skips blanks") {
     val recs = CdcParser.parseLines(Seq("INSERT,a,s,1", "", "DELETE,a,s,1"))
-    assert(recs.map(_.seq) == Seq(1L, 3L))
+    assert(recs.map(_.seq) == Seq(1L, 2L))
     assert(recs.map(_.op) == Seq("INSERT", "DELETE"))
+    // the stream's rule: file seq × stride + the number among non-blank rows
+    val filed = CdcParser.parseLines(Seq(" ", "INSERT,a,s,1", "\t", "DELETE,a,s,1"), fileSeq = 7)
+    assert(filed.map(_.seq) == Seq(7000001L, 7000002L))
+    val full = Seq.fill(CdcParser.SeqStride.toInt)("INSERT,a,s,1")
+    assert(CdcParser.parseLines(full.tail, fileSeq = 1).last.seq == 2 * CdcParser.SeqStride - 1)
+    intercept[IllegalArgumentException](CdcParser.parseLines(full, fileSeq = 1))
   }
 
   test("golden: cdc file 1 nets to an empty employee table") {

@@ -5,12 +5,14 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.functions.{col, from_json}
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
+import graft.cdc.CdcParser
 import graft.etl._
 import graft.schema.{SelectionRule, SelectionRules}
 
 /** Streamed CDC input that the reference fixtures never carry: field values
-  * that need JSON escaping or quoting, and a task whose selection rules
-  * exclude a table that the change files touch.
+  * that need JSON escaping or quoting, a task whose selection rules exclude a
+  * table that the change files touch, and a file with blank lines replayed
+  * beside its stream.
   */
 class CdcStreamSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
@@ -75,5 +77,26 @@ class CdcStreamSpec extends AnyFunSuite {
     assert(sink.size == 12)
     assert(r.currentState.map(s => (s.schema, s.table, s.pk)) == Seq(("hr", "department", "204")))
     assert(r.exceptions.map(e => (e.table, e.pk)) == Seq(("department", "301")))
+  }
+
+  test("a replayed CDC file carries the same transaction-ids as the same file streamed") {
+    val body = Seq(
+      "INSERT,employee,hr,101,Smith,Bob,2014-06-04,New York",
+      "",
+      "UPDATE,employee,hr,101,Smith,Bob,2015-10-08,Los Angeles",
+      " \t",
+      "DELETE,employee,hr,101,Smith,Bob,2015-10-08,Los Angeles").mkString("\n")
+    val rules = Seq(SelectionRule("%", "%", "include"))
+    def transactionIds(sink: EventSink) =
+      sink.all.flatMap(e => "\"transaction-id\":(\\d+)".r.findFirstMatchIn(e.envelope).map(_.group(1).toLong))
+
+    val streamed = new MemoryEventSink
+    stream(rules, streamed, "cdc0000000003.csv" -> body)
+    val replayed = new MemoryEventSink
+    new TaskRunner(spark, SelectionRules.referenceTables, rules, replayed)
+      .processCdcBatchRecords(CdcParser.parseLines(body.linesIterator.toSeq, fileSeq = 3))
+
+    assert(transactionIds(streamed) == Seq(3000001L, 3000002L, 3000003L))
+    assert(transactionIds(replayed) == transactionIds(streamed))
   }
 }

@@ -25,8 +25,7 @@ class DurableCdcSpec extends AnyFunSuite {
       Seq(SelectionRule("%", "%", "include")), sink, Some(stateDir))
 
   private def batchOf(body: String, fileSeq: Long) =
-    CdcParser.parseLines(body.linesIterator.toSeq)
-      .map(r => r.copy(seq = fileSeq * 1000000L + r.seq))
+    CdcParser.parseLines(body.linesIterator.toSeq, fileSeq)
 
   private def keys(r: TaskRunner) = r.currentState.map(s => (s.schema, s.table, s.pk))
   private def exceptionKeys(r: TaskRunner) = r.exceptions.map(e => (e.table, e.pk))

@@ -108,8 +108,7 @@ class GoldenScenarioSpec extends AnyFunSuite {
     // CDC file 1 applies ON TOP of the load: INSERT of existing 101 excepts
     // (it was loaded), then update/update/delete → 101 gone, 102-104 remain
     runner.processCdcBatchRecords(
-      graft.cdc.CdcParser.parseLines(ReferenceFixtures.cdcFile1.linesIterator.toSeq)
-        .map(r => r.copy(seq = 1000000L + r.seq)))
+      graft.cdc.CdcParser.parseLines(ReferenceFixtures.cdcFile1.linesIterator.toSeq, fileSeq = 1))
     val employees = runner.currentState.filter(_.table == "employee").map(_.pk).sorted
     assert(employees == Seq("102", "103", "104"))
     assert(runner.exceptions.map(e => (e.table, e.pk)) == Seq(("employee", "101")))
