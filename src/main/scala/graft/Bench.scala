@@ -204,6 +204,9 @@ object Bench {
     // CodeHeap fills, the sweeper flushes hot nmethods and compute-heavy
     // queries quietly run 5× slower (the BENCH_r04/r07 in-suite-vs-isolated
     // pathology). These lines are the evidence trail for that failure mode.
+    // whole-stage and expression classes compiled so far in this JVM
+    def codegenCompiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     def poolStats(): String = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
@@ -302,10 +305,14 @@ object Bench {
     // Median of `trials` runs per query: single-run times swing ±30% from GC /
     // scheduler noise in local mode; the median is stable run-to-run, so the
     // reported total tracks the engine, not the JVM's mood.
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+      val c0 = codegenCompiles()
       val t0 = System.nanoTime()
       try { force(fn(spark, sfDir)) } catch { case _: Throwable => () }
       val t = (System.nanoTime() - t0) / 1e9
+      // per execution: a key that recompiles every time (a codegen cache
+      // thrashed by the interleaved suite) shows it here, not in isolation
+      System.err.println(f"[bench] $name $t%.3fs codegen_compiles=${codegenCompiles() - c0} ${poolStats()}")
       // Queries persist intermediates they legitimately reuse WITHIN a run;
       // dropping leftovers between runs keeps trials independent — without
       // this, dozens of stale cached plans accumulate over 80+ queries × 4
@@ -325,7 +332,7 @@ object Bench {
     def runSuite(label: String): Seq[(String, Seq[Double])] = {
       var done = 0
       queries.toSeq.map { case (name, fn) =>
-        val ts = Seq.fill(trials)(timeOnce(fn)).sorted
+        val ts = Seq.fill(trials)(timeOnce(name, fn)).sorted
         done += 1
         if (done % 15 == 0) System.err.println(s"[bench] $label after $done queries: ${poolStats()}")
         name -> ts

@@ -8,7 +8,8 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 /** Durable event sink: JSON-lines per shard on a filesystem — the local
   * stand-in for a Kinesis→S3 delivery stream. Each line is
   * `{"seq":n,"partitionKey":pk,"arrivalTs":ms,"envelope":...}`; per-shard
-  * append order IS the shard order (same contract as ShardedEventSink).
+  * append order IS the shard order (same contract as ShardedEventSink), and
+  * seqs number the appends in order across all shards.
   *
   * Restart: a new instance over the same directory resumes seq numbering
   * from the last complete line of each shard (the maximum over shards, plus
@@ -83,14 +84,16 @@ final class FileEventSink(dir: String, val shards: Int = 1) extends EventSink {
       tailsCut = true
     }
     val now = System.currentTimeMillis()
-    events.groupBy { case (pk, _) => shardOf(pk) }.foreach { case (s, evs) =>
-      val lines = evs.map { case (pk, env) =>
-        val line =
-          s"""{"seq":$seq,"partitionKey":"${Envelope.escape(pk)}","arrivalTs":$now,"envelope":"${Envelope.escape(env)}"}"""
-        seq += 1
-        line
-      }
-      Files.write(shardFile(s), (lines.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8),
+    // number in append order, then route each line to its key's shard
+    val byShard = Array.fill(shards)(new StringBuilder)
+    events.foreach { case (pk, env) =>
+      byShard(shardOf(pk))
+        .append(s"""{"seq":$seq,"partitionKey":"${Envelope.escape(pk)}","arrivalTs":$now,"envelope":"${Envelope.escape(env)}"}""")
+        .append('\n')
+      seq += 1
+    }
+    byShard.indices.filter(byShard(_).nonEmpty).foreach { s =>
+      Files.write(shardFile(s), byShard(s).toString.getBytes(StandardCharsets.UTF_8),
         StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     }
   }

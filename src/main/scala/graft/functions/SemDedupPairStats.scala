@@ -108,58 +108,9 @@ case class SemDedupPairStats(
   }
 
   override def eval(buf: SemDedupCellBuffer): Any = {
-    val n = buf.n
-    // sort by vec_id ascending so (i < j) ⇔ (id_a < id_b); buffer arrival
-    // order is shuffle-nondeterministic and must not matter
-    val order = (0 until n).sortBy(buf.ids(_)).toArray
-    // the fast band: outside ±6e-4 of the threshold the 4-dp HALF_UP
-    // rounding cannot change which side of `>= threshold` a cosine is on
-    val lo = threshold - 6e-4
-    val hi = threshold + 6e-4
-    var pairs = 0L
-    var dropped = 0L
-    var j = 1
-    while (j < n) {
-      val oj = order(j)
-      val vj = buf.vecs(oj)
-      var cnt = 0L
-      var i = 0
-      while (i < j) {
-        val oi = order(i)
-        if (buf.ids(oi) != buf.ids(oj)) { // strict <: equal ids never pair
-          if (qualifies(buf.vecs(oi), vj, lo, hi)) cnt += 1L
-        }
-        i += 1
-      }
-      pairs += cnt
-      if (cnt > 0L) dropped += 1L
-      j += 1
-    }
+    val (pairs, dropped) = SemDedupPairStats.cellStats(
+      java.util.Arrays.copyOf(buf.ids, buf.n), java.util.Arrays.copyOf(buf.vecs, buf.n), threshold)
     InternalRow(pairs, dropped)
-  }
-
-  /** round(cosine_sim(a, b), 4) >= threshold, bit-identical to the Spark
-    * expression chain (see class doc). */
-  private def qualifies(a: Array[Double], b: Array[Double], lo: Double, hi: Double): Boolean = {
-    if (a == null || b == null) return false
-    val n = math.min(a.length, b.length)
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = a(i); val y = b(i)
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    val c = dot / (math.sqrt(na) * math.sqrt(nb))
-    // Spark's (and DuckDB's) double comparison ordering places NaN ABOVE
-    // every value, so a NaN cosine (zero-norm vector) QUALIFIES under
-    // `>= threshold` — java primitive NaN comparison would silently drop
-    // those pairs (caught by the Round21OpsSpec zero-vector fixture)
-    if (java.lang.Double.isNaN(c)) true
-    else if (c < lo) false
-    else if (c >= hi) true // +Infinity lands here; -Infinity under lo
-    else java.math.BigDecimal.valueOf(c)
-      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue() >= threshold
   }
 
   override def serialize(buf: SemDedupCellBuffer): Array[Byte] = {
@@ -217,6 +168,65 @@ case class SemDedupPairStats(
 }
 
 object SemDedupPairStats {
+
+  /** `(n_dup_pairs, n_dropped)` of one cell's vectors (`ids` aligned with
+    * `vecs`, any order; a null vector never pairs) — the aggregate's eval,
+    * shared with the hierarchical quantizer's per-cell kernel. */
+  def cellStats(ids: Array[Long], vecs: Array[Array[Double]], threshold: Double): (Long, Long) = {
+    val n = ids.length
+    // sort by vec_id ascending so (i < j) ⇔ (id_a < id_b); buffer arrival
+    // order is shuffle-nondeterministic and must not matter
+    val order = (0 until n).sortBy(ids(_)).toArray
+    // the fast band: outside ±6e-4 of the threshold the 4-dp HALF_UP
+    // rounding cannot change which side of `>= threshold` a cosine is on
+    val lo = threshold - 6e-4
+    val hi = threshold + 6e-4
+    var pairs = 0L
+    var dropped = 0L
+    var j = 1
+    while (j < n) {
+      val oj = order(j)
+      val vj = vecs(oj)
+      var cnt = 0L
+      var i = 0
+      while (i < j) {
+        val oi = order(i)
+        if (ids(oi) != ids(oj)) { // strict <: equal ids never pair
+          if (qualifies(vecs(oi), vj, threshold, lo, hi)) cnt += 1L
+        }
+        i += 1
+      }
+      pairs += cnt
+      if (cnt > 0L) dropped += 1L
+      j += 1
+    }
+    (pairs, dropped)
+  }
+
+  /** round(cosine_sim(a, b), 4) >= threshold, bit-identical to the Spark
+    * expression chain (see the class doc). */
+  private def qualifies(
+      a: Array[Double], b: Array[Double], threshold: Double, lo: Double, hi: Double): Boolean = {
+    if (a == null || b == null) return false
+    val n = math.min(a.length, b.length)
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val x = a(i); val y = b(i)
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    val c = dot / (math.sqrt(na) * math.sqrt(nb))
+    // Spark's (and DuckDB's) double comparison ordering places NaN ABOVE
+    // every value, so a NaN cosine (zero-norm vector) QUALIFIES under
+    // `>= threshold` — java primitive NaN comparison would silently drop
+    // those pairs (caught by the Round21OpsSpec zero-vector fixture)
+    if (java.lang.Double.isNaN(c)) true
+    else if (c < lo) false
+    else if (c >= hi) true // +Infinity lands here; -Infinity under lo
+    else java.math.BigDecimal.valueOf(c)
+      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue() >= threshold
+  }
   /** Delegates to the shared `GraftExtensions` builder (same arity guard
     * and coercion as extension injection). */
   def register(spark: SparkSession): Unit =

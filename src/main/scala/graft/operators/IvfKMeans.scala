@@ -216,10 +216,8 @@ object IvfKMeans {
     * plan, so every assignment is pure map-side codegen with ONE small
     * expression node regardless of K. This replaces the former broadcast-
     * JOIN mechanism (crossJoin + packed-long argmin HashAggregate + vector
-    * re-attach join — three exchanges per assignment; the packed-argmin
-    * HashAggregate story lives on in [[assignSubCells]], where a keyed join
-    * IS still the right shape). Scale ceiling: K × dim doubles must fit
-    * executor memory — ~0.5 GB at K = 10⁶, dim 64 — the same bound the
+    * re-attach join — three exchanges per assignment). Scale ceiling:
+    * K × dim doubles must fit executor memory — ~0.5 GB at K = 10⁶, dim 64 — the same bound the
     * join's broadcast build side had; the SemDeDup n/256 policy crosses it
     * near 5×10⁸ vectors, where [[trainAssignHierarchical]] takes over.
     */
@@ -274,63 +272,6 @@ object IvfKMeans {
     cents
   }
 
-  /** Largest cid in a centroid table — one tiny aggregate job. The
-    * hierarchical sub-cell loop hoists this: cell ids are the seed ids and
-    * never change across iterations, so the bound is computed ONCE per
-    * train/assign sequence instead of once per call.
-    */
-  private def maxCidOf(cents: DataFrame): Long = {
-    import cents.sparkSession.implicits._
-    cents.agg(max($"cid")).head.getLong(0)
-  }
-
-  /** Within-coarse-cell assignment for the hierarchical quantizer: `ev`
-    * carries `(vec_id, v, ccell)`, `subCents` carries `(ccell, cid, cv)` —
-    * the join is an EQUI join on the coarse cell, so each vector meets only
-    * its own cell's sub-centroids (per-vector comparisons = the cell's
-    * sub-centroid count, ~√K under the n/256 policy, never K). Neither side
-    * needs to broadcast: both partition by `ccell`, which is what makes this
-    * the path PAST [[assignCellBc]]'s executor-memory ceiling.
-    *
-    * The argmin packs its ordering into ONE long: the natural
-    * `min(struct(-cos6, cid))` has a struct agg buffer, which HashAggregate
-    * cannot hold — the planner falls back to SortAggregate and SORTS the
-    * pair stream (measured: 76 GB of spill at n=312k, K=1219). cos6 is
-    * exactly a 6-dp decimal, so `round(-cos6·10⁶)` quantizes it EXACTLY
-    * (distinct cos6 ⇒ distinct longs, equal ⇒ equal), and
-    * `key = negs·2⁴¹ + cid` is lexicographic (negs, cid) for
-    * 0 ≤ cid < 2⁴¹ — `min(long)` partial-aggregates map-side and the pair
-    * stream is consumed in-stage. NaN cosines (zero-norm vectors) map to
-    * negs = 2·10⁶, strictly worse than any real cosine, so an all-NaN row
-    * degenerates to the lowest cid, exactly like the kernel. (Sole
-    * theoretical gap vs the kernel: the packing quantizes ±0.0 cosines to
-    * the same key where `Double.compare` orders -0.0 < 0.0 — reachable
-    * only when a best cosine rounds to exactly ±0.0 AND ties another
-    * centroid across the zero sign, which float data never exercises; the
-    * q_semdedup_hier oracle replay would catch it.)
-    * `cid`s are globally unique (seed vec_ids), so the per-vec_id min key
-    * alone identifies the sub-cell.
-    */
-  def assignSubCells(spark: SparkSession, ev: DataFrame, subCents: DataFrame): DataFrame =
-    assignSubCells(spark, ev, subCents, maxCidOf(subCents))
-
-  private def assignSubCells(
-      spark: SparkSession, ev: DataFrame, subCents: DataFrame, maxCid: Long): DataFrame = {
-    import spark.implicits._
-    require(maxCid >= 0 && maxCid < (1L << 41),
-      s"assignSubCells packs cid into 41 bits (max cid $maxCid out of range)")
-    val cos6 = round(graft.functions.CosineSimilarity.cosineSim(spark, $"v", $"cv"), 6)
-    val negs = when(isnan(cos6), lit(2000000L))
-      .otherwise(round(-cos6 * 1e6).cast("long"))
-    val cells = ev.select($"vec_id", $"v", $"ccell")
-      .join(subCents, Seq("ccell"))
-      .groupBy($"vec_id")
-      .agg(min(negs * (1L << 41) + $"cid").as("k"))
-      .select($"vec_id", pmod($"k", lit(1L << 41)).as("cid"))
-    ev.join(cells, Seq("vec_id"))
-      .select($"vec_id", $"v", $"ccell", $"cid")
-  }
-
   /** Hierarchical coarse quantizer for K past [[assignCellBc]]'s
     * executor-memory ceiling: stage 1 trains `coarseK` cells through the
     * broadcast-variable kernel path and assigns every vector once (pure
@@ -338,22 +279,41 @@ object IvfKMeans {
     * (count-adaptive: ⌈n_c/256⌉ per cell, seeds = the cell's lowest-vec_id
     * vectors) with the SAME pinned Lloyd discipline (fixed iterations,
     * cos6 + lowest-cid assignment, exact decimal(38,12) means rounded to
-    * 6 dp), assignment via [[assignSubCells]]'s ccell equi-join.
+    * 6 dp) and assigns within the cell.
     * Returns `(vec_id, v, ccell, cid)`; `cid` (a globally-unique seed
     * vec_id) IS the final cell id.
     *
+    * Stage 2 is ONE shuffle of the coarse-assigned vectors by `ccell`,
+    * sorted by `vec_id` within each partition, and [[SubCellKernel]] runs
+    * the seeds, the sub-Lloyd iterations and the final assignment on
+    * primitive arrays one coarse cell at a time, bit-identical to the
+    * former join formulation (a ccell equi-join, a packed-long argmin
+    * aggregate, a re-attach join and a posexplode mean aggregate per
+    * iteration, each vector moving about three times per iteration).
+    *
     * Scale shape: stage 1's broadcast is coarseK ≈ √K vectors (fits the
-    * executor ceiling up to K ≈ 4×10¹²); stage 2 shuffles vectors by
-    * `ccell` once per iteration and the sub-centroid table is an ordinary
-    * shuffled join side — nothing is ever broadcast-bounded by total K. The
-    * sub-seed selection pays one window over the ccell partitioning it
-    * already has. Empty sub-cells cannot occur: every seed is a cell member
-    * and cos(seed, seed) = 1 is the strict per-vector max.
+    * executor ceiling up to K ≈ 4×10¹²); stage 2 moves each vector once,
+    * and nothing is broadcast-bounded by total K. A task holds one coarse
+    * cell: ≈ 16√n vectors under the n/256 policy. Empty sub-cells cannot
+    * occur: every seed is a cell member and cos(seed, seed) = 1 is the
+    * strict per-vector max.
     */
   def trainAssignHierarchical(
-      spark: SparkSession, e: DataFrame, coarseK: Int, iters: Int): DataFrame = {
+      spark: SparkSession, e: DataFrame, coarseK: Int, iters: Int): DataFrame =
+    subCellPass(spark, e, coarseK, iters, SubCellKernel.Assign)
+
+  /** The hierarchical quantizer's SemDeDup stats in the same pass:
+    * `(cell, n_vecs, n_dup_pairs, n_dropped)` per sub-cell, the pairs by
+    * the `SemDedupPairStats` kernel, with no second shuffle. */
+  private[graft] def hierarchicalDedupStats(
+      spark: SparkSession, e: DataFrame, coarseK: Int, iters: Int, threshold: Double): DataFrame =
+    subCellPass(spark, e, coarseK, iters, SubCellKernel.DedupStats(threshold))
+
+  /** Stage 1, then the one `ccell` shuffle feeding [[SubCellKernel]]. */
+  private[graft] def subCellPass(
+      spark: SparkSession, e: DataFrame, coarseK: Int, iters: Int,
+      out: SubCellKernel.Output): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     val cSeeds: Seq[(Long, Seq[Double])] =
       e.filter($"vec_id" % 97 === 0).orderBy($"vec_id").limit(coarseK)
         .select($"vec_id", $"v")
@@ -361,29 +321,15 @@ object IvfKMeans {
         // any broadcast build would ship through it
         .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1)))
     val cCents = trainBc(spark, e, cSeeds, iters)
-    val ev = e
+    val ansi = spark.conf.get("spark.sql.ansi.enabled").toBoolean
+    e.select($"vec_id", $"v")
+      // a null vector has a null coarse cell and never met a sub-centroid
+      // in the equi-join formulation
+      .filter($"v".isNotNull)
       .withColumn("ccell", assignCellBc(spark, cCents, $"v"))
-      // one materialization: coarse assignment feeds every sub-iteration
-      .localCheckpoint()
-    val byCell = Window.partitionBy($"ccell")
-    var sc = ev
-      .withColumn("rn", row_number().over(byCell.orderBy($"vec_id")))
-      .withColumn("n_c", count(lit(1)).over(byCell))
-      .filter($"rn" <= ceil($"n_c" / lit(256.0)))
-      .select($"ccell", $"vec_id".as("cid"), $"v".as("cv"))
-      .localCheckpoint()
-    // sub-cell ids are the sub-SEED vec_ids and every seed keeps its cell
-    // non-empty, so this bound too is iteration-invariant
-    val scMax = maxCidOf(sc)
-    for (_ <- 0 until iters) {
-      sc = assignSubCells(spark, ev, sc, scMax)
-        .select($"ccell", $"cid", posexplode($"v").as(Seq("i", "x")))
-        .groupBy($"ccell", $"cid", $"i")
-        .agg(round(sum($"x".cast("decimal(38,12)")).cast("double") / count(lit(1)), 6).as("mx"))
-        .groupBy($"ccell", $"cid")
-        .agg(expr("transform(array_sort(collect_list(struct(i, mx))), s -> s.mx)").as("cv"))
-        .localCheckpoint()
-    }
-    assignSubCells(spark, ev, sc, scMax)
+      .repartition($"ccell")
+      .sortWithinPartitions($"ccell", $"vec_id")
+      .mapPartitions(rows => SubCellKernel.run(rows, iters, ansi, out))(
+        org.apache.spark.sql.Encoders.row(out.schema))
   }
 }

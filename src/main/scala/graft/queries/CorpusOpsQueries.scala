@@ -57,11 +57,18 @@ object CorpusOpsQueries {
     *  - K > 2×10⁶ (or "hier"): the centroid matrix outgrows the executor
     *    ceiling (~0.5 GB/10⁶ centroids ⇒ ≈5×10⁸ vectors under n/256), so
     *    the quantizer goes hierarchical: ⌈√K⌉ coarse cells via the
-    *    broadcast tier, then per-coarse-cell sub-centroids assigned by ccell EQUI
-    *    join ([[graft.operators.IvfKMeans.trainAssignHierarchical]]) —
-    *    nothing broadcast-bounded by total K remains, per-vector
-    *    comparisons stay ~√K. A different quantizer ⇒ different (still
-    *    valid) cells, so this branch has its OWN oracle
+    *    broadcast tier, then ONE shuffle of the vectors by coarse cell into
+    *    a per-coarse-cell kernel that trains and assigns the sub-cells and
+    *    emits their dedup stats in the same pass
+    *    ([[graft.operators.IvfKMeans.hierarchicalDedupStats]]) — nothing
+    *    broadcast-bounded by total K remains, per-vector comparisons stay
+    *    ~√K. Scale shape: each vector crosses the wire once in stage 2, and
+    *    a task holds one coarse cell, ≈ 16√n vectors under n/256: about
+    *    185 MB of doubles (plus as many bytes of scale-12 decimals for the
+    *    means) at the 5.1×10⁸-vector `auto` threshold — below the centroid
+    *    matrix the table tier already broadcasts to every executor there
+    *    (2×10⁶ × 64 doubles ≈ 1 GB). A different quantizer ⇒ different
+    *    (still valid) cells, so this branch has its OWN oracle
     *    (q_semdedup_hier replays both k-means stages in SQL); the
     *    within-cell dedup semantics — the SemDeDup contract — are the
     *    same code in all three branches.
@@ -81,15 +88,26 @@ object CorpusOpsQueries {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = e.count() // materializes the persist it would pay anyway
     val k = math.max(1L, math.ceil(n / 256.0).toLong)
-    val assigned = (if (strategy == "hier" || (strategy == "auto" && k > 2000000L)) {
+    val threshold = 0.45
+    val stats = if (strategy == "hier" || (strategy == "auto" && k > 2000000L)) {
       val k1 = math.max(1L, math.ceil(math.sqrt(k.toDouble)).toLong)
       require(k1 <= 2000000L, // K ≈ 4×10¹² — n beyond 10¹⁵ vectors
         s"hierarchical coarse stage exceeds the broadcast ceiling (K1=$k1)")
-      IvfKMeans.trainAssignHierarchical(s, e, k1.toInt, iters = 2)
-        .select($"vec_id", $"v", $"cid".as("cell"))
+      // the sub-cells' dedup stats come out of the same per-coarse-cell
+      // pass that assigns them; the small result is checkpointed so the
+      // corpus projection can be released before returning
+      IvfKMeans.hierarchicalDedupStats(s, e, k1.toInt, iters = 2, threshold).localCheckpoint()
     } else {
       val seedPool = e.filter($"vec_id" % 97 === 0).orderBy($"vec_id").limit(k.toInt)
-      if (k <= 1024L && strategy == "auto") {
+      // the assignment artifact feeds the self-join's two arms + the cell
+      // stats: materialize it ONCE as an eager checkpoint (a persist here
+      // would register its cache only when the CALLER materializes, then
+      // outlive the fn — CacheHygieneSpec pins no-residue), and release
+      // the corpus projection cache the Lloyd passes consumed. A/B at sf1
+      // (round 12, isolated 3-trial medians, calibrated): checkpoint 5.24
+      // vs persist 4.97 units on q_semdedup_hier (the join formulation of
+      // its stage 2) — the hygiene guarantee costs ~5% here, paid knowingly.
+      val assigned = (if (k <= 1024L && strategy == "auto") {
         // plan-literal fast path: collect is K×64 doubles, bounded by the cap
         val seeds: Seq[(Long, Seq[Double])] =
           seedPool.collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1)))
@@ -108,34 +126,26 @@ object CorpusOpsQueries {
           seedPool.collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1)))
         val cents = IvfKMeans.trainBc(s, e, seeds, iters = 2)
         e.withColumn("cell", IvfKMeans.assignCellBc(s, cents, $"v"))
-      }
-      // the assignment artifact feeds the self-join's two arms + the cell
-      // stats: materialize it ONCE as an eager checkpoint (a persist here
-      // would register its cache only when the CALLER materializes, then
-      // outlive the fn — CacheHygieneSpec pins no-residue), and release
-      // the corpus projection cache the Lloyd passes consumed. A/B at sf1
-      // (round 12, isolated 3-trial medians, calibrated): checkpoint 5.24
-      // vs persist 4.97 units on q_semdedup_hier — the hygiene guarantee
-      // costs ~5% here, paid knowingly.
-    }).localCheckpoint()
+      }).localCheckpoint()
+      // Within-cell exact dedup as ONE aggregate (round 21): the former cell
+      // self-join (two cell-partitioned exchanges + two sorts + ~128n pair
+      // rows through the cosine filter) + separate n_vecs aggregate + left
+      // join re-attach collapse into a single groupBy(cell) — each vector
+      // crosses the wire once and the O(occupancy²) comparison loop runs in
+      // [[graft.functions.SemDedupPairStats]]'s primitive-array kernel,
+      // bit-identical to the join formulation by construction (Round21OpsSpec
+      // proves it against the join form end-to-end; the shared oracle
+      // certifies it at every SF). guide §2.3/§2.4.
+      assigned.groupBy($"cell")
+        .agg(
+          count(lit(1)).as("n_vecs"),
+          graft.functions.SemDedupPairStats.pairStats(s, $"vec_id", $"v", threshold).as("ps"))
+        .select($"cell", $"n_vecs",
+          $"ps.n_dup_pairs".as("n_dup_pairs"),
+          $"ps.n_dropped".as("n_dropped"))
+    }
     e.unpersist(blocking = false)
-    // Within-cell exact dedup as ONE aggregate (round 21): the former cell
-    // self-join (two cell-partitioned exchanges + two sorts + ~128n pair
-    // rows through the cosine filter) + separate n_vecs aggregate + left
-    // join re-attach collapse into a single groupBy(cell) — each vector
-    // crosses the wire once and the O(occupancy²) comparison loop runs in
-    // [[graft.functions.SemDedupPairStats]]'s primitive-array kernel,
-    // bit-identical to the join formulation by construction (Round21OpsSpec
-    // proves it against the join form end-to-end; the shared oracle
-    // certifies it at every SF). guide §2.3/§2.4.
-    assigned.groupBy($"cell")
-      .agg(
-        count(lit(1)).as("n_vecs"),
-        graft.functions.SemDedupPairStats.pairStats(s, $"vec_id", $"v", 0.45).as("ps"))
-      .select($"cell", $"n_vecs",
-        $"ps.n_dup_pairs".as("n_dup_pairs"),
-        $"ps.n_dropped".as("n_dropped"))
-      .orderBy($"cell")
+    stats.orderBy($"cell")
   }
 
   /** One oracle for both SemDeDup keys: the two assignment strategies are
@@ -182,8 +192,8 @@ object CorpusOpsQueries {
 
   /** One sub-stage Lloyd iteration for the hierarchical oracle: assignment
     * joins each vector to ITS coarse cell's sub-centroids only (`USING
-    * (ccell)` — the SQL mirror of [[graft.operators.IvfKMeans.assignSubCells]]'s
-    * equi-join), means are grouped per (ccell, cid, dim) with the same exact
+    * (ccell)` — what [[graft.operators.SubCellKernel]] does per coarse
+    * cell), means are grouped per (ccell, cid, dim) with the same exact
     * decimal(38,12) sums. Emits `sasg$k`, `sm$k`, `s${k+1}` over `nc`/`s$k`. */
   private def subLloydIterSql(k: Int): String =
     s"""sasg$k AS (

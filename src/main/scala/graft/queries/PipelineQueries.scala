@@ -580,8 +580,8 @@ object PipelineQueries {
     *     needle sets past it), and per-vector comparisons are the probed
     *     cells' occupancy (~2·stride), never |needles|;
     *  4. the per-pair argmax packs (round(sim·10⁴), smaller-n_id-wins) into
-    *     one long — the same packing as the exact arm / `assignSubCells` —
-    *     so HashAggregate partial-aggregates map-side and the pair stream is
+    *     one long — the same packing as the exact arm and the hierarchical
+    *     quantizer's sub-cell argmin — so HashAggregate partial-aggregates map-side and the pair stream is
     *     consumed in-stage (a struct-ordered min would fall back to
     *     SortAggregate and sort the pair stream).
     *

@@ -132,19 +132,15 @@ object StreamOps {
   }
 
   /** File-source streaming entry: tail a directory of parquet events. The
-    * inferred schema is cached per (path, ns-toggle) — inference reads
-    * parquet footers, a per-run cost that repeated replay harnesses
-    * (bench/verify sweeps) would otherwise pay on every single run. The
-    * toggle is part of the key because it changes what schema the SAME
-    * footer infers (ns timestamp vs long). Stable-corpus assumption: a
-    * path whose schema is rewritten in-place needs a new session (or path).
+    * schema comes from [[graft.tables.Tables.parquetSchema]], the memo batch
+    * reads share: inference reads parquet footers in a Spark job, a per-run
+    * cost that repeated replay harnesses (bench/verify sweeps) would
+    * otherwise pay on every run, and the memo infers again when a file in
+    * the directory changes or a schema conf (the ns-timestamp toggle among
+    * them) flips.
     */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), org.apache.spark.sql.types.StructType]()
   def readEventStream(spark: SparkSession, path: String): DataFrame = {
-    val nanos = spark.conf.getAll.getOrElse("spark.sql.legacy.parquet.nanosAsLong", "unset")
-    val schema = schemaCache.computeIfAbsent((path, nanos),
-      _ => spark.read.parquet(path).schema)
+    val schema = graft.tables.Tables.parquetSchema(spark, path)
     // Normalize ts → TimestampType here, BEFORE any caller attaches a
     // watermark: a TIMESTAMP_NTZ (or ns-long) ts fails analysis with
     // EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE. Idempotent, no-op without `ts`.

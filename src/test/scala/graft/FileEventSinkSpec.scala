@@ -26,6 +26,28 @@ class FileEventSinkSpec extends AnyFunSuite {
     assert(all.size == 3 && all.map(_.seqNo) == Seq(0L, 1L, 2L))
   }
 
+  test("seqs number one append in append order across shards") {
+    val evs = Seq(("hr.employee", "{\"e\":1}"), ("hr.project", "{\"e\":2}"), ("hr.employee", "{\"e\":3}"))
+    for (shards <- 1 to 3) {
+      val dir = Files.createTempDirectory(s"graft-filesink-order$shards").toString
+      val sink = new FileEventSink(dir, shards)
+      sink.append(evs)
+      val all = sink.all
+      assert(all.map(r => (r.seqNo, r.partitionKey, r.envelope)) ==
+        evs.zipWithIndex.map { case ((pk, env), i) => (i.toLong, pk, env) }, s"shards=$shards")
+      // the two keys land on different shards whenever there are two
+      val used = (0 until shards).count(i => Files.exists(Paths.get(dir, f"shard-$i%05d.jsonl")))
+      assert(used == math.min(shards, 2), s"shards=$shards")
+      if (shards == 1) {
+        val ts = all.head.arrivalTs
+        val expected = evs.zipWithIndex.map { case ((pk, env), i) =>
+          s"""{"seq":$i,"partitionKey":"$pk","arrivalTs":$ts,"envelope":"${Envelope.escape(env)}"}\n"""
+        }.mkString
+        assert(new String(Files.readAllBytes(Paths.get(dir, "shard-00000.jsonl")), StandardCharsets.UTF_8) == expected)
+      }
+    }
+  }
+
   test("a torn write is cut before the next append: neither it nor the next event is lost") {
     val dir = Files.createTempDirectory("graft-filesink-torn").toString
     new FileEventSink(dir).append(Seq(("hr.employee", "{\"k\":0}"), ("hr.employee", "{\"k\":1}")))

@@ -355,29 +355,47 @@ class PlanQualitySpec extends AnyFunSuite {
       assert(!plan.contains(op), s"broadcast-tier assignment must be map-only, found $op:\n$plan"))
   }
 
-  test("assignSubCells joins vectors to sub-centroids by ccell EQUI join with a hash-aggregated argmin") {
-    // The hierarchical stage-2 contract: each vector meets only ITS coarse
-    // cell's sub-centroids through a keyed join (hash- or broadcast-hash —
-    // never a nested loop over all K sub-centroids), and the per-vector
-    // argmin stays the packed-long HashAggregate. This is what removes the
-    // broadcast ceiling: the sub-centroid table is an ordinary join side.
+  test("hierarchical stage 2 feeds its kernel through one ccell exchange") {
+    // The hierarchical stage-2 contract: the coarse-assigned vectors cross
+    // the wire ONCE, hash-partitioned by ccell and sorted, straight into
+    // the per-coarse-cell kernel — never a nested-loop or cartesian pairing
+    // of vectors and sub-centroids — and the only broadcast is stage 1's
+    // coarse centroid matrix (coarseK rows, ≈ √K), never a table that
+    // grows with the number of sub-cells. This is what removes the
+    // broadcast ceiling.
+    import org.apache.spark.sql.execution.{SparkPlan, MapPartitionsExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.functions._
-    val ev = spark.range(0, 512)
+    val e = spark.range(0, 2048)
       .select(col("id").as("vec_id"),
-        expr("transform(sequence(0, 7), j -> CAST(sin(id * 8 + j) AS DOUBLE))").as("v"),
-        (col("id") % 4).as("ccell"))
-    val subCents = spark.range(0, 16)
-      .select(col("id").as("cid"),
-        expr("transform(sequence(0, 7), j -> CAST(sin(id * 131 + j) AS DOUBLE))").as("cv"),
-        (col("id") % 4).as("ccell"))
-    val out = graft.operators.IvfKMeans.assignSubCells(spark, ev, subCents)
-    val plan = finalSection(physical(out))
-    assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
-      s"sub-assignment must be an equi-join on ccell:\n$plan")
-    assert(!plan.contains("SortAggregate"),
-      s"argmin must stay hash-aggregable (packed long):\n$plan")
-    assert("HashAggregate".r.findAllIn(plan).size >= 2,
-      s"expected partial+final HashAggregate over the per-cell pair stream:\n$plan")
+        expr("transform(sequence(0, 7), j -> CAST(sin(id * 8 + j) AS DOUBLE))").as("v"))
+    val out = graft.operators.IvfKMeans.trainAssignHierarchical(spark, e, coarseK = 3, iters = 2)
+    val nSub = out.select("cid").distinct().count()
+    assert(nSub > 3, s"expected more sub-cells than coarse cells, got $nSub")
+    out.collect()
+    val exec = out.queryExecution.executedPlan
+    val plan = finalSection(exec.toString)
+    val shuffles = outerShuffles(exec)
+    assert(shuffles.size == 1 && shuffles.head.startsWith("hashpartitioning(ccell"),
+      s"exactly one exchange, keyed on ccell:\n$plan")
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    // below the kernel, only the sort, the row deserializer and AQE's
+    // shuffle read (and codegen wrappers) stand between it and the exchange
+    val kernel = nodes(exec).collectFirst { case m: MapPartitionsExec => m }
+      .getOrElse(fail(s"no MapPartitions kernel:\n$plan"))
+    val below = nodes(kernel.child).takeWhile(n => !n.isInstanceOf[ShuffleExchangeLike])
+    assert(below.forall(n => Seq("Sort", "DeserializeToObject", "AQEShuffleRead", "ShuffleQueryStage",
+      "WholeStageCodegen", "InputAdapter").exists(n.nodeName.startsWith)), s"${below.map(_.nodeName)}:\n$plan")
+    assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"), plan)
+    assert(!plan.contains("BroadcastExchange"), s"no broadcast join side:\n$plan")
+    val bcCents = nodes(exec).flatMap(_.expressions.flatMap(_.collect {
+      case b: graft.functions.IvfNearestCellBc => b.bc.value._1.length }))
+    assert(bcCents == Seq(3), s"the only broadcast variable is the 3 coarse centroids: $bcCents")
   }
 
   test("q_join_theta_range keeps the equi key as the join key (range as post-filter)") {
@@ -526,7 +544,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // materializes as an NLJ/cartesian product, and the packed-long argmax
     // partial-aggregates in HashAggregate (a struct-ordered min would fall
     // back to SortAggregate and sort the pair stream — the 76 GB spill
-    // lesson from assignSubCells).
+    // lesson from the former hierarchical sub-cell join).
     val plan = finalSection(physical(run("q_decontaminate_semantic_ivf")))
     assert(plan.contains("ShuffledHashJoin"),
       s"the cell equi-join must be a shuffled hash join:\n$plan")

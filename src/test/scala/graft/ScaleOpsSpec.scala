@@ -147,12 +147,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     // collapses to plain join, detected → salted plan) actually occurred
     // across the run.
     var sawMiss = false; var sawHit = false
-    val gen = for {
-      hotRows <- Gen.choose(60, 200)   // genuinely hot vs threshold below
-      frac <- Gen.oneOf(0.001, 0.01, 0.05, 0.5)
-      saltFactor <- Gen.choose(2, 8)
-    } yield (hotRows, frac, saltFactor)
-    val prop = Prop.forAllNoShrink(gen) { case (hotRows, frac, saltFactor) =>
+    def identical(hotRows: Int, frac: Double, saltFactor: Int): Boolean = {
       val large = spark.range(hotRows.toLong).select(lit(7L).as("k"), $"id".as("payload"))
         .union(spark.range(40).select($"id" + 100L as "k", $"id".as("payload")))
       val small = spark.range(50)
@@ -163,13 +158,26 @@ class ScaleOpsSpec extends AnyFunSuite {
         broadcastShortCircuit = false)
       val plan = salted.queryExecution.executedPlan.toString
       if (plan.contains("__salt")) sawHit = true else sawMiss = true
-      val identical = salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty
-      Prop(identical) :| s"hotRows=$hotRows frac=$frac identical=$identical"
+      salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty
+    }
+    // fixed cases first, through the same row-identity check: at local[4]
+    // the seeded sample is empty (a miss) at frac 0.001 and never at 0.5
+    // (a hit), so both outcomes occur whatever the generator draws
+    for (hotRows <- Seq(60, 200); frac <- Seq(0.001, 0.5))
+      assert(identical(hotRows, frac, saltFactor = 4), s"hotRows=$hotRows frac=$frac")
+    val gen = for {
+      hotRows <- Gen.choose(60, 200)   // genuinely hot vs threshold below
+      frac <- Gen.oneOf(0.001, 0.01, 0.05, 0.5)
+      saltFactor <- Gen.choose(2, 8)
+    } yield (hotRows, frac, saltFactor)
+    val prop = Prop.forAllNoShrink(gen) { case (hotRows, frac, saltFactor) =>
+      val same = identical(hotRows, frac, saltFactor)
+      Prop(same) :| s"hotRows=$hotRows frac=$frac identical=$same"
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(20), prop)
     assert(res.passed, res.status.toString)
-    assert(sawMiss, "no generated case ever missed the hot key — property vacuous")
-    assert(sawHit, "no generated case ever detected the hot key — property vacuous")
+    assert(sawMiss, "no case ever missed the hot key — property vacuous")
+    assert(sawHit, "no case ever detected the hot key — property vacuous")
   }
 
   test("withGlobalRank assigns exact global ranks without a single-partition window") {
