@@ -89,15 +89,4 @@ object CdcApply {
         foldKey(key._1, key._2, key._3, it.toSeq).iterator
       }
   }
-
-  /** Driver-side sequential apply: the reference that the distributed [[run]]
-    * is tested against. No replication path calls it; `TaskRunner` always
-    * merges through `DurableCdcState`.
-    */
-  def runLocal(records: Seq[CdcRecord]): Seq[ApplyOutcome] =
-    records
-      .groupBy(r => (r.schema, r.table, r.pk))
-      .toSeq
-      .flatMap { case ((schema, table, pk), ops) => foldKey(schema, table, pk, ops) }
-      .sortBy(o => (o.kind, o.schema, o.table, o.pk))
 }

@@ -1,8 +1,11 @@
 package graft.etl
 
 import java.nio.file.Files
+import java.time.ZoneId
+import java.time.format.DateTimeFormatter
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.cdc.{ApplyOutcome, CdcParser, CdcRecord}
@@ -14,13 +17,15 @@ import graft.schema.{SelectionRule, SelectionRules, TableDef}
   * (DMS full-load tasks self-stop, run.py:169) and a `StreamingQuery` for CDC
   * (runs until stopped, run.py:190,205-206).
   *
-  * Scale notes: per-table loads are independent parallel scans; CDC
-  * sequencing, parsing, envelope construction, and the durable state merge
-  * are all distributed (no batch-sized collect anywhere in the streaming
-  * path). The only serialized section is the sink handoff, which mirrors the
-  * reference's 1-shard Kinesis bottleneck by design (stack.py:268) — an
-  * N-shard service sink overrides `EventSink.appendOrdered` with a
-  * per-partition-key `foreachPartition` put and the bottleneck disappears.
+  * Scale notes: the full load loads its tables one after another, each as a
+  * parallel scan feeding one ordered handoff, so its job count grows with
+  * the table count; CDC sequencing, parsing, envelope construction, and the
+  * durable state merge are all distributed (no batch-sized collect anywhere
+  * in the streaming path). The only serialized section is the sink handoff,
+  * which mirrors the reference's 1-shard Kinesis bottleneck by design
+  * (stack.py:268) — an N-shard service sink overrides
+  * `EventSink.appendOrdered` with a per-partition-key `foreachPartition` put
+  * and the bottleneck disappears.
   * Each replication step (the full load, a CDC batch) does two independent
   * things, the emission and the state merge, and runs them at the same time:
   * the durable state write goes on a helper thread while the emission stays
@@ -143,26 +148,18 @@ final class TaskRunner(
     * table's scan) and merged with the same distributed apply as any CDC
     * batch — the loaded tables never cross the driver.
     */
-  private def seedRecords(sourceRoot: String): Dataset[CdcRecord] =
+  private def seedRecords(sourceRoot: String): Dataset[CdcRecord] = {
+    val zone = ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
     selected.map { t =>
       val owner = t.owner
       val name = t.name
       val nCols = t.columns.size
       readSource(sourceRoot, t).map { row =>
-        val values = (0 until nCols).map { i =>
-          val v = row.get(i)
-          if (v == null) null
-          else v match {
-            case ts: java.sql.Timestamp =>
-              // keep the CSV lexical form for date-valued timestamps
-              val s = ts.toString
-              if (s.endsWith(" 00:00:00.0")) s.dropRight(11) else s
-            case other => other.toString
-          }
-        }
+        val values = (0 until nCols).map(i => TaskRunner.sourceText(row.get(i), zone))
         CdcRecord(0L, CdcParser.OpLoad, owner, name, values.head, values)
       }
     }.reduceOption(_ union _).getOrElse(spark.emptyDataset[CdcRecord])
+  }
 
   /** A table's source rows: headerless CSV in the table's schema. */
   private def readSource(sourceRoot: String, t: TableDef): DataFrame =
@@ -371,5 +368,26 @@ final class TaskRunner(
         count(when($"operation" === "delete", 1)).as("deletes"),
         count(when($"operation".isin("create-table", "drop-table", "alter-table"), 1)).as("ddls"))
       .orderBy($"schema_name", $"table_name")
+  }
+}
+
+object TaskRunner {
+  private val secondsLayout = DateTimeFormatter.ofPattern("uuuu-MM-dd HH:mm:ss")
+
+  /** A source value as the seeded state holds it: its CSV lexical form. A
+    * timestamp takes `java.sql.Timestamp.toString`'s layout of its local
+    * time in the session zone `zone` (the CSV was parsed in that zone; the
+    * `Timestamp`'s own `toString` reads the JVM default zone), and a
+    * date-valued one is cut back to its date.
+    */
+  private[graft] def sourceText(v: Any, zone: ZoneId): String = v match {
+    case null => null
+    case ts: java.sql.Timestamp =>
+      val t = DateTimeUtils.microsToInstant(DateTimeUtils.fromJavaTimestamp(ts))
+        .atZone(zone).toLocalDateTime
+      val frac = if (t.getNano == 0) "0" else f"${t.getNano}%09d".replaceAll("0+$", "")
+      val s = s"${t.format(secondsLayout)}.$frac"
+      if (s.endsWith(" 00:00:00.0")) s.dropRight(11) else s
+    case other => other.toString
   }
 }

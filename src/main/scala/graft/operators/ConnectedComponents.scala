@@ -8,15 +8,13 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   * label = MIN reachable node id (so "keep one doc per near-dup cluster"
   * becomes a groupBy on the label).
   *
-  * Adaptive execution — the broadcast-join size decision applied to graph
-  * iteration:
+  * Adaptive execution on the [[DriverGraph]] size rule:
   *
   *  - **Subcritical graphs** (≤ `driverEdgeThreshold` edges, the near-dup
   *    common case: dup pairs are a tiny fraction of any healthy corpus)
-  *    collect to the driver and run union-find with path compression —
-  *    microseconds of CPU versus one Spark job PER ROUND of the iterative
-  *    alternative. 2^20 edges ≈ 16 MB of longs, comfortably driver-scale;
-  *    the result broadcasts back out.
+  *    run union-find with path compression on the driver, over the edge
+  *    list the gate's bounded collect already holds; the result
+  *    broadcasts back out.
   *  - **Large graphs** run Pregel-style iterative min-label propagation
   *    (hash-join per round, rounds ≈ graph diameter): every frame stays
   *    distributed, the driver holds only a convergence scalar (Σlbl is
@@ -29,64 +27,40 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   */
 object ConnectedComponents {
 
-  /** Labels `(id, lbl)` for every node appearing in `pairs` (cols: two long
-    * columns, one row per undirected edge). `pairs` should be materialized
-    * (checkpointed/persisted) by the caller — both paths traverse it at
-    * least twice.
+  /** Labels `(id, lbl)` for every node of the graph, and the edge count the
+    * gate saw: `Some(n)` on the driver branch, `None` past the threshold.
     */
-  def labels(
+  final case class Components(labels: DataFrame, edgeCount: Option[Long]) {
+
+    /** The callers' broadcast gate: the label table is bounded by the
+      * connected subgraph, so it (and tables sized like it) broadcast while
+      * the graph has fewer than 10^6 edges; past that, joins on id shuffle.
+      */
+    def fitsBroadcast: Boolean = edgeCount.exists(_ < 1000000L)
+  }
+
+  /** Components of `pairs` (two long columns, one row per undirected edge).
+    * `pairs` should be materialized (checkpointed/persisted) by the caller —
+    * both paths traverse it at least twice.
+    */
+  def run(
       spark: SparkSession,
       pairs: DataFrame,
-      driverEdgeThreshold: Long = 1L << 20,
-      knownEdgeCount: Option[Long] = None
-  ): DataFrame = {
-    import spark.implicits._
+      driverEdgeThreshold: Long = DriverGraph.EdgeThreshold
+  ): Components = {
     val pr = pairs.toDF("id_a", "id_b")
-    // callers that already counted the (checkpointed) pair list pass it in
-    // so the operator doesn't launch a second count job
-    val nPairs = knownEdgeCount.getOrElse(pr.count())
-    if (nPairs == 0) {
-      spark.emptyDataset[(Long, Long)].toDF("id", "lbl")
-    } else if (nPairs <= driverEdgeThreshold) {
-      driverUnionFind(spark, pr)
-    } else {
-      distributedPropagation(spark, pr, nPairs)
+    DriverGraph.collect(pr, driverEdgeThreshold) match {
+      case Some(g) => Components(driverUnionFind(spark, g), Some(g.nEdges.toLong))
+      case None => Components(distributedPropagation(spark, pr), None)
     }
   }
 
-  /** Driver-side union-find (path compression + union by rank), for graphs
-    * whose edge list fits the driver with room to spare.
-    *
-    * All driver state is PRIMITIVE arrays: edges land as two long arrays,
-    * node ids are index-compressed through one sorted distinct array +
-    * binary search, and parent/rank are int/byte arrays over those
-    * indices. At the 2^20-edge threshold that is ~16 MB of longs plus
-    * ~10 MB of indices — the boxed-HashMap formulation this replaces
-    * realistically cost hundreds of MB at the same threshold (a boxed
-    * entry per node in two maps), which could OOM a default-sized driver.
+  /** Union-find (path compression + union by rank) over the index-compressed
+    * edge list: parent/rank are int/byte arrays over node indices.
     */
-  private def driverUnionFind(spark: SparkSession, pr: DataFrame): DataFrame = {
+  private def driverUnionFind(spark: SparkSession, g: EdgeList): DataFrame = {
     import spark.implicits._
-    val rows = pr.select(col("id_a").cast("long"), col("id_b").cast("long"))
-      .as[(Long, Long)].collect()
-    val m = rows.length
-    val ea = new Array[Long](m); val eb = new Array[Long](m)
-    var i = 0
-    while (i < m) { ea(i) = rows(i)._1; eb(i) = rows(i)._2; i += 1 }
-    // index-compress node ids: sorted distinct array; id → index by search
-    val nodes: Array[Long] = {
-      val all = new Array[Long](2 * m)
-      System.arraycopy(ea, 0, all, 0, m); System.arraycopy(eb, 0, all, m, m)
-      java.util.Arrays.sort(all)
-      var n = 0; var j = 0
-      while (j < all.length) {
-        if (n == 0 || all(j) != all(n - 1)) { all(n) = all(j); n += 1 }
-        j += 1
-      }
-      java.util.Arrays.copyOf(all, n)
-    }
-    def idx(id: Long): Int = java.util.Arrays.binarySearch(nodes, id)
-    val n = nodes.length
+    val n = g.nNodes
     val parent = Array.tabulate(n)(identity)
     val rank = new Array[Byte](n) // rank ≤ log2(n) < 127 always
     def find(x: Int): Int = {
@@ -96,9 +70,9 @@ object ConnectedComponents {
       while (cur != root) { val nxt = parent(cur); parent(cur) = root; cur = nxt }
       root
     }
-    i = 0
-    while (i < m) {
-      val ra = find(idx(ea(i))); val rb = find(idx(eb(i)))
+    var i = 0
+    while (i < g.nEdges) {
+      val ra = find(g.a(i)); val rb = find(g.b(i))
       if (ra != rb) {
         if (rank(ra) > rank(rb)) parent(rb) = ra
         else if (rank(ra) < rank(rb)) parent(ra) = rb
@@ -114,20 +88,17 @@ object ConnectedComponents {
     i = 0
     while (i < n) {
       val r = find(i)
-      if (lbl(r) == Long.MinValue) lbl(r) = nodes(i)
-      out(i) = (nodes(i), lbl(r))
+      if (lbl(r) == Long.MinValue) lbl(r) = g.nodes(i)
+      out(i) = (g.nodes(i), lbl(r))
       i += 1
     }
     spark.createDataset(out.toSeq).toDF("id", "lbl")
   }
 
-  /** Distributed min-label propagation — the ≥ threshold scale path. */
-  private def distributedPropagation(
-      spark: SparkSession,
-      pr: DataFrame,
-      nPairs: Long
-  ): DataFrame = {
+  /** Distributed min-label propagation — the past-threshold scale path. */
+  private def distributedPropagation(spark: SparkSession, pr: DataFrame): DataFrame = {
     import spark.implicits._
+    val nPairs = pr.count()
     // partition the loop frames by edge volume, not the session default — a
     // small subgraph on 32 shuffle partitions pays ~30x task overhead per
     // round for no parallelism

@@ -3435,11 +3435,8 @@ object PipelineQueries {
         import s.implicits._
         val pairs = embeddingDupPairs(s, d, bandBits = Some(32))
           .select($"id_a", $"id_b")
-        val nPairs = pairs.count()
-        val result = graft.operators.ConnectedComponents.labels(
-          s, pairs, knownEdgeCount = Some(nPairs))
-        val labelSide =
-          if (nPairs < 1000000L) broadcast(result) else result
+        val cc = graft.operators.ConnectedComponents.run(s, pairs)
+        val labelSide = if (cc.fitsBroadcast) broadcast(cc.labels) else cc.labels
         embeddings(s, d).select($"vec_id".as("id"))
           .join(labelSide, Seq("id"), "left_outer")
           .select($"id".as("doc_id"), coalesce($"lbl", $"id").as("cluster_id"))
@@ -3474,14 +3471,11 @@ object PipelineQueries {
         // pair list, so the forward + reversed edge reads below never
         // re-run the LSH+verify pipeline.
         val pairs = embeddingDupPairs(s, d).select($"id_a", $"id_b")
-        val nPairs = pairs.count()
-        val result = graft.operators.ConnectedComponents.labels(
-          s, pairs, knownEdgeCount = Some(nPairs))
+        val cc = graft.operators.ConnectedComponents.run(s, pairs)
         // re-attach the isolated nodes (own id = own cluster); the label
         // table is bounded by the connected subgraph — broadcast it while it
         // fits so the full corpus never shuffles
-        val labelSide =
-          if (nPairs < 1000000L) broadcast(result) else result
+        val labelSide = if (cc.fitsBroadcast) broadcast(cc.labels) else cc.labels
         embeddings(s, d).select($"vec_id".as("id"))
           .join(labelSide, Seq("id"), "left_outer")
           .select($"id".as("doc_id"), coalesce($"lbl", $"id").as("cluster_id"))
@@ -4255,11 +4249,8 @@ object PipelineQueries {
         import s.implicits._
         val pairs = imagePhashNearPairs(s, d, nBands = 8, maxDist = 7)
           .select($"doc_a", $"doc_b")
-        val nPairs = pairs.count() // bounded: materialized checkpoint, drives the CC mode
-        val labels = graft.operators.ConnectedComponents.labels(
-          s, pairs.select($"doc_a".as("id_a"), $"doc_b".as("id_b")),
-          knownEdgeCount = Some(nPairs))
-        val labelSide = if (nPairs < 1000000L) broadcast(labels) else labels
+        val cc = graft.operators.ConnectedComponents.run(s, pairs)
+        val labelSide = if (cc.fitsBroadcast) broadcast(cc.labels) else cc.labels
         val reps = imageAhashes(s, d)
           .groupBy($"h_hi", $"h_lo")
           .agg(min($"doc_id").as("rep"))
@@ -4994,15 +4985,13 @@ object PipelineQueries {
         import s.implicits._
         // already materialized (checkpointed) inside embeddingDupPairs
         val pairs = embeddingDupPairs(s, d).select($"id_a", $"id_b")
-        val nPairs = pairs.count()
-        val labels = graft.operators.ConnectedComponents.labels(
-          s, pairs, knownEdgeCount = Some(nPairs))
+        val cc = graft.operators.ConnectedComponents.run(s, pairs)
         // label/size tables are bounded by the connected subgraph —
         // broadcast only while the edge count says they fit (same gate as
         // q_dedup_clusters; past it the joins fall back to shuffles on id)
-        def gated(df: DataFrame) = if (nPairs < 1000000L) broadcast(df) else df
+        def gated(df: DataFrame) = if (cc.fitsBroadcast) broadcast(df) else df
         val lbl = embeddings(s, d).select($"vec_id".as("id"))
-          .join(gated(labels), Seq("id"), "left_outer")
+          .join(gated(cc.labels), Seq("id"), "left_outer")
           .select($"id".as("doc_id"), coalesce($"lbl", $"id").as("cluster_id"))
         val sized = lbl.groupBy($"cluster_id")
           .agg(count(lit(1)).as("n_members"))

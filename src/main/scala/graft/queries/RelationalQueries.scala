@@ -1945,18 +1945,15 @@ object RelationalQueries {
     "q_graph_pagerank" -> QueryDef(
       // Fixed-iteration PageRank (3 rounds, d = 0.85) over the undirected
       // customer↔supplier trade graph — iterative whole-graph analytics
-      // beyond connected components. Every round is one join + one groupBy
-      // on the edge list; per-node contributions quantize to a 1e-14 grid
-      // as SCALED LONGS (round of identical doubles — double→decimal casts
-      // are NOT portable, DuckDB truncates where Spark rounds half-up) so
-      // the per-node sum is exact integer math and accumulation order —
-      // which a distributed shuffle cannot pin — never changes a bit, and
-      // the rank update re-enters double math identically in both engines.
-      // The edge list and degree table persist across rounds; rounds are a
-      // fixed count (no convergence test), so the oracle unrolls the same
-      // three CTE iterations. Undirected degree ≥ 1 means no dangling-mass
-      // term. Top-20 hubs by (rank, id) keep the output bounded.
-      (s, d) => pageRank(s, d),
+      // beyond connected components (graft.operators.PageRank: the
+      // numeric-portability contract, and the driver branch a subcritical
+      // graph takes). Contributions quantize to a 1e-14 grid as SCALED
+      // LONGS (round of identical doubles — double→decimal casts are NOT
+      // portable, DuckDB truncates where Spark rounds half-up) so the
+      // per-node sum is exact integer math. Rounds are a fixed count (no
+      // convergence test), so the oracle unrolls the same three CTE
+      // iterations. Top-20 hubs by (rank, id) keep the output bounded.
+      (s, d) => graft.operators.PageRank.top(s, pageRankPairs(s, d)),
       Some {
         def iter(k: Int): String =
           s"""r${k + 1} AS (
@@ -2023,106 +2020,20 @@ object RelationalQueries {
     )
   )
 
-  /** `q_graph_pagerank` pipeline (see the QueryDef comment above for the
-    * numeric-portability design). Exposed as a def so the plan gate can
-    * inspect the physical plan of the un-materialized pipeline
-    * (`materialize = false`): the QueryDef path localCheckpoints the
-    * result, which collapses its plan to a LogicalRDD scan.
+  /** `q_graph_pagerank`'s graph: the distinct customer↔supplier pairs of
+    * one trade year (the filter lands in the parquet scan; the iteration
+    * cost is linear in edges either way). Suppliers are offset into their
+    * own id space so the bipartite node sets never collide.
     */
-  private[graft] def pageRank(
-      s: org.apache.spark.sql.SparkSession,
-      d: String,
-      materialize: Boolean = true): org.apache.spark.sql.DataFrame = {
+  private[graft] def pageRankPairs(
+      s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // one trade year scopes the graph (filter lands in the parquet
-    // scan); the iteration cost is linear in edges either way
-    val pairsDf = lineitem(s, d)
+    lineitem(s, d)
       .filter($"l_shipdate" >= lit("1997-01-01").cast("timestamp"))
       .select($"l_orderkey", $"l_suppkey")
       .join(orders(s, d).select($"o_orderkey", $"o_custkey"),
         $"l_orderkey" === $"o_orderkey")
-      // suppliers offset into their own id space so the bipartite node
-      // sets never collide
       .select($"o_custkey".as("c"), ($"l_suppkey" + 1000000L).as("p"))
       .distinct()
-    // hash-partition the edge list by src ONCE: every round's
-    // edges⋈contrib join then reuses the persisted partitioning and
-    // shuffles only the node-sized rank table
-    val edges = pairsDf.select($"c".as("src"), $"p".as("dst"))
-      .union(pairsDf.select($"p".as("src"), $"c".as("dst")))
-      .repartition($"src")
-      .persist(MEMORY_AND_DISK)
-    val deg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
-      .select($"src".as("id"), $"deg".cast("double").as("degd"))
-      .persist(MEMORY_AND_DISK)
-    val n = deg.count()
-    val base = 0.15 / n.toDouble
-    // the degree re-attach broadcasts only while the node count says it
-    // fits; past that it degrades to a shuffle join on id (both sides
-    // already hash-partitioned by node from their groupBys)
-    val degSide = if (n < 10000000L) broadcast(deg) else deg
-    var ranks = deg.select($"id", lit(1.0 / n.toDouble).as("r"))
-    for (it <- 0 until 3) {
-      // contribution quantizes on the NODE table (map-side under the
-      // broadcast), so the per-round heavy ops are exactly one edge
-      // join + one groupBy
-      val contrib = ranks.join(degSide, Seq("id"))
-        .select($"id".as("src"),
-          round($"r" / $"degd" * 1.0e14).cast("long").as("contrib"))
-      // SHUFFLE-HASH, build = contrib (guide §3.1): the default SMJ
-      // re-SORTED the persisted edge list every round (the partitioning is
-      // reused from the persist, the sort is not reusable across the join)
-      // while contrib is node-sized — building the hash map from contrib
-      // streams the edge side unsorted. Round 21, measured at sf16:
-      // per-iteration edge-side Sort nodes gone from the plan.
-      ranks = edges
-        .join(contrib.hint("shuffle_hash"), Seq("src"))
-        .groupBy($"dst")
-        .agg(sum($"contrib").as("sc"))
-        .select($"dst".as("id"),
-          round(lit(base) + lit(0.85) * ($"sc".cast("double") / 1.0e14), 10).as("r"))
-      // Materialize the NODE-sized rank table between rounds (eager
-      // checkpoint; skipped after the last round — the final
-      // materialization below covers it). Without this the three rounds
-      // nest into ONE plan whose single final action runs 3 chained
-      // shuffles + 3 broadcast builds in one window — the suite's
-      // noisiest query (r12 verdict: 3.30–12.05 s across same-session
-      // sf0.1 trials). Diagnosis (8 trials/form at sf0.1, per-trial GC
-      // telemetry; BENCH_SCALING "Round-13: q_graph_pagerank variance
-      // diagnosis + fix"): GC is NOT the isolated-trial
-      // cause (young-gen only, ≤ 0.4 s in every trial, old-gen zero);
-      // isolated spread is ~1.32× under either form, so the r12 in-suite
-      // 3.7× tail is the known MIGRATING measurement tax (r4/r7/r8
-      // pathology) that Bench's min(suite, isolated) estimator bounds.
-      // The round-materialized form still wins on merit: median 4.50 s
-      // vs 5.51 s nested (−18%) and a tighter absolute spread
-      // (3.89–5.14 vs 4.73–6.22 s) on the same window — each action is
-      // one shuffle round over a node-count-sized table instead of a
-      // 3-deep DAG re-planned as a whole. Intermediate checkpoints are
-      // unreferenced once the next round materializes; ContextCleaner
-      // reclaims them on GC.
-      if (it < 2) ranks = ranks.localCheckpoint()
-    }
-    // Top-20 via orderBy().limit() → TakeOrderedAndProject: each
-    // partition keeps a 20-row heap and the driver merges heaps — no
-    // single-partition sort of the whole node set (a global
-    // unpartitioned row_number window would move EVERY node's rank to
-    // one task: fine at 16 k nodes, a scale-killer at 100×). The 20
-    // survivors then get ranks from a window that is single-partition
-    // by construction: one constant partition over 20 rows. The partition
-    // key must be NON-foldable (id*0, never null: id is a join key) —
-    // a literal gets constant-folded out of the partitionSpec and the
-    // planner then warns it is moving "all data" to one partition.
-    val top = ranks.orderBy($"r".desc, $"id").limit(20)
-    val w = Window.partitionBy($"id" * 0).orderBy($"r".desc, $"id")
-    val ranked = top.withColumn("rnk", row_number().over(w).cast("long"))
-      .select($"rnk", $"id", $"r")
-      .orderBy($"rnk")
-    if (materialize) {
-      val out = ranked.localCheckpoint()
-      edges.unpersist(); deg.unpersist()
-      out
-    } else ranked
   }
 }

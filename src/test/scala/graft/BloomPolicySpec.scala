@@ -1,6 +1,6 @@
 package graft
 
-import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.PipelineQueries
 
@@ -10,11 +10,7 @@ import graft.queries.PipelineQueries
   */
 class BloomPolicySpec extends AnyFunSuite {
 
-  private def check(prop: Prop, cases: Int = 500): Unit = {
-    val res = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(cases), prop)
-    assert(res.passed, res.status.toString)
-  }
+  private def check(prop: Prop, cases: Int = 500): Unit = PropCheck.check(prop, cases)
 
   test("policy bits: power of two, floored, capped, >=64 bits/gram, minimal") {
     check(Prop.forAll(Gen.choose(0L, 1L << 40)) { n =>

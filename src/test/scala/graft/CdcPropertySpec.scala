@@ -1,6 +1,6 @@
 package graft
 
-import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cdc.{CdcApply, CdcParser, CdcRecord}
 
@@ -12,11 +12,7 @@ import graft.cdc.{CdcApply, CdcParser, CdcRecord}
 class CdcPropertySpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
 
-  private def check(prop: Prop, cases: Int = 200): Unit = {
-    val res = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(cases), prop)
-    assert(res.passed, res.status.toString)
-  }
+  private def check(prop: Prop, cases: Int = 200): Unit = PropCheck.check(prop, cases)
 
   private val genOps: Gen[(Boolean, List[String])] = for {
     seeded <- Gen.oneOf(true, false)
@@ -85,7 +81,7 @@ class CdcPropertySpec extends AnyFunSuite {
     }
     val dist = CdcApply.run(spark, spark.createDataset(recs)).collect()
       .sortBy(o => (o.kind, o.schema, o.table, o.pk, o.lastSeq)).toSeq
-    val local = CdcApply.runLocal(recs)
+    val local = CdcApplyReference.runLocal(recs)
       .sortBy(o => (o.kind, o.schema, o.table, o.pk, o.lastSeq))
     assert(dist == local)
   }

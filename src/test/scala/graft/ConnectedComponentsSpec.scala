@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.ConnectedComponents
@@ -28,16 +32,22 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     40L -> 40L, 41L -> 40L)
 
   test("driver union-find path labels every endpoint with its component min") {
-    val got = ConnectedComponents.labels(spark, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val cc = ConnectedComponents.run(spark, edges)
+    val got = cc.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == expected)
+    // the gate reports the edge count its bounded collect saw
+    assert(cc.edgeCount.contains(10L) && cc.fitsBroadcast)
+    // a threshold equal to the edge count still takes the driver branch
+    assert(ConnectedComponents.run(spark, edges, driverEdgeThreshold = 10L).edgeCount.contains(10L))
   }
 
   test("distributed propagation path agrees with the driver path") {
     // threshold 0 forces the iterative scale path on the same graph
-    val got = ConnectedComponents.labels(spark, edges, driverEdgeThreshold = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val cc = ConnectedComponents.run(spark, edges, driverEdgeThreshold = 0L)
+    val got = cc.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == expected)
+    // past the threshold the count is unknown, and the callers' joins shuffle
+    assert(cc.edgeCount.isEmpty && !cc.fitsBroadcast)
   }
 
   test("driver and distributed paths agree on seeded random graphs") {
@@ -47,9 +57,9 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       val n = 30 + trial * 20
       val es = Seq.fill(n)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
       val df = es.toDF("id_a", "id_b")
-      val viaDriver = ConnectedComponents.labels(spark, df)
+      val viaDriver = ConnectedComponents.run(spark, df).labels
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val viaLoop = ConnectedComponents.labels(spark, df, driverEdgeThreshold = 0L)
+      val viaLoop = ConnectedComponents.run(spark, df, driverEdgeThreshold = 0L).labels
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(viaDriver == viaLoop, s"trial $trial: paths disagree")
       // canonical-label invariant: every label is a member of its own
@@ -72,9 +82,9 @@ class ConnectedComponentsSpec extends AnyFunSuite {
         org.apache.spark.sql.functions.col("id_b"))
       .localCheckpoint()
     assert(pairs.count() > 0, "fixture LSH graph unexpectedly empty")
-    val viaDriver = ConnectedComponents.labels(spark, pairs)
+    val viaDriver = ConnectedComponents.run(spark, pairs).labels
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaPregel = ConnectedComponents.labels(spark, pairs, driverEdgeThreshold = 0L)
+    val viaPregel = ConnectedComponents.run(spark, pairs, driverEdgeThreshold = 0L).labels
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaDriver == viaPregel,
       s"paths disagree on the real pair graph (${pairs.count()} edges)")
@@ -83,9 +93,47 @@ class ConnectedComponentsSpec extends AnyFunSuite {
 
   test("zero edges yields an empty, correctly-typed label frame") {
     import spark.implicits._
-    val out = ConnectedComponents.labels(
+    val cc = ConnectedComponents.run(
       spark, Seq.empty[(Long, Long)].toDF("id_a", "id_b"))
+    assert(cc.edgeCount.contains(0L))
+    val out = cc.labels
     assert(out.columns.toSeq == Seq("id", "lbl"))
     assert(out.count() == 0)
+  }
+
+  /** `count()` actions run while `body` runs. */
+  private def countsIn(body: => Unit): Int = {
+    val n = new AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (f == "count") n.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBusAccess.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      body
+      ListenerBusAccess.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    n.get
+  }
+
+  test("no ConnectedComponents caller counts its pair list: the gate's collect decides") {
+    import graft.queries.PipelineQueries.{embeddingDupPairs, imagePhashNearPairs}
+    val sfDir = "/root/testdata/sf0.001"
+    // each caller against its pair builder alone (the adaptive LSH band
+    // width counts the corpus; the pinned-width and image builders count
+    // nothing)
+    val callers = Seq[(String, () => Unit)](
+      "q_dedup_clusters" -> (() => embeddingDupPairs(spark, sfDir)),
+      "q_dedup_clusters_w32" -> (() => embeddingDupPairs(spark, sfDir, bandBits = Some(32))),
+      "q_cluster_canonical" -> (() => embeddingDupPairs(spark, sfDir)),
+      "q_dedup_image_clusters" -> (() => imagePhashNearPairs(spark, sfDir, nBands = 8, maxDist = 7)))
+    for ((key, pairs) <- callers) {
+      val own = countsIn(pairs())
+      val all = countsIn(SparkEntry.queries(key)(spark, sfDir).collect())
+      assert(all == own, s"$key ran ${all - own} count() beyond its pair builder's $own")
+    }
+    spark.catalog.clearCache()
   }
 }

@@ -366,6 +366,28 @@ class DurableCdcSpec extends AnyFunSuite {
     assert(keys(seededRunner(dir)).size == 10)
   }
 
+  test("the full-load seed renders timestamps in the session time zone, not the JVM's") {
+    import java.util.TimeZone
+    val prev = TimeZone.getDefault
+    try {
+      // when the two zones agree, the text is Timestamp.toString's, cut
+      // back to the date for a midnight
+      TimeZone.setDefault(TimeZone.getTimeZone("UTC"))
+      for (text <- Seq("2014-06-04 00:00:00", "2014-06-04 13:05:09", "2014-06-04 00:00:00.5",
+          "2014-06-04 13:05:09.12345", "1969-12-31 23:59:59.1")) {
+        val ts = java.sql.Timestamp.valueOf(text)
+        val old = ts.toString
+        assert(TaskRunner.sourceText(ts, java.time.ZoneId.of("UTC")) ==
+          (if (old.endsWith(" 00:00:00.0")) old.dropRight(11) else old))
+      }
+      // the session zone is UTC; the JVM's is not
+      TimeZone.setDefault(TimeZone.getTimeZone("America/New_York"))
+      val r = seededRunner(Files.createTempDirectory("graft-seed-zone").toString)
+      val bob = r.currentState.find(s => s.table == "employee" && s.pk == "101").get
+      assert(bob.values(3) == "2014-06-04", bob.values)
+    } finally TimeZone.setDefault(prev)
+  }
+
   test("a CDC file past the seq stride fails its batch instead of reusing the next file's seqs") {
     def failsAlone(name: String, message: String)(write: java.io.Writer => Unit): Unit = {
       val cdcDir = Files.createTempDirectory("graft-cdc-stride")

@@ -72,7 +72,7 @@ class FreqSketchSpec extends AnyFunSuite {
   }
 
   test("property: invariants hold for arbitrary streams under arbitrary partition splits") {
-    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import org.scalacheck.{Gen, Prop}
     val genCase = for {
       n <- Gen.choose(0, 400)
       alpha <- Gen.choose(1, 30) // item universe size: small → heavy collisions
@@ -92,8 +92,7 @@ class FreqSketchSpec extends AnyFunSuite {
         t <= est && est - err <= t
       }
     }
-    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(300), prop)
-    assert(res.passed, res.status.toString)
+    PropCheck.check(prop, 300)
   }
 
   test("aggregate runs through SQL and the Column API with identical guarantees") {

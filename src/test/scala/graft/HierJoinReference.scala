@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** The join formulation of the hierarchical quantizer's stage 2, kept as the
   * reference [[graft.operators.SubCellKernel]] must reproduce bit for bit
-  * (the way `CdcApply.runLocal` is the reference for the apply). Per
+  * (the way `CdcApplyReference.runLocal` is the reference for the apply). Per
   * sub-Lloyd iteration: a ccell equi-join of the vectors to their cell's
   * sub-centroids, a `groupBy(vec_id)` packed-long argmin, a re-attach join,
   * and a `posexplode` + exact `decimal(38,12)` mean aggregate.

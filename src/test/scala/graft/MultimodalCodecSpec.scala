@@ -85,7 +85,6 @@ class MultimodalCodecSpec extends AnyFunSuite {
 
   test("codec round-trip PROPERTY: random images and clips survive encode->decode byte-exact") {
     import org.scalacheck.{Gen, Prop}
-    import org.scalacheck.Test.{check, Parameters}
     val ppmProp = Prop.forAll(
       Gen.choose(1, 9), Gen.choose(1, 9), Gen.choose(1, 255),
       Gen.long) { (w, h, maxVal, seed) =>
@@ -105,9 +104,8 @@ class MultimodalCodecSpec extends AnyFunSuite {
         back.exists(a => a.sampleRate == rate && a.channels == ch &&
           java.util.Arrays.equals(a.samples, samples))
     }
-    val p = Parameters.default.withMinSuccessfulTests(200)
-    assert(check(p, ppmProp).passed, "PPM round-trip property failed")
-    assert(check(p, wavProp).passed, "WAV round-trip property failed")
+    PropCheck.check(ppmProp :| "PPM round-trip", 200)
+    PropCheck.check(wavProp :| "WAV round-trip", 200)
   }
 
   test("the codec asset source emits decodable real bytes for every document") {

@@ -52,9 +52,12 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q_graph_pagerank takes its top-20 via TakeOrderedAndProject, not a global window sort") {
-    // the un-materialized pipeline (the QueryDef localCheckpoints, which
-    // collapses the visible plan to a LogicalRDD scan)
-    val df = queries.RelationalQueries.pageRank(spark, sfDir, materialize = false)
+    // the distributed branch (threshold 0 forces it; the fixture graph is
+    // subcritical), un-materialized: the operator localCheckpoints, which
+    // collapses the visible plan to a LogicalRDD scan
+    val df = graft.operators.PageRank.top(spark,
+      queries.RelationalQueries.pageRankPairs(spark, sfDir),
+      driverEdgeThreshold = 0L, materialize = false)
     try {
       val plan = physical(df)
       assert(plan.contains("TakeOrderedAndProject"), plan)

@@ -202,7 +202,7 @@ class QueriesSmokeSpec extends AnyFunSuite {
     val recs = CdcParser.parseLines(ReferenceFixtures.cdcLines)
     val dist = CdcApply.run(spark, spark.createDataset(recs)).collect()
       .sortBy(o => (o.kind, o.schema, o.table, o.pk)).toSeq
-    val local = CdcApply.runLocal(recs)
+    val local = CdcApplyReference.runLocal(recs)
     assert(dist == local)
   }
 

@@ -106,7 +106,7 @@ class ScaleOpsSpec extends AnyFunSuite {
 
   test("property: eager-probe overflow falls back to the deferred probe, row-identical") {
     import spark.implicits._
-    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import org.scalacheck.{Gen, Prop}
     // Correctness must never depend on WHERE the probe lands: when the hot
     // set exceeds the collect cap, saltedJoin degrades to the deferred
     // broadcast-probe form — and the rows must still be exactly the plain
@@ -133,13 +133,12 @@ class ScaleOpsSpec extends AnyFunSuite {
       val identical = salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty
       Prop(deferred && identical) :| s"deferred=$deferred identical=$identical"
     }
-    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(15), prop)
-    assert(res.passed, res.status.toString)
+    PropCheck.check(prop, 15)
   }
 
   test("property: a hot key the sampled probe misses never changes the result") {
     import spark.implicits._
-    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import org.scalacheck.{Gen, Prop}
     // The sampled pre-pass only picks which keys SCATTER — a missed hot key
     // falls through to the plain-join path for that key and must still
     // match every row. Tiny fractions make misses common; the property
@@ -174,8 +173,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       val same = identical(hotRows, frac, saltFactor)
       Prop(same) :| s"hotRows=$hotRows frac=$frac identical=$same"
     }
-    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(20), prop)
-    assert(res.passed, res.status.toString)
+    PropCheck.check(prop, 20)
     assert(sawMiss, "no case ever missed the hot key — property vacuous")
     assert(sawHit, "no case ever detected the hot key — property vacuous")
   }

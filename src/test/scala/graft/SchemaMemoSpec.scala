@@ -1,11 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
+import SparkSuite.jobsIn
 import graft.streaming.StreamOps
 import graft.tables.Tables
 
@@ -14,22 +13,6 @@ import graft.tables.Tables
   * file or a flipped schema conf infers again. */
 class SchemaMemoSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
-
-  /** Spark jobs submitted while `body` runs. */
-  private def jobsIn(body: => Unit): Int = {
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.ListenerBusAccess.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.ListenerBusAccess.drain(sc)
-    } finally sc.removeSparkListener(listener)
-    jobs.get
-  }
 
   /** `df` as the single parquet FILE `<dir>/<name>.parquet`, replacing it. */
   private def writeFile(df: DataFrame, dir: Path, name: String): Unit = {

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession across all suites (JVM-wide — Spark sessions
@@ -16,5 +19,21 @@ object SparkSuite {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Spark jobs submitted while `body` runs. */
+  def jobsIn(body: => Unit): Int = {
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    ListenerBusAccess.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      ListenerBusAccess.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
   }
 }
