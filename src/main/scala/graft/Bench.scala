@@ -3,6 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   /** A calibration spread beyond this max/min ratio marks the run's host
     * window as contended (`"suspect_window": true` in the emitted JSON).
+    * The flag is reported for the reader; it steers nothing in the run.
     * 2x is far outside the probe's measured same-tree repeatability (0.7%
     * probe-to-probe, ±3.6% suite-to-suite) but well inside what real
     * contention produces (the r12 official window drew a 35x outlier).
@@ -13,57 +14,6 @@ object Bench {
   def isSuspectWindow(sortedSamples: Seq[Double]): Boolean =
     sortedSamples.nonEmpty && sortedSamples.head > 0 &&
       sortedSamples.last / sortedSamples.head > SuspectWindowRatio
-
-  /** Expected CLEAN-window calibration median on this host at the
-    * official local[32] config: every clean r12–r18 window measured the
-    * round-12 probe at ~1.2–1.9 s (BENCH_SCALING.md calib columns). The
-    * spread-only detector above cannot see a UNIFORMLY slow window — the
-    * official r18 artifact drew calib 32.19 with a 1.48× spread and
-    * sailed through (`suspect_window=false`, `n_remeasured=0`), pricing
-    * the whole suite through a ~17×-hot host (round-18 VERDICT #1). This
-    * absolute cross-round norm closes that hole. Override with
-    * SPARK_GRAFT_CALIB_NORM on a genuinely different host.
-    */
-  val CalibNormSec = 1.55
-
-  /** A calibration median beyond this multiple of the norm marks the
-    * window suspect regardless of spread. 3× sits far above the probe's
-    * clean-window band (max/norm ≈ 1.23) and far below real contention
-    * (r18: 20.8×), so it cannot misfire on ordinary host drift.
-    */
-  val CalibNormMaxRatio = 3.0
-
-  /** True when the calibration median is uniformly inflated vs the
-    * cross-round norm — the contention mode the spread check misses
-    * (all 5 draws equally slow).
-    */
-  def isUniformlySlow(calibMedian: Double, norm: Double = CalibNormSec): Boolean =
-    norm > 0 && calibMedian > CalibNormMaxRatio * norm
-
-  /** The steadiest of several sorted calibration sample sets — smallest
-    * max/min spread (ties: the most RECENT draw — redraw sets are
-    * prepended, and minBy keeps the first minimum). Used by the suspect-window
-    * redraw: when the first 5-draw set spans a contended window, the bench
-    * redraws rather than letting one stalled draw inflate the median (the
-    * r13 official artifact's failure: a 169.7 s draw pushed calib_sec to
-    * 25.4, which pushed the remeasure bar to 8.5 s — above every query —
-    * so the flagged window shipped uncorrected figures).
-    *
-    * Round-20 (r19 ADVICE): sets whose MEDIAN is uniformly slow vs `norm`
-    * are excluded before the spread comparison — a uniformly-hot first set
-    * (the r18 shape: all draws ~17× inflated, spread 1.48×) can have a
-    * TIGHTER spread than the clean redraw that escaped the contention, and
-    * spread-only selection would then discard the clean set. Spread-only
-    * selection is the fallback when every set is uniformly slow (norm = 0
-    * disables the filter — the legacy behavior).
-    */
-  def bestCalibration(sets: Seq[Seq[Double]], norm: Double = 0.0): Seq[Double] = {
-    def spread(s: Seq[Double]) =
-      if (s.isEmpty || s.head <= 0) Double.MaxValue else s.last / s.head
-    val clean = sets.filter(s =>
-      s.nonEmpty && !isUniformlySlow(s(s.length / 2), norm))
-    (if (clean.nonEmpty) clean else sets).minBy(spread)
-  }
 
   /** Keys whose in-suite median regressed past 2× their LAST COMMITTED
     * median (`bench_history.json`) — re-measured in the isolated child
@@ -82,40 +32,23 @@ object Bench {
       case (k, v) if v >= floorSec && history.get(k).exists(h => h > 0 && v > 2.0 * h) => k
     }.sorted
 
-  /** Per-key merge of a suspect window's suite pass with its bounded
-    * retry: each key keeps the trial VECTOR whose median is smaller (the
-    * same one-sided-contamination estimator as the isolated re-measure —
-    * window contention only ever inflates), so the published
-    * min/med/max spread stays internally consistent per key. Keys the
-    * retry did not measure (defensive: a partial retry) keep their first
-    * pass. Round-21 (r20 VERDICT #4): a run that self-flags
-    * `suspect_window` must not publish the contended figures as the
-    * headline when one more suite pass can adjudicate.
+  /** Suite medians above this many seconds are candidates for the
+    * isolated re-measure. A constant, not a multiple of the calibration:
+    * a contended window inflates the calibration too (r13: 25.4 s, r18:
+    * 32.2 s), so a bar derived from it rose above every key and the
+    * flagged run shipped uncorrected figures.
     */
-  def mergeSuiteTrials(
-      first: Seq[(String, Seq[Double])],
-      retry: Map[String, Seq[Double]]): Seq[(String, Seq[Double])] =
-    first.map { case (k, ts) =>
-      k -> retry.get(k).filter(r =>
-        r.nonEmpty && ts.nonEmpty && r(r.length / 2) < ts(ts.length / 2)).getOrElse(ts)
-    }
+  val RemeasureBarSec = 0.75
 
-  /** Which queries to re-measure in a fresh JVM. Normal windows: every
-    * query above the cost bar, top 10 by in-suite median. SUSPECT windows:
-    * the top 10 UNCONDITIONALLY — the bar is derived from the calibration
-    * median, which is exactly what a contended window corrupts (r13: bar
-    * 8.48 s from a 25.4 s stalled-draw median → zero suspects → the
-    * artifact self-flagged but published inflated figures). Flagging
-    * without re-measuring is not a guard.
+  /** Which queries to re-measure in a fresh JVM: the top 10 by in-suite
+    * median among those above [[RemeasureBarSec]], names sorted. The cap
+    * keeps a data-dominated SF (sf1+, where most keys clear the bar) from
+    * adding tens of minutes for corrections that matter only on the most
+    * expensive figures.
     */
-  def remeasureSet(
-      suiteMedians: Seq[(String, Double)],
-      bar: Double,
-      suspectWindow: Boolean): Seq[String] = {
-    val pool = if (suspectWindow) suiteMedians
-               else suiteMedians.filter(_._2 > bar)
-    pool.sortBy(-_._2).take(10).map(_._1).sorted
-  }
+  def remeasureSet(suiteMedians: Seq[(String, Double)]): Seq[String] =
+    suiteMedians.filter(_._2 > RemeasureBarSec)
+      .sortBy(-_._2).take(10).map(_._1).sorted
 
   /** One draw of the host-speed calibration probe (~1.7–2 s of suite-shaped
     * mixed work: a parquet scan of the pinned sf0.001 corpus, codegen'd
@@ -172,12 +105,8 @@ object Bench {
     // 0.77 s: the probe had been pruned out). toRdd executes the query's
     // OWN optimized plan — every output column computed, sorts retained —
     // and the iterator is drained without materializing on the driver.
-    // SPARK_GRAFT_FORCE=count keeps the legacy mode for bridge comparisons
-    // against pre-round-11 artifacts; never set it for an official run.
-    val legacyForce = sys.env.get("SPARK_GRAFT_FORCE").contains("count")
     def force(df: org.apache.spark.sql.DataFrame): Unit =
-      if (legacyForce) { df.count(); () }
-      else df.queryExecution.toRdd.foreachPartition(it => while (it.hasNext) it.next())
+      df.queryExecution.toRdd.foreachPartition(it => while (it.hasNext) it.next())
     // Synchronous block eviction between executions. clearCache() only
     // drops CacheManager (Dataset.persist) entries; localCheckpoint blocks
     // are RDD-level and otherwise wait for the async ContextCleaner to
@@ -192,11 +121,8 @@ object Bench {
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
       // finished streaming replays leave checkpoint state on tmpfs (= RAM)
-      // that nothing else reclaims until JVM exit. The env guard exists only
-      // to A/B-attribute in-suite measurement regressions to this exact
-      // accumulation — never set it for an official run.
-      if (!sys.env.contains("SPARK_GRAFT_NO_CKPT_PURGE"))
-        graft.streaming.StreamOps.purgeCheckpoints()
+      // that nothing else reclaims until JVM exit
+      graft.streaming.StreamOps.purgeCheckpoints()
       System.gc()
     }
     // JIT/codegen telemetry (stderr, driver-invisible): 123 queries × 4
@@ -234,74 +160,22 @@ object Bench {
       deepClean()
     }
     System.err.println(s"[bench] after warmup: ${poolStats()}")
-    // Host-speed calibration emitted with every bench JSON, so cross-round
-    // comparisons are calibrated ratios (query_sec / calib_sec) instead of
-    // unverifiable "host drift" claims. The round-11 probe (a ~0.2 s
-    // in-memory sort+agg) was NOISIER THAN THE SUITE it calibrates: two
-    // same-tree full runs measured calib 0.190 vs 0.272 (43%) while their
-    // 143-query totals agreed within 1.4%, and the judge saw 0.19→0.56
-    // within one session — a fifth-of-a-second probe samples one scheduler
-    // /GC draw. Round-12 probe: ~2 s of MIXED work tracking the suite's
-    // actual cost profile — a parquet scan of the pinned sf0.001 corpus,
-    // codegen'd md5+string CPU, an explode fan-out, a hash-agg shuffle and
-    // a final sort — long enough to average over transient JVM state,
-    // shaped like the workload it normalizes.
-    def calibrateOnce(): Double = Bench.calibrateOnce(spark, warmDir)
-    // Median of 5 (~10 s against a ~100 s suite); min/max ride the JSON so
-    // a reader can see the window's stability without re-running. One
+    // Host-speed calibration, reported with every bench JSON so a reader
+    // can put two runs' figures on one scale (query_sec / calib_sec); it
+    // steers nothing in the run. The probe is ~2 s of MIXED work shaped
+    // like the suite, long enough to average over transient JVM state (the
+    // round-11 ~0.2 s probe was noisier than the suite it calibrated).
+    // Median of 5; min/max and the >2x spread flag ride the JSON so a
+    // reader can see the window's stability without re-running. One
     // untimed run first: the probe's own whole-stage-codegen compile
     // otherwise lands in sample 1 (measured +1.2 s on the first draw).
-    calibrateOnce()
-    // Absolute cross-round norm (round-18 lesson): the spread check below
-    // is blind to a UNIFORMLY slow window (r18 official: all 5 draws
-    // ~17× hot, spread 1.48×). The probe parallelizes its fixed work over
-    // 32 partitions, so its clean cost scales ~32/cpus below the official
-    // thread count — the default norm follows; override with
-    // SPARK_GRAFT_CALIB_NORM when benching a genuinely different host.
-    val calibNorm = sys.env.get("SPARK_GRAFT_CALIB_NORM").map(_.toDouble)
-      .getOrElse(CalibNormSec * math.max(1.0, 32.0 / cpus.toDouble))
-    def windowSuspect(sortedSamples: Seq[Double]): Boolean =
-      isSuspectWindow(sortedSamples) ||
-        isUniformlySlow(sortedSamples(sortedSamples.length / 2), calibNorm)
-    // Suspect-window redraw (round-13 lesson): one stalled draw must not
-    // define the run's calibration unit. If the 5-sample set spans > 2x —
-    // or is uniformly slow vs the cross-round norm — wait out the
-    // contention briefly and redraw (≤2 times), then keep the steadiest
-    // set; the redraw count ships in the JSON.
-    def calibrationPass(): (Seq[Double], Int) = {
-      var calibSets = List(Seq.fill(5)(calibrateOnce()).sorted)
-      var redraws = 0
-      while (windowSuspect(calibSets.head) && redraws < 2) {
-        System.err.println(
-          f"[bench] contended calibration window (max/min = ${calibSets.head.last / calibSets.head.head}%.2f, " +
-            f"median/norm = ${calibSets.head(2) / calibNorm}%.2f) — redrawing")
-        Thread.sleep(5000)
-        calibSets = Seq.fill(5)(calibrateOnce()).sorted :: calibSets
-        redraws += 1
-      }
-      (bestCalibration(calibSets, calibNorm), redraws)
-    }
-    var (calibSamples, calibRedraws) = calibrationPass()
-    def calib = calibSamples(calibSamples.length / 2)
-    def calibNormRatio = calib / calibNorm
-    // Contended-window guard (round-12 lesson): the official r12 artifact
-    // carried calib_max 51.47 against calib_min 1.33 — one calibration draw
-    // stalled ~35x on host contention, and the same contention inflated two
-    // query figures that read as regressions until re-measured. Median-of-5
-    // absorbs the outlier in calib_sec, but the per-query medians have no
-    // such protection — so a run whose calibration spread exceeds 2x is
-    // MARKED suspect in the JSON itself, telling a reader the window was
-    // contended without them having to re-derive it from calib_min/max.
-    // ...and a window whose median is uniformly inflated vs the
-    // cross-round norm is suspect even at a tight spread (round-18
-    // VERDICT #1) — the top-10 then re-measure unconditionally below,
-    // because the cost bar derives from the inflated median.
-    var suspectWindow = isSuspectWindow(calibSamples) ||
-      isUniformlySlow(calib, calibNorm)
+    calibrateOnce(spark, warmDir)
+    val calibSamples = Seq.fill(5)(calibrateOnce(spark, warmDir)).sorted
+    val calib = calibSamples(calibSamples.length / 2)
+    val suspectWindow = isSuspectWindow(calibSamples)
     if (suspectWindow)
       System.err.println(
-        f"[bench] WARNING: contended host window — calib max/min = ${calibSamples.last / calibSamples.head}%.2f (> $SuspectWindowRatio) " +
-          f"or median/norm = $calibNormRatio%.2f (> $CalibNormMaxRatio); treat per-query figures as upper bounds")
+        f"[bench] WARNING: contended host window — calib max/min = ${calibSamples.last / calibSamples.head}%.2f (> $SuspectWindowRatio)")
     // Median of `trials` runs per query: single-run times swing ±30% from GC /
     // scheduler noise in local mode; the median is stable run-to-run, so the
     // reported total tracks the engine, not the JVM's mood.
@@ -329,43 +203,13 @@ object Bench {
     // detail JSON publishes min/med/max so a reader can separate host drift
     // from real regression without re-running — the documented ±35% swing
     // otherwise makes any two single medians unarguable.
-    def runSuite(label: String): Seq[(String, Seq[Double])] = {
-      var done = 0
-      queries.toSeq.map { case (name, fn) =>
-        val ts = Seq.fill(trials)(timeOnce(name, fn)).sorted
-        done += 1
-        if (done % 15 == 0) System.err.println(s"[bench] $label after $done queries: ${poolStats()}")
-        name -> ts
-      }
+    val suiteTrials = queries.toSeq.zipWithIndex.map { case ((name, fn), i) =>
+      val ts = Seq.fill(trials)(timeOnce(name, fn)).sorted
+      if ((i + 1) % 15 == 0) System.err.println(s"[bench] suite after ${i + 1} queries: ${poolStats()}")
+      name -> ts
     }
-    var suiteTrials = runSuite("suite")
     System.err.println(s"[bench] after trials: ${poolStats()}")
     val isChild = sys.env.contains("SPARK_GRAFT_ISOLATED_CHILD")
-    // Suspect-window bounded suite retry (round-20 VERDICT #4): a window
-    // that is STILL suspect after the calibration redraws must not publish
-    // its contended per-key figures as the headline when one more pass can
-    // adjudicate — the r20 official run shipped 12 apparent regressions on
-    // untouched code from exactly such a window. The whole suite re-runs
-    // ONCE (bounded), each key keeps the smaller median's trial vector
-    // (contention only inflates — the isolated re-measure's estimator),
-    // and the published calibration/suspect flag describe the window the
-    // published figures actually came from: a clean retry clears the flag,
-    // a still-contended retry keeps it. `suite_retried` ships in the JSON
-    // either way; the isolated child never retries (its parent adjudicates).
-    var suiteRetried = 0
-    if (suspectWindow && !isChild && !sys.env.contains("SPARK_GRAFT_NO_SUITE_RETRY")) {
-      System.err.println(
-        "[bench] suspect window persisted through redraws — re-running the full suite once")
-      val (cal2, redraws2) = calibrationPass()
-      calibRedraws += redraws2
-      suiteTrials = mergeSuiteTrials(suiteTrials, runSuite("retry").toMap)
-      suiteRetried = 1
-      val suspect2 = isSuspectWindow(cal2) ||
-        isUniformlySlow(cal2(cal2.length / 2), calibNorm)
-      if (!suspect2) calibSamples = cal2
-      suspectWindow = suspectWindow && suspect2
-      System.err.println(s"[bench] retry after trials: ${poolStats()}")
-    }
     val suiteResults = suiteTrials.map { case (name, ts) => name -> ts(ts.length / 2) }.toMap
     // ---- Isolated re-measure of expensive queries (fresh child JVM) ----
     // Three rounds running, the in-suite number for SOME expensive query has
@@ -380,11 +224,6 @@ object Bench {
     // estimator, since the tax only ever inflates. Both numbers are kept in
     // the detail JSON ("suite"/"isolated") so the correction is transparent.
     // The parent session stops FIRST so the child measures on a quiet box.
-    // calib/3, not 3*calib: the multiplier was tuned for the old ~0.2 s
-    // probe (3x ≈ 0.6 s); the round-12 probe is ~9x longer, so the same
-    // absolute bar is about a THIRD of it — with 3x the bar would sit at
-    // ~5 s and nothing would ever re-measure
-    val suspectBar = math.max(0.75, calib / 3.0)
     // Per-key history (round-19 VERDICT #1/#2): the last committed full
     // per-query med map. Two jobs: (a) any key >2× its committed med joins
     // the re-measure set unconditionally (kills q_join_theta_range-style
@@ -407,17 +246,10 @@ object Bench {
       System.err.println(
         s"[bench] ${histRegressed.size} keys >2x their committed history med " +
           s"(auto-remeasure): ${histRegressed.mkString(", ")}")
-    // Cap at the top 10 by suite median: at data-dominated SFs (sf1+) half
-    // the suite legitimately exceeds an absolute bar, and re-measuring 40+
-    // queries would add tens of minutes for corrections that matter only on
-    // the most expensive figures. On a SUSPECT window the bar is ignored
-    // and the top 10 re-measure unconditionally (remeasureSet scaladoc).
-    // History-regressed keys join the set UNCAPPED — they carry direct
-    // evidence of a per-key anomaly, which is exactly what the child JVM
-    // exists to adjudicate.
-    val suspects =
-      (remeasureSet(suiteResults.toSeq, suspectBar, suspectWindow) ++ histRegressed)
-        .distinct.sorted
+    // The top 10 above the bar (remeasureSet), plus the history-regressed
+    // keys UNCAPPED — they carry direct evidence of a per-key anomaly,
+    // which is exactly what the child JVM exists to adjudicate.
+    val suspects = (remeasureSet(suiteResults.toSeq) ++ histRegressed).distinct.sorted
     if (!isChild) spark.stop()
     val isolated: Map[String, Double] =
       if (isChild || suspects.isEmpty || sys.env.contains("SPARK_GRAFT_NO_REMEASURE"))
@@ -425,8 +257,7 @@ object Bench {
       else {
         val first = remeasureIsolated(suspects, trials)
         // one retry on total failure: the correction is the artifact's
-        // evidence (n_remeasured = 0 on a flagged window is the r13 gap) —
-        // a transient child failure shouldn't silently forfeit it
+        // evidence — a transient child failure shouldn't silently forfeit it
         if (first.nonEmpty) first else remeasureIsolated(suspects, trials)
       }
     val results = suiteResults.map { case (k, v) =>
@@ -447,7 +278,7 @@ object Bench {
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val suiteTotal = if (suiteResults.nonEmpty) suiteResults.values.sum else 0.0
     val fullJson =
-      s"""{"metric":"total","value":${f"$total%.4f"},"suite_total":${f"$suiteTotal%.4f"},"unit":"sec","calib_sec":${f"$calib%.4f"},"calib_min":${f"${calibSamples.head}%.4f"},"calib_max":${f"${calibSamples.last}%.4f"},"calib_norm":${f"$calibNorm%.4f"},"calib_norm_ratio":${f"$calibNormRatio%.4f"},"suspect_window":$suspectWindow,"calib_redraws":$calibRedraws,"suite_retried":$suiteRetried,"queries":${toJson(results.toSeq)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f"$total%.4f"},"suite_total":${f"$suiteTotal%.4f"},"unit":"sec","calib_sec":${f"$calib%.4f"},"calib_min":${f"${calibSamples.head}%.4f"},"calib_max":${f"${calibSamples.last}%.4f"},"suspect_window":$suspectWindow,"queries":${toJson(results.toSeq)},"sf":"$sfDir"}"""
     // The driver captures only a bounded tail of sbt's stdout and parses the
     // last JSON line it finds. The full per-query map (~90 entries, ~3 KB)
     // overflows that buffer and the line arrives truncated → parsed:null in
@@ -504,7 +335,7 @@ object Bench {
       s""","remeasured":$remeasuredJson,"spread":$spreadJson}"""
     val compactJson =
       s"""{"metric":"total","value":${f"$total%.4f"},"suite_total":${f"$suiteTotal%.4f"},"unit":"sec","n_queries":${results.size},""" +
-        s""""calib_sec":${f"$calib%.4f"},"calib_min":${f"${calibSamples.head}%.4f"},"calib_max":${f"${calibSamples.last}%.4f"},"calib_norm":${f"$calibNorm%.4f"},"calib_norm_ratio":${f"$calibNormRatio%.4f"},"suspect_window":$suspectWindow,"calib_redraws":$calibRedraws,"suite_retried":$suiteRetried,"n_remeasured":${isolated.size},"n_history_regressed":${histRegressed.size},""" +
+        s""""calib_sec":${f"$calib%.4f"},"calib_min":${f"${calibSamples.head}%.4f"},"calib_max":${f"${calibSamples.last}%.4f"},"suspect_window":$suspectWindow,"n_remeasured":${isolated.size},"n_history_regressed":${histRegressed.size},""" +
         s""""queries":${toJson(headlineResults)},"sf":"$sfDir","detail":"$detailPath"}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(detailPath), fullJsonWithEvidence)
     // COMMITTED artifacts (round-19 VERDICT #1: "the perf verdict is

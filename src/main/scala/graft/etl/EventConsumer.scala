@@ -11,17 +11,18 @@ import org.apache.spark.sql.functions._
   */
 object EventConsumer {
 
-  /** Replay of `wait_for_kinesis`: read in `batchLimit`-record chunks,
+  /** Replay of `wait_for_kinesis`: read in `batchLimit`-record chunks
+    * from the start of the stream (the get_records loop, run.py:111-131),
     * keep events after `thresholdMs`, stop once `expected` accumulated.
     */
   def consume(
-      sink: MemoryEventSink,
+      sink: EventSink,
       expected: Int,
       thresholdMs: Long = 0L,
       batchLimit: Int = 50
   ): Seq[EventRecord] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[EventRecord]
-    val it = sink.iterator(batchLimit)
+    val it = sink.all.grouped(batchLimit)
     while (out.size < expected && it.hasNext)
       out ++= it.next().filter(_.arrivalTs > thresholdMs)
     out.take(expected).toSeq

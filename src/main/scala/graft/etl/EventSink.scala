@@ -49,32 +49,6 @@ trait EventSink {
   def size: Int = all.size
 }
 
-/** N-shard sink: the scale-out generalization of the reference's 1-shard
-  * stream. Records route by `hash(partitionKey) % shards` — total order is
-  * kept per shard, and since a table's envelopes share one partition key
-  * (`schema.table`), per-table event order survives sharding: exactly the
-  * ordering contract Kinesis gives per shard. Throughput scales with shards;
-  * the reference is the `shards = 1` special case.
-  */
-final class ShardedEventSink(val shards: Int) extends EventSink {
-  require(shards > 0)
-  private val shardSinks = Array.fill(shards)(new MemoryEventSink)
-
-  private def shardOf(pk: String): Int = math.floorMod(pk.hashCode, shards)
-
-  override def append(events: Seq[(String, String)]): Unit =
-    events.groupBy { case (pk, _) => shardOf(pk) }.foreach { case (s, evs) =>
-      shardSinks(s).append(evs)
-    }
-
-  def shard(i: Int): MemoryEventSink = shardSinks(i)
-
-  /** All events across shards; order is per-shard (no global order — the
-    * point of sharding), shards concatenated.
-    */
-  override def all: Seq[EventRecord] = shardSinks.toIndexedSeq.flatMap(_.all)
-}
-
 /** Kinesis-quota backpressure decorator: a token bucket of `capacityPerSec`
   * record slots, refilled continuously — the per-shard PutRecords quota
   * (1000 records/s/shard on the real service, stack.py:266-272's one-shard
@@ -147,10 +121,4 @@ final class MemoryEventSink extends EventSink {
   }
 
   override def all: Seq[EventRecord] = synchronized(buf.toVector)
-
-  /** Shard read analog (O11): iterate from TRIM_HORIZON in `limit`-sized
-    * batches — semantics of run.py:111-131's get_records loop.
-    */
-  def iterator(limit: Int = 50): Iterator[Seq[EventRecord]] =
-    all.grouped(limit)
 }

@@ -7,9 +7,10 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
 /** Durable event sink: JSON-lines per shard on a filesystem — the local
   * stand-in for a Kinesis→S3 delivery stream. Each line is
-  * `{"seq":n,"partitionKey":pk,"arrivalTs":ms,"envelope":...}`; per-shard
-  * append order IS the shard order (same contract as ShardedEventSink), and
-  * seqs number the appends in order across all shards.
+  * `{"seq":n,"partitionKey":pk,"arrivalTs":ms,"envelope":...}`. A key's
+  * shard is `floorMod(pk.hashCode, shards)`, so all of a key's events land
+  * in one shard, and per-shard append order IS the shard order; seqs number
+  * the appends in order across all shards.
   *
   * Restart: a new instance over the same directory resumes seq numbering
   * from the last complete line of each shard (the maximum over shards, plus

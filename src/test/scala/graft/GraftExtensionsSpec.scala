@@ -3,14 +3,46 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The injected-function surface itself is exercised end-to-end in
-  * ScenarioMain (fresh JVM → builder honors withExtensions; getOrCreate in
-  * an existing-test JVM would silently reuse the plain session). Here:
-  * injection registers without error, and the same builders are callable
-  * through the temp-function registration path on the shared session.
+/** The injected-function surface: a session built `.withExtensions(new
+  * GraftExtensions)` resolves the functions in SQL (checked in a child JVM,
+  * [[ExtensionsProbeMain]]: in this JVM `getOrCreate` would return the
+  * shared plain session and silently ignore the extension), injection
+  * registers without error, and the same builders are callable through the
+  * temp-function registration path on the shared session.
   */
 class GraftExtensionsSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
+
+  /** Runs [[ExtensionsProbeMain]] in a fresh JVM on this JVM's classpath and
+    * module options; returns its exit code and its `[probe]` lines.
+    */
+  private def probe(args: String*): (Int, Seq[String]) = {
+    import scala.jdk.CollectionConverters._
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filterNot(_.startsWith("-Xmx")).toSeq
+    val cmd = Seq(sys.props("java.home") + "/bin/java") ++ jvmArgs ++
+      Seq("-Xmx1g", "-cp", sys.props("java.class.path"), "graft.ExtensionsProbeMain") ++ args
+    val log = java.nio.file.Files.createTempFile("graft-extensions-probe", ".log")
+    val p = new ProcessBuilder(cmd.asJava)
+      .redirectErrorStream(true).redirectOutput(log.toFile).start()
+    if (!p.waitFor(3, java.util.concurrent.TimeUnit.MINUTES)) {
+      p.destroyForcibly()
+      fail(s"probe JVM timed out (log: $log)")
+    }
+    val lines = java.nio.file.Files.readAllLines(log).asScala.filter(_.startsWith("[probe]")).toSeq
+    java.nio.file.Files.delete(log)
+    (p.exitValue(), lines)
+  }
+
+  test("withExtensions resolves cosine_sim and hyperplane_sig in a fresh JVM") {
+    val (code, lines) = probe()
+    assert(code == 0, lines)
+    assert(lines.size == 1 && lines.head.startsWith("[probe] cosine_sim=1.0 hyperplane_sig="), lines)
+    // control: the same fresh session without the extension cannot resolve them
+    val (plainCode, plainLines) = probe("plain")
+    assert(plainCode == 1, plainLines)
+    assert(plainLines.exists(_.contains("cosine_sim")), plainLines)
+  }
 
   test("extension injection applies cleanly") {
     new GraftExtensions().apply(new SparkSessionExtensions) // must not throw

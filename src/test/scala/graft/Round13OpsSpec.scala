@@ -39,19 +39,6 @@ class Round13OpsSpec extends AnyFunSuite {
       "riffEnd is clamped to the byte array; the intact chunks still parse")
   }
 
-  test("bench marks a contended calibration window as suspect at >2x spread") {
-    // the r12 official artifact's actual draw (min 1.33, max 51.47) must flag
-    assert(Bench.isSuspectWindow(Seq(1.3319, 1.41, 1.4835, 1.52, 51.4695)))
-    // a healthy window (r12 re-measure: 1.51 +/- a few %) must not
-    assert(!Bench.isSuspectWindow(Seq(1.47, 1.49, 1.51, 1.55, 1.60)))
-    // boundary: exactly 2x is NOT suspect (strict >)
-    assert(!Bench.isSuspectWindow(Seq(1.0, 1.2, 1.5, 1.8, 2.0)))
-    assert(Bench.isSuspectWindow(Seq(1.0, 1.2, 1.5, 1.8, 2.01)))
-    // degenerate inputs never flag (empty / zero-floor)
-    assert(!Bench.isSuspectWindow(Nil))
-    assert(!Bench.isSuspectWindow(Seq(0.0, 5.0)))
-  }
-
   test("resize kernels: area-average downscale floors per 2x2 block; decimation averages pairs") {
     import graft.multimodal.{PpmCodec, WavCodec}
     // 4x2 RGB image: two 2x2 blocks with hand-computed per-channel floors

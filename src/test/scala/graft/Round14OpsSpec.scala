@@ -53,37 +53,6 @@ class Round14OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("a suspect window FORCES the top-10 isolated re-measure (the r13 n_remeasured=0 gap)") {
-    // the r13 official artifact's exact failure shape: three stalled
-    // calibration draws pushed calib_sec to 25.4, the bar to 8.48 s — above
-    // every query — so the flagged window shipped zero corrections
-    val medians = (1 to 30).map(i => (f"q_$i%02d", i * 0.2)) // 0.2 .. 6.0 s
-    val r13Bar = 25.4373 / 3.0
-    assert(Bench.remeasureSet(medians, r13Bar, suspectWindow = false).isEmpty,
-      "sanity: the old behavior — nothing above the inflated bar")
-    val forced = Bench.remeasureSet(medians, r13Bar, suspectWindow = true)
-    assert(forced.size == 10, "suspect window must re-measure the top 10 unconditionally")
-    assert(forced.sorted == forced, "names come back sorted")
-    assert(forced.toSet == (21 to 30).map(i => f"q_$i%02d").toSet,
-      "and they are the 10 most expensive by suite median")
-    // healthy window: the bar still gates, capped at 10
-    val normal = Bench.remeasureSet(medians, bar = 5.0, suspectWindow = false)
-    assert(normal.toSet == (26 to 30).map(i => f"q_$i%02d").toSet)
-    val many = Bench.remeasureSet(medians, bar = 0.0, suspectWindow = false)
-    assert(many.size == 10, "cap at 10 regardless of how many clear the bar")
-  }
-
-  test("calibration redraw keeps the steadiest sample set") {
-    val stalled = Seq(1.78, 1.9, 2.1, 30.0, 169.70) // the r13 window shape
-    val clean = Seq(1.47, 1.49, 1.51, 1.55, 1.60)
-    val ok2 = Seq(1.30, 1.35, 1.44, 1.52, 1.71)
-    assert(Bench.bestCalibration(Seq(stalled, clean, ok2)) == clean)
-    assert(Bench.bestCalibration(Seq(stalled)) == stalled, "a lone suspect set still publishes")
-    // degenerate zero-floor sets never win over a real one
-    assert(Bench.bestCalibration(Seq(Seq(0.0, 5.0), ok2)) == ok2)
-    assert(!Bench.isSuspectWindow(clean) && Bench.isSuspectWindow(stalled))
-  }
-
   test("image near-dup: planted Hamming-ball fixture — banding recalls every d<=3 pair, both exclusion paths hold") {
     import spark.implicits._
     // Texts ARE the pixel bytes (first 192 chars). Cell i is bright ('z',

@@ -271,28 +271,6 @@ class Round19OpsSpec extends AnyFunSuite {
       "every ≤16-bit banding consumer relies on word-0 identity")
   }
 
-  test("bench flags a UNIFORMLY slow calibration window the spread check misses") {
-    // the r18 official artifact's exact shape: all 5 draws ~17× hot, spread
-    // 1.48× (< 2×) — isSuspectWindow misses it, isUniformlySlow must not
-    val r18Window = Seq(29.56, 30.1, 32.19, 35.0, 43.85)
-    assert(!Bench.isSuspectWindow(r18Window),
-      "precondition: the spread-only detector is blind to this window " +
-        "(otherwise this test certifies nothing new)")
-    assert(Bench.isUniformlySlow(r18Window(2)),
-      "a 20x-inflated median must trip the absolute cross-round norm")
-    // clean windows (the measured 1.2–1.9 s band) must NOT flag
-    assert(!Bench.isUniformlySlow(1.2))
-    assert(!Bench.isUniformlySlow(1.89))
-    // the boundary: flag strictly above 3x the norm
-    assert(!Bench.isUniformlySlow(3.0 * Bench.CalibNormSec))
-    assert(Bench.isUniformlySlow(3.0 * Bench.CalibNormSec + 0.01))
-    // a custom norm (slower host / fewer cpus) shifts the band with it
-    assert(!Bench.isUniformlySlow(10.0, norm = 6.2))
-    assert(Bench.isUniformlySlow(19.0, norm = 6.2))
-    // degenerate norms never flag (a bad override must not poison the run)
-    assert(!Bench.isUniformlySlow(100.0, norm = 0.0))
-  }
-
   test("store entry points fail fast on scheme-qualified (non-local) paths") {
     import spark.implicits._
     val remote = "s3a://bucket/vecstore"

@@ -2,55 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-20 closures on the bench's measurement machinery (round-19
-  * VERDICT #1 + ADVICE): per-key HISTORY is now a committed artifact
-  * (`bench_history.json`) that gates an uncapped auto-remeasure of any key
-  * >2× its last committed med, and calibration-set selection prefers sets
-  * that are not uniformly slow vs the cross-round norm (the r18 window
-  * shape: all draws ~17× hot with a TIGHTER spread than the clean redraw —
-  * spread-only selection would discard the clean set).
+/** Round-20 closures: cell-aligned IVF tombstones (broadcast and forced
+  * shuffle arms, pruned reads, out-of-order takedowns), and the committed
+  * per-key bench history (`bench_history.json`) that gates `graft.Bench`'s
+  * uncapped auto-remeasure of any key >2× its last committed med (the gate
+  * itself is in [[BenchSpec]]).
   */
 class Round20OpsSpec extends AnyFunSuite {
-
-  test("bestCalibration prefers a clean redraw over a tighter-spread uniformly-hot set (r19 ADVICE)") {
-    // the r18 official shape: every draw ~17x the 1.55 s norm, spread 1.48x
-    val hot = Seq(26.0, 28.5, 32.19, 35.1, 38.5)
-    // a clean redraw after the contention passed — WIDER spread (1.55x)
-    val clean = Seq(1.20, 1.31, 1.42, 1.66, 1.86)
-    assert(hot.last / hot.head < clean.last / clean.head,
-      "fixture sanity: the hot set must be the tighter-spread one")
-    // legacy spread-only selection (norm = 0 disables the filter) keeps hot
-    assert(Bench.bestCalibration(Seq(clean, hot)) == hot,
-      "sanity: this IS the failure mode the fix closes")
-    // with the norm, the clean set wins despite its wider spread
-    assert(Bench.bestCalibration(Seq(clean, hot), norm = 1.55) == clean)
-    // every set uniformly slow -> fall back to spread-only (lone-set rule)
-    assert(Bench.bestCalibration(Seq(hot), norm = 1.55) == hot)
-    val hot2 = Seq(20.0, 25.0, 31.0, 40.0, 55.0)
-    assert(Bench.bestCalibration(Seq(hot2, hot), norm = 1.55) == hot)
-    // a clean-median set is preferred even over a perfectly flat hot set
-    assert(Bench.bestCalibration(Seq(Seq(30.0, 30.0, 30.0, 30.0, 30.0), clean),
-      norm = 1.55) == clean)
-  }
-
-  test("historyRegressions: >2x the committed med, floored, missing-history keys skipped") {
-    val history = Map("q_a" -> 0.456, "q_b" -> 1.0, "q_c" -> 0.1, "q_zero" -> 0.0)
-    val suite = Seq(
-      "q_a" -> 1.563, // the r19 q_join_theta_range shape: 3.4x its clean med
-      "q_b" -> 1.9,   // 1.9x — under the 2x bar
-      "q_c" -> 0.35,  // 3.5x but under the 0.5 s floor: scheduler noise
-      "q_new" -> 9.0, // no history — top-10 logic covers it, not this gate
-      "q_zero" -> 4.0) // degenerate committed 0.0 must not divide/flag
-    assert(Bench.historyRegressions(suite, history) == Seq("q_a"))
-    // boundary: exactly 2x does not flag; just past it does
-    assert(Bench.historyRegressions(Seq("q_b" -> 2.0), history).isEmpty)
-    assert(Bench.historyRegressions(Seq("q_b" -> 2.01), history) == Seq("q_b"))
-    // floor is a parameter: dropping it admits the cheap key
-    assert(Bench.historyRegressions(suite, history, floorSec = 0.0)
-      .contains("q_c"))
-    // empty history (first round / file absent) flags nothing
-    assert(Bench.historyRegressions(suite, Map.empty).isEmpty)
-  }
 
   private lazy val spark = SparkSuite.spark
   private val P = graft.queries.PipelineQueries

@@ -8,9 +8,6 @@ import org.apache.spark.sql.functions._
   *    ([[graft.functions.SemDedupPairStats]]); this spec proves the kernel
   *    bit-identical to the join formulation it replaced, including the
   *    near-threshold band where the 4-dp HALF_UP rounding decides;
-  *  - a suspect window re-runs the whole suite once and publishes the
-  *    per-key min (r20 VERDICT #4) — the merge rule is proven on forced
-  *    contention shapes;
   *  - compaction's absorbed manifest derives from the live frame's OWN
   *    file-index snapshot (r21 ADVICE), proven under a simulated
   *    concurrent append;
@@ -21,22 +18,6 @@ class Round21OpsSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSuite.spark
   private val P = graft.queries.PipelineQueries
-
-  test("mergeSuiteTrials keeps the smaller median's trial vector per key (suspect-window retry)") {
-    val first = Seq(
-      "q_a" -> Seq(1.0, 1.6, 9.0), // contended pass: median 1.6
-      "q_b" -> Seq(0.4, 0.5, 0.6), // clean already
-      "q_c" -> Seq(2.0, 2.2, 2.4)) // retry missed it (defensive)
-    val retry = Map(
-      "q_a" -> Seq(0.9, 1.0, 1.1), // clean retry wins
-      "q_b" -> Seq(0.5, 0.7, 0.8)) // retry WORSE — first pass must stand
-    val merged = Bench.mergeSuiteTrials(first, retry).toMap
-    assert(merged("q_a") == Seq(0.9, 1.0, 1.1))
-    assert(merged("q_b") == Seq(0.4, 0.5, 0.6))
-    assert(merged("q_c") == Seq(2.0, 2.2, 2.4))
-    // the published spread stays one pass's vector, never a mix
-    assert(Bench.mergeSuiteTrials(first, Map.empty).toMap == first.toMap)
-  }
 
   test("snapshotShardIds is atomic with the frame's file-index snapshot under a concurrent append") {
     val store = java.nio.file.Files.createTempDirectory("r21_snap_ids").toString

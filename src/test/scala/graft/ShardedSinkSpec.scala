@@ -1,14 +1,26 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.etl._
 import graft.schema.{SelectionRule, SelectionRules}
 
+/** `FileEventSink(dir, shards)` with more than one shard: a key's events
+  * stay in append order and live in exactly one `shard-*.jsonl` file.
+  */
 class ShardedSinkSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
 
+  private def shardFiles(dir: Path): Seq[Path] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.filter(_.getFileName.toString.startsWith("shard-")).toVector
+    finally s.close()
+  }
+
   test("per-partition-key order survives sharding; nothing is lost") {
-    val sink = new ShardedEventSink(3)
+    val dir = Files.createTempDirectory("graft-shard-order")
+    val sink = new FileEventSink(dir.toString, shards = 3)
     val keys = Seq("hr.employee", "hr.department", "hr.project", "dms.x")
     val sent = (0 until 100).map(i => (keys(i % keys.size), s"env-$i"))
     sent.grouped(7).foreach(g => sink.append(g))
@@ -21,21 +33,23 @@ class ShardedSinkSpec extends AnyFunSuite {
       val expected = sent.filter(_._1 == k).map(_._2)
       assert(gotten == expected, s"order broken for $k")
     }
-    // a key lives on exactly one shard
+    // a key's lines live in exactly one shard file
+    val files = shardFiles(dir)
     keys.foreach { k =>
-      val shardsWithKey = (0 until 3).count(i => sink.shard(i).all.exists(_.partitionKey == k))
-      assert(shardsWithKey == 1)
+      val shardsWithKey = files.count(f =>
+        Files.readAllLines(f).asScala.exists(_.contains(s""""partitionKey":"$k"""")))
+      assert(shardsWithKey == 1, s"$k is in $shardsWithKey shard files")
     }
   }
 
   test("full-load through a sharded sink keeps the 16-event golden content") {
-    val root = java.nio.file.Files.createTempDirectory("graft-shard-fl")
+    val root = Files.createTempDirectory("graft-shard-fl")
     ReferenceFixtures.fullLoadCsvs.foreach { case (table, body) =>
       val dir = root.resolve(s"hr/$table")
-      java.nio.file.Files.createDirectories(dir)
-      java.nio.file.Files.writeString(dir.resolve("LOAD1.csv"), body)
+      Files.createDirectories(dir)
+      Files.writeString(dir.resolve("LOAD1.csv"), body)
     }
-    val sink = new ShardedEventSink(2)
+    val sink = new FileEventSink(Files.createTempDirectory("graft-shard-fl-sink").toString, shards = 2)
     new TaskRunner(spark, SelectionRules.referenceTables,
       Seq(SelectionRule("%", "%", "include")), sink).runFullLoad(root.toString)
     assert(sink.all.size == 16)
