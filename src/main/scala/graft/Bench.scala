@@ -169,13 +169,24 @@ object Bench {
     // reader can see the window's stability without re-running. One
     // untimed run first: the probe's own whole-stage-codegen compile
     // otherwise lands in sample 1 (measured +1.2 s on the first draw).
-    calibrateOnce(spark, warmDir)
-    val calibSamples = Seq.fill(5)(calibrateOnce(spark, warmDir)).sorted
-    val calib = calibSamples(calibSamples.length / 2)
+    // An isolated child skips the probe: its parent reads only the
+    // child's q_ medians, and the draws were most of a short child's wall.
+    val isChild = sys.env.contains("SPARK_GRAFT_ISOLATED_CHILD")
+    val calibSamples =
+      if (isChild) Seq.empty[Double]
+      else {
+        calibrateOnce(spark, warmDir)
+        Seq.fill(5)(calibrateOnce(spark, warmDir)).sorted
+      }
     val suspectWindow = isSuspectWindow(calibSamples)
     if (suspectWindow)
       System.err.println(
         f"[bench] WARNING: contended host window — calib max/min = ${calibSamples.last / calibSamples.head}%.2f (> $SuspectWindowRatio)")
+    val calibJson =
+      if (calibSamples.isEmpty) """"calib_sec":null,"calib_min":null,"calib_max":null,"suspect_window":false"""
+      else
+        s""""calib_sec":${f"${calibSamples(calibSamples.length / 2)}%.4f"},"calib_min":${f"${calibSamples.head}%.4f"},""" +
+          s""""calib_max":${f"${calibSamples.last}%.4f"},"suspect_window":$suspectWindow"""
     // Median of `trials` runs per query: single-run times swing ±30% from GC /
     // scheduler noise in local mode; the median is stable run-to-run, so the
     // reported total tracks the engine, not the JVM's mood.
@@ -209,7 +220,6 @@ object Bench {
       name -> ts
     }
     System.err.println(s"[bench] after trials: ${poolStats()}")
-    val isChild = sys.env.contains("SPARK_GRAFT_ISOLATED_CHILD")
     val suiteResults = suiteTrials.map { case (name, ts) => name -> ts(ts.length / 2) }.toMap
     // ---- Isolated re-measure of expensive queries (fresh child JVM) ----
     // Three rounds running, the in-suite number for SOME expensive query has
@@ -278,7 +288,7 @@ object Bench {
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val suiteTotal = if (suiteResults.nonEmpty) suiteResults.values.sum else 0.0
     val fullJson =
-      s"""{"metric":"total","value":${f"$total%.4f"},"suite_total":${f"$suiteTotal%.4f"},"unit":"sec","calib_sec":${f"$calib%.4f"},"calib_min":${f"${calibSamples.head}%.4f"},"calib_max":${f"${calibSamples.last}%.4f"},"suspect_window":$suspectWindow,"queries":${toJson(results.toSeq)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f"$total%.4f"},"suite_total":${f"$suiteTotal%.4f"},"unit":"sec",$calibJson,"queries":${toJson(results.toSeq)},"sf":"$sfDir"}"""
     // The driver captures only a bounded tail of sbt's stdout and parses the
     // last JSON line it finds. The full per-query map (~90 entries, ~3 KB)
     // overflows that buffer and the line arrives truncated → parsed:null in
@@ -335,7 +345,7 @@ object Bench {
       s""","remeasured":$remeasuredJson,"spread":$spreadJson}"""
     val compactJson =
       s"""{"metric":"total","value":${f"$total%.4f"},"suite_total":${f"$suiteTotal%.4f"},"unit":"sec","n_queries":${results.size},""" +
-        s""""calib_sec":${f"$calib%.4f"},"calib_min":${f"${calibSamples.head}%.4f"},"calib_max":${f"${calibSamples.last}%.4f"},"suspect_window":$suspectWindow,"n_remeasured":${isolated.size},"n_history_regressed":${histRegressed.size},""" +
+        s"""$calibJson,"n_remeasured":${isolated.size},"n_history_regressed":${histRegressed.size},""" +
         s""""queries":${toJson(headlineResults)},"sf":"$sfDir","detail":"$detailPath"}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(detailPath), fullJsonWithEvidence)
     // COMMITTED artifacts (round-19 VERDICT #1: "the perf verdict is

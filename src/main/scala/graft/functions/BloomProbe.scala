@@ -9,29 +9,28 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, StringType}
 
-/** Broadcast-variable Bloom probe — the stream decontamination mechanism
-  * for bitmaps past the plan-literal regime (policy threshold 2^18 bits —
-  * measured, see `PipelineQueries.streamBloomGate`; hard literal viability
-  * ends around 2^27).
+/** Broadcast-variable Bloom probe — the one decontamination probe, batch
+  * (`PipelineQueries.bloomDecontaminate`, one gram per call) and stream
+  * (`PipelineQueries.streamBloomGate`, a document's grams per call), at
+  * every bitmap size.
   *
-  * Below that ceiling the stateless stream probe bakes the bitmap into the
-  * plan as one literal array (map-only, codegen'd `exists`). The policy can
-  * size the bitmap up to 2^32 bits (~545 MB of words) — far past what a
-  * plan literal tolerates: the literal is re-serialized with every plan and
-  * copied into every codegen reference array, and the driver would fold it
-  * per analysis. A TorrentBroadcast ships the words array to each executor
-  * ONCE (chunked, off the task path) and the plan carries only the handle —
-  * the standard Spark mechanism for a sketch too big to ride the plan.
+  * The policy can size the bitmap up to 2^32 bits (~545 MB of words) — far
+  * past what a plan literal tolerates: a literal is re-serialized with
+  * every plan and copied into every codegen reference array, and the
+  * driver would fold it per analysis. A TorrentBroadcast ships the words
+  * array to each executor ONCE (chunked, off the task path) and the plan
+  * carries only the handle — the standard Spark mechanism for a sketch
+  * shipped to every task. Where both were measured, the compiled any-hit
+  * loop also beat a plan-literal `exists` probe (BENCH_SCALING round 11).
   *
-  * The expression evaluates the whole document's gram array in one call
-  * (any-hit short-circuit), so whole-stage codegen sees a single boolean-
-  * valued leaf: one virtual call per ROW, the md5+bit-test loop per gram
-  * runs in plain JVM code against the broadcast `long[]`. Hash/bit layout
-  * is EXACTLY the literal probe's contract — h1/h2 = the first/second
-  * 32-bit words of md5 hex (`conv(substring(md5(g), 1|9, 8), 16, 10)`)
-  * mod mBits, word index h/63, mask 1L << (h%63) — so literal and
-  * broadcast mechanisms are row-identical and share one DuckDB oracle
-  * (proven in Round11OpsSpec at 2^28 bits).
+  * The expression evaluates the whole gram array in one call (any-hit
+  * short-circuit), so whole-stage codegen sees a single boolean-valued
+  * leaf: one virtual call per ROW, the md5+bit-test loop per gram runs in
+  * plain JVM code against the broadcast `long[]`. Hash/bit layout is
+  * EXACTLY the oracle's contract — h1/h2 = the first/second 32-bit words
+  * of md5 hex (`conv(substring(md5(g), 1|9, 8), 16, 10)`) mod mBits, word
+  * index h/63, mask 1L << (h%63) — proven bit-for-bit against that
+  * composed form in Round11OpsSpec at 2^28 bits.
   */
 case class BloomBcAnyHit(
     child: Expression,
@@ -67,7 +66,7 @@ case class BloomBcAnyHit(
         dg.reset()
         val md = dg.digest(g.getBytes)
         // first/second big-endian 32-bit words of the digest == the two
-        // 8-hex-char substrings the literal probe parses with conv()
+        // 8-hex-char substrings the oracle parses with conv()
         val h1 = (((md(0) & 0xffL) << 24) | ((md(1) & 0xffL) << 16) |
           ((md(2) & 0xffL) << 8) | (md(3) & 0xffL)) % mBits
         val h2 = (((md(4) & 0xffL) << 24) | ((md(5) & 0xffL) << 16) |

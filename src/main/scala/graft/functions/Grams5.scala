@@ -20,9 +20,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    array_distinct keeps one null at its first position (split() never
   *    emits nulls, so this is edge armor, not a live path);
   *  - fewer than 5 tokens yields an EMPTY array (the slice-length guard).
-  * The gram strings feed md5-based probes ([[BloomBcAnyHit]], the literal
-  * `exists` probe), so byte-identical strings mean every probe and every
-  * DuckDB oracle is untouched.
+  * The gram strings feed the md5-based [[BloomBcAnyHit]] probe, so
+  * byte-identical strings mean the probe and every DuckDB oracle are
+  * untouched.
   *
   * Why fused: the zip_with chain walks four interpreted lambda levels and
   * allocates three intermediate gram-prefix arrays per doc; this assembles

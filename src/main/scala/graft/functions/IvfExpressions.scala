@@ -5,17 +5,18 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Codegen'd nearest-centroid assignment against a baked centroid table.
+/** Codegen'd nearest-centroid assignment against a centroid table riding a
+  * BROADCAST VARIABLE.
   *
   * Semantically identical to `array_min(array(struct(-round(cosine, 6), cid)
   * for each centroid)).cid` — the formulation `IvfKMeans` originally
-  * composed from 16 separate `CosineSimilarity` trees — but as ONE
-  * expression holding the K×dim centroid matrix in a codegen reference
-  * object. That collapses K cosine codegen blocks + K struct allocations +
-  * an array_min per row into a single fused loop, and (as importantly at
-  * bench scale) shrinks each consuming plan's expression tree from ~K·dim
-  * nodes to one, cutting analysis + codegen time for every Lloyd iteration
-  * plan.
+  * composed from K separate `CosineSimilarity` trees — but as ONE
+  * expression node whatever K is. That collapses K cosine codegen blocks +
+  * K struct allocations + an array_min per row into a single fused loop,
+  * and keeps each consuming plan's expression tree (and every Lloyd
+  * iteration's analysis + codegen) O(1) in K. The (cids, matrix, norms)
+  * triple ships to each executor once as a TorrentBroadcast; K stays
+  * bounded by executor memory (~0.5 GB at K = 10⁶, dim 64).
   *
   * Exact-parity details mirrored from the composed form so the DuckDB
   * oracle replays bit-for-bit:
@@ -25,67 +26,9 @@ import org.apache.spark.sql.types._
   *  - argmax = min over (-cos6, cid) with java.lang.Double.compare ordering
   *    (NaN greatest, as in struct comparison), i.e. lowest-cid tiebreak.
   */
-case class IvfNearestCell(
-    child: Expression,
-    cids: Array[Long],
-    cents: Array[Array[Double]],
-    cnorms: Array[Double]
-) extends UnaryExpression {
-
-  require(cids.length == cents.length && cids.length == cnorms.length && cids.nonEmpty)
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "ivf_nearest_cell"
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    IvfNearestCell.nearest(v, cids, cents, cnorms)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cidsRef = ctx.addReferenceObj("cids", cids, "long[]")
-    val centsRef = ctx.addReferenceObj("cents", cents, "double[][]")
-    val cnormsRef = ctx.addReferenceObj("cnorms", cnorms, "double[]")
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.IvfNearestCell.nearest($v, $cidsRef, $centsRef, $cnormsRef);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-
-  // Case-class equality over Array fields is reference equality, so two
-  // semantically identical instances never compare equal — defeating
-  // Catalyst subexpression elimination and plan-cache reuse for repeated
-  // assignments against the same centroid table. Compare contents.
-  override def equals(other: Any): Boolean = other match {
-    case o: IvfNearestCell =>
-      child == o.child &&
-        java.util.Arrays.equals(cids, o.cids) &&
-        cents.length == o.cents.length &&
-        cents.indices.forall(i => java.util.Arrays.equals(cents(i), o.cents(i))) &&
-        java.util.Arrays.equals(cnorms, o.cnorms)
-    case _ => false
-  }
-  override def hashCode(): Int = java.util.Objects.hash(
-    child,
-    Integer.valueOf(java.util.Arrays.hashCode(cids)),
-    Integer.valueOf(java.util.Arrays.deepHashCode(cents.asInstanceOf[Array[AnyRef]])),
-    Integer.valueOf(java.util.Arrays.hashCode(cnorms)))
-}
-
-/** [[IvfNearestCell]] with the centroid matrix riding a BROADCAST VARIABLE
-  * instead of plan literals — the same static [[IvfNearestCell.nearest]]
-  * kernel (bit-parity by construction), but the plan carries one small
-  * expression node regardless of K, so the assignment is viable for the
-  * 1024 < K ≤ ~2×10⁶ tier where literal matrices would bloat every Lloyd
-  * plan's analysis/codegen (and where the former broadcast-JOIN mechanism
-  * paid an NLJ + packed-argmin aggregate + vector re-attach join per
-  * assignment — this is pure map-side). K stays bounded by executor
-  * memory exactly as the join build side was (~0.5 GB at K = 10⁶, dim 64).
-  */
 case class IvfNearestCellBc(
     child: Expression,
-    bc: org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Array[Double]], Array[Double])]
+    bc: org.apache.spark.broadcast.Broadcast[IvfNearestCell.Table]
 ) extends UnaryExpression {
 
   override def dataType: DataType = LongType
@@ -109,78 +52,26 @@ case class IvfNearestCellBc(
     copy(child = c)
 }
 
-/** Top-`nprobe` variant of [[IvfNearestCell]]: the cids of the `nprobe`
+/** Top-`nprobe` variant of [[IvfNearestCellBc]]: the cids of the `nprobe`
   * nearest centroids by (round(cos, 6) DESC, cid ASC), as one fused
   * expression returning `array<long>`. Semantically identical to the
   * composed probe-side formulation
   * `transform(slice(array_sort(simStructs(cents, v)), 1, nprobe), p -> p.cid)`
   * — K cosine trees + K struct allocations + a full array sort per row —
-  * but one compiled loop with the centroid matrix in a codegen reference,
-  * and per-row BigDecimal rounding bounded by the raw-window argument
-  * instead of K. This is the CORPUS-side probe of the IVF
-  * decontamination tier (every corpus vector runs it), where the composed
-  * form's O(K·dim) plan nodes and per-row sort were the dominant cost.
+  * but one compiled loop over the broadcast centroid table, and per-row
+  * BigDecimal rounding bounded by the raw-window argument instead of K.
+  * This is the CORPUS-side probe of the IVF decontamination tier (every
+  * corpus vector runs it), where the composed form's O(K·dim) plan nodes
+  * and per-row sort were the dominant cost.
   *
   * Ordering parity with the struct sort: doubles compare via
   * java.lang.Double.compare (NaN greatest, -0.0 < 0.0), so all-NaN cells
   * rank after every real cosine and tie among themselves by cid — exactly
   * array_sort's struct ordering.
   */
-case class IvfNearestCells(
-    child: Expression,
-    cids: Array[Long],
-    cents: Array[Array[Double]],
-    cnorms: Array[Double],
-    nprobe: Int
-) extends UnaryExpression {
-
-  require(cids.length == cents.length && cids.length == cnorms.length && cids.nonEmpty)
-  require(nprobe >= 1, s"nprobe must be >= 1 (got $nprobe)")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "ivf_nearest_cells"
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    IvfNearestCell.nearestN(v, cids, cents, cnorms, nprobe)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cidsRef = ctx.addReferenceObj("cids", cids, "long[]")
-    val centsRef = ctx.addReferenceObj("cents", cents, "double[][]")
-    val cnormsRef = ctx.addReferenceObj("cnorms", cnorms, "double[]")
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.IvfNearestCell.nearestN($v, $cidsRef, $centsRef, $cnormsRef, $nprobe);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-
-  // content equality over the Array fields, same rationale as IvfNearestCell
-  override def equals(other: Any): Boolean = other match {
-    case o: IvfNearestCells =>
-      child == o.child && nprobe == o.nprobe &&
-        java.util.Arrays.equals(cids, o.cids) &&
-        cents.length == o.cents.length &&
-        cents.indices.forall(i => java.util.Arrays.equals(cents(i), o.cents(i))) &&
-        java.util.Arrays.equals(cnorms, o.cnorms)
-    case _ => false
-  }
-  override def hashCode(): Int = java.util.Objects.hash(
-    child, Integer.valueOf(nprobe),
-    Integer.valueOf(java.util.Arrays.hashCode(cids)),
-    Integer.valueOf(java.util.Arrays.deepHashCode(cents.asInstanceOf[Array[AnyRef]])),
-    Integer.valueOf(java.util.Arrays.hashCode(cnorms)))
-}
-
-/** [[IvfNearestCells]] with the centroid triple riding a broadcast
-  * variable — the probe-side twin of [[IvfNearestCellBc]] for quantizers
-  * past the plan-literal cap (same static kernel, bit-parity by
-  * construction).
-  */
 case class IvfNearestCellsBc(
     child: Expression,
-    bc: org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Array[Double]], Array[Double])],
+    bc: org.apache.spark.broadcast.Broadcast[IvfNearestCell.Table],
     nprobe: Int
 ) extends UnaryExpression {
 
@@ -208,6 +99,23 @@ case class IvfNearestCellsBc(
 }
 
 object IvfNearestCell {
+
+  /** A centroid table as the kernels read it: (cids, K×dim matrix, norms). */
+  type Table = (Array[Long], Array[Array[Double]], Array[Double])
+
+  /** The [[Table]] of a centroid Seq. The norm fold is CosineSimilarity's
+    * left-to-right |b|² accumulation (identical IEEE double — the kernels'
+    * bit-parity contract). */
+  def table(cents: Seq[(Long, Seq[Double])]): Table = {
+    require(cents.nonEmpty, "a centroid table needs at least one centroid")
+    val mat = cents.map(_._2.toArray).toArray
+    val cnorms = mat.map { c =>
+      var s = 0.0; var i = 0
+      while (i < c.length) { s += c(i) * c(i); i += 1 }
+      math.sqrt(s)
+    }
+    (cents.map(_._1).toArray, mat, cnorms)
+  }
 
   /** Max distance 6-dp HALF_UP rounding can move a double: the shortest-
     * decimal step of `BigDecimal.valueOf` shifts by ≤ ulp/2 (≈1e-16 for
@@ -323,7 +231,7 @@ object IvfNearestCell {
     bestCid
   }
 
-  /** Top-`nprobe` kernel behind [[IvfNearestCells]]/[[IvfNearestCellsBc]].
+  /** Top-`nprobe` kernel behind [[IvfNearestCellsBc]].
     *
     * Same two-pass discipline as [[nearest]], generalized: pass 1 computes
     * raw cosines (pure-double hot loop) while tracking the nprobe-th

@@ -1,13 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Deterministic Lloyd (k-means) refinement for IVF coarse quantizers.
   *
   * Each iteration is one distributed pass: nearest-centroid assignment is
-  * map-side codegen (the K centroids ride in the plan as array literals — the
-  * property that keeps IVF viable at 100 TB), and the new centroids are
+  * map-side codegen (the K centroids ride a broadcast variable, so the plan
+  * carries one expression node at any K), and the new centroids are
   * element-wise means via posexplode + partial-aggregating groupBy on
   * (cell, position) — the shuffle carries K×dim×partitions partial sums, not
   * data. Only the K×dim mean table is collected per iteration.
@@ -36,44 +38,44 @@ object IvfKMeans {
   }: _*)
 
   /** Nearest-centroid cell id for `vcol` — pure map-side codegen, as ONE
-    * fused expression over the baked centroid matrix
-    * ([[graft.functions.IvfNearestCell]]) rather than K composed cosine
-    * trees: same bit-exact result as
+    * fused expression ([[graft.functions.IvfNearestCellBc]]) over the
+    * centroid table shipped as a broadcast variable, rather than K composed
+    * cosine trees: same bit-exact result as
     * `array_min(simStructs(...)).getField("cid")`, but each consuming plan
-    * carries a single expression node, so Lloyd-iteration plans
-    * analyze + codegen in O(1) instead of O(K·dim).
+    * carries a single expression node, so Lloyd-iteration plans analyze +
+    * codegen in O(1) instead of O(K·dim). The Column is built directly from
+    * the expression: a session-global temp function would bind whichever
+    * centroids were registered LAST at analysis time, and its registry
+    * entry would pin the broadcast for the session. Scale ceiling: K × dim
+    * doubles must fit executor memory — ~0.5 GB at K = 10⁶, dim 64; the
+    * SemDeDup n/256 policy crosses it near 5×10⁸ vectors, where
+    * [[trainAssignHierarchical]] takes over.
     */
   def assignCell(
       spark: SparkSession,
       cents: Seq[(Long, Seq[Double])],
       vcol: Column
-  ): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    import org.apache.spark.sql.catalyst.expressions.Cast
-    import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    val cids = cents.map(_._1).toArray
-    val mat = cents.map(_._2.toArray).toArray
-    // same left-to-right fold as CosineSimilarity's |b|² accumulation →
-    // identical IEEE double
-    val cnorms = mat.map { c =>
-      var s = 0.0; var i = 0
-      while (i < c.length) { s += c(i) * c(i); i += 1 }
-      math.sqrt(s)
-    }
-    // Build the Column DIRECTLY from the expression — a session-global temp
-    // function would bind whichever centroids were registered LAST at
-    // analysis time, silently mis-assigning any deferred or concurrent use
-    // in the same session.
-    GraftColumnBridge.column(graft.functions.IvfNearestCell(
-      Cast(GraftColumnBridge.expression(vcol), ArrayType(DoubleType)),
-      cids, mat, cnorms))
-  }
+  ): Column = nearestCell(broadcastTable(spark, cents), vcol)
+
+  private type TableBc = org.apache.spark.broadcast.Broadcast[graft.functions.IvfNearestCell.Table]
+
+  private def broadcastTable(spark: SparkSession, cents: Seq[(Long, Seq[Double])]): TableBc =
+    spark.sparkContext.broadcast(graft.functions.IvfNearestCell.table(cents))
+
+  private def nearestCell(bc: TableBc, vcol: Column): Column =
+    GraftColumnBridge.column(graft.functions.IvfNearestCellBc(vectorExpr(vcol), bc))
+
+  private def vectorExpr(vcol: Column) =
+    Cast(GraftColumnBridge.expression(vcol), ArrayType(DoubleType))
 
   /** Run `iters` Lloyd iterations over `e` (columns `vec_id: Long`,
     * `v: Array[Double]`) starting from `seeds`. Cell ids stay the seed ids
     * (stable tiebreak ordering across iterations). Cells keep at least their
     * seed vector assigned (cos(seed, seed) = 1 is the strict max), so no
-    * empty-cell repair is needed when seeds are drawn from the data.
+    * empty-cell repair is needed when seeds are drawn from the data. Each
+    * iteration's centroid table is broadcast, then destroyed once the
+    * iteration's eager mean collect has consumed it, so the executors hold
+    * one table at a time.
     */
   def train(
       spark: SparkSession,
@@ -84,8 +86,9 @@ object IvfKMeans {
     import spark.implicits._
     var cents = seeds
     for (_ <- 0 until iters) {
-      cents = meanUpdate(spark,
-        e.withColumn("cell", assignCell(spark, cents, $"v")))
+      val bc = broadcastTable(spark, cents)
+      cents = meanUpdate(spark, e.withColumn("cell", nearestCell(bc, $"v")))
+      bc.destroy()
     }
     cents
   }
@@ -144,137 +147,25 @@ object IvfKMeans {
       policy: Int => Int
   ): Column = probeCells(spark, cents, vcol, policy(cents.size))
 
-  /** Policy twin of [[probeCellsBc]] — same contract as the policy
-    * [[probeCells]] overload. */
-  def probeCellsBc(
-      spark: SparkSession,
-      cents: Seq[(Long, Seq[Double])],
-      vcol: Column,
-      policy: Int => Int
-  ): Column = probeCellsBc(spark, cents, vcol, policy(cents.size))
-
   /** Top-`nprobe` probe cells for `vcol` — the fused, compiled twin of
     * `transform(slice(array_sort(simStructs(...)), 1, nprobe), p -> p.cid)`
-    * ([[graft.functions.IvfNearestCells]]): one expression node instead of
-    * K cosine trees + a per-row struct sort, bit-identical ordering
-    * (round-6 HALF_UP, lowest-cid ties, NaN cells last by cid). This is
-    * the CORPUS-side probe of the IVF decontamination tier, where every
-    * corpus vector runs it.
+    * ([[graft.functions.IvfNearestCellsBc]]): one expression node over the
+    * broadcast centroid table instead of K cosine trees + a per-row struct
+    * sort, bit-identical ordering (round-6 HALF_UP, lowest-cid ties, NaN
+    * cells last by cid). This is the CORPUS-side probe of the IVF
+    * decontamination tier, where every corpus vector runs it.
     */
   def probeCells(
       spark: SparkSession,
       cents: Seq[(Long, Seq[Double])],
       vcol: Column,
       nprobe: Int
-  ): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    import org.apache.spark.sql.catalyst.expressions.Cast
-    import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    val (cids, mat, cnorms) = centArrays(cents)
-    GraftColumnBridge.column(graft.functions.IvfNearestCells(
-      Cast(GraftColumnBridge.expression(vcol), ArrayType(DoubleType)),
-      cids, mat, cnorms, nprobe))
-  }
+  ): Column = GraftColumnBridge.column(graft.functions.IvfNearestCellsBc(
+    vectorExpr(vcol), broadcastTable(spark, cents), nprobe))
 
-  /** Broadcast-variable twin of [[probeCells]] for quantizers past the
-    * plan-literal cap (same static kernel — bit-parity by construction).
-    */
-  def probeCellsBc(
-      spark: SparkSession,
-      cents: Seq[(Long, Seq[Double])],
-      vcol: Column,
-      nprobe: Int
-  ): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    import org.apache.spark.sql.catalyst.expressions.Cast
-    import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    val bc = spark.sparkContext.broadcast(centArrays(cents))
-    GraftColumnBridge.column(graft.functions.IvfNearestCellsBc(
-      Cast(GraftColumnBridge.expression(vcol), ArrayType(DoubleType)), bc, nprobe))
-  }
-
-  /** (cids, matrix, norms) triple from a centroid Seq — the norm fold is
-    * CosineSimilarity's left-to-right |b|² accumulation (identical IEEE
-    * double, the kernels' bit-parity contract). */
-  private def centArrays(
-      cents: Seq[(Long, Seq[Double])]
-  ): (Array[Long], Array[Array[Double]], Array[Double]) = {
-    val cids = cents.map(_._1).toArray
-    val mat = cents.map(_._2.toArray).toArray
-    val cnorms = mat.map { c =>
-      var s = 0.0; var i = 0
-      while (i < c.length) { s += c(i) * c(i); i += 1 }
-      math.sqrt(s)
-    }
-    (cids, mat, cnorms)
-  }
-
-  /** Broadcast-variable twin of [[assignCell]] for centroid counts past the
-    * plan-literal cap: the SAME static [[graft.functions.IvfNearestCell]]
-    * kernel — bit-parity with the literal path by construction — with the
-    * (cids, matrix, norms) triple riding a TorrentBroadcast instead of the
-    * plan, so every assignment is pure map-side codegen with ONE small
-    * expression node regardless of K. This replaces the former broadcast-
-    * JOIN mechanism (crossJoin + packed-long argmin HashAggregate + vector
-    * re-attach join — three exchanges per assignment). Scale ceiling:
-    * K × dim doubles must fit executor memory — ~0.5 GB at K = 10⁶, dim 64 — the same bound the
-    * join's broadcast build side had; the SemDeDup n/256 policy crosses it
-    * near 5×10⁸ vectors, where [[trainAssignHierarchical]] takes over.
-    */
-  def assignCellBc(
-      spark: SparkSession,
-      cents: Seq[(Long, Seq[Double])],
-      vcol: Column
-  ): Column = assignCellBcHandle(spark, cents, vcol)._1
-
-  private def assignCellBcHandle(
-      spark: SparkSession,
-      cents: Seq[(Long, Seq[Double])],
-      vcol: Column
-  ): (Column, org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Array[Double]], Array[Double])]) = {
-    import org.apache.spark.sql.GraftColumnBridge
-    import org.apache.spark.sql.catalyst.expressions.Cast
-    import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    val cids = cents.map(_._1).toArray
-    val mat = cents.map(_._2.toArray).toArray
-    // same left-to-right fold as CosineSimilarity's |b|² accumulation →
-    // identical IEEE double (the bit-parity contract of the kernel)
-    val cnorms = mat.map { c =>
-      var s = 0.0; var i = 0
-      while (i < c.length) { s += c(i) * c(i); i += 1 }
-      math.sqrt(s)
-    }
-    val bc = spark.sparkContext.broadcast((cids, mat, cnorms))
-    (GraftColumnBridge.column(graft.functions.IvfNearestCellBc(
-      Cast(GraftColumnBridge.expression(vcol), ArrayType(DoubleType)), bc)), bc)
-  }
-
-  /** Broadcast-tier twin of [[train]]: identical Lloyd discipline (same
-    * [[meanUpdate]], same kernel assignment — bit-parity with [[train]] on
-    * the same seeds is BY CONSTRUCTION, both paths run the same static
-    * kernel), with each iteration's centroid triple broadcast as a
-    * variable and destroyed once the iteration's eager mean collect has
-    * consumed it, so peak executor footprint stays one centroid table.
-    */
-  def trainBc(
-      spark: SparkSession,
-      e: DataFrame,
-      seeds: Seq[(Long, Seq[Double])],
-      iters: Int
-  ): Seq[(Long, Seq[Double])] = {
-    import spark.implicits._
-    var cents = seeds
-    for (_ <- 0 until iters) {
-      val (cellCol, bc) = assignCellBcHandle(spark, cents, $"v")
-      cents = meanUpdate(spark, e.withColumn("cell", cellCol))
-      bc.destroy() // consumed by meanUpdate's collect; next iter re-broadcasts
-    }
-    cents
-  }
-
-  /** Hierarchical coarse quantizer for K past [[assignCellBc]]'s
+  /** Hierarchical coarse quantizer for K past [[assignCell]]'s
     * executor-memory ceiling: stage 1 trains `coarseK` cells through the
-    * broadcast-variable kernel path and assigns every vector once (pure
+    * broadcast-variable kernel and assigns every vector once (pure
     * map-side); stage 2 trains per-coarse-cell sub-centroids
     * (count-adaptive: ⌈n_c/256⌉ per cell, seeds = the cell's lowest-vec_id
     * vectors) with the SAME pinned Lloyd discipline (fixed iterations,
@@ -320,13 +211,13 @@ object IvfKMeans {
         // bounded: coarseK ≈ √K rows through the driver — the same rows
         // any broadcast build would ship through it
         .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1)))
-    val cCents = trainBc(spark, e, cSeeds, iters)
+    val cCents = train(spark, e, cSeeds, iters)
     val ansi = spark.conf.get("spark.sql.ansi.enabled").toBoolean
     e.select($"vec_id", $"v")
       // a null vector has a null coarse cell and never met a sub-centroid
       // in the equi-join formulation
       .filter($"v".isNotNull)
-      .withColumn("ccell", assignCellBc(spark, cCents, $"v"))
+      .withColumn("ccell", assignCell(spark, cCents, $"v"))
       .repartition($"ccell")
       .sortWithinPartitions($"ccell", $"vec_id")
       .mapPartitions(rows => SubCellKernel.run(rows, iters, ansi, out))(

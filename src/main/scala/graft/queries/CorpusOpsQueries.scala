@@ -39,21 +39,18 @@ object CorpusOpsQueries {
     * Scale shape: K is count-adaptive (K = ceil(n/256)) so expected cell
     * occupancy stays ~256 and within-cell pairs stay O(n) — ~128 pairs per
     * vector regardless of corpus size (the quadratic-per-cell cost is
-    * bounded by the quantizer, which is the SemDeDup design point). Three
-    * assignment strategies behind one K policy (`strategy` forces a branch
-    * for gating; "auto" picks by scale):
-    *  - K ≤ 1024: centroids baked as plan literals, assignment is pure
-    *    map-side codegen ([[graft.operators.IvfKMeans.assignCell]]).
-    *  - K ≤ 2×10⁶ (or "table"): the SAME static nearest-cell kernel with
-    *    the centroid matrix riding a broadcast VARIABLE
-    *    ([[graft.operators.IvfKMeans.assignCellBc]]/`trainBc`) — no
-    *    multi-MB literal plan, and pure map-side assignment (no crossJoin,
-    *    no argmin aggregate, no re-attach join); bit-identical to the
-    *    literal path BY CONSTRUCTION (`Round10OpsSpec` proves it
-    *    end-to-end; q_semdedup_table shares q_semdedup's oracle).
-    *    BENCH_SCALING ("Round-10 scale point: SemDeDup past the
-    *    plan-literal cap") records this branch past the 262k-vector
-    *    literal cap.
+    * bounded by the quantizer, which is the SemDeDup design point). Two
+    * quantizers behind one K policy (`strategy` forces a branch for gating;
+    * "auto" picks by scale):
+    *  - K ≤ 2×10⁶ (or "table", which keeps it past that K): flat Lloyd
+    *    training and assignment through ONE static nearest-cell kernel, the
+    *    centroid matrix riding a broadcast VARIABLE
+    *    ([[graft.operators.IvfKMeans.train]]/`assignCell`) — pure map-side
+    *    assignment (no crossJoin, no argmin aggregate, no re-attach join)
+    *    and one expression node in the plan at any K. q_semdedup_table
+    *    shares q_semdedup's oracle. BENCH_SCALING ("Round-10 scale point:
+    *    SemDeDup past the plan-literal cap") records this mechanism at
+    *    262k+ vectors.
     *  - K > 2×10⁶ (or "hier"): the centroid matrix outgrows the executor
     *    ceiling (~0.5 GB/10⁶ centroids ⇒ ≈5×10⁸ vectors under n/256), so
     *    the quantizer goes hierarchical: ⌈√K⌉ coarse cells via the
@@ -71,7 +68,7 @@ object CorpusOpsQueries {
     *    (still valid) cells, so this branch has its OWN oracle
     *    (q_semdedup_hier replays both k-means stages in SQL); the
     *    within-cell dedup semantics — the SemDeDup contract — are the
-    *    same code in all three branches.
+    *    same code in both branches.
     * The pair join shuffles each vector payload once per side into its cell
     * partition (2n rows), strictly cheaper than re-attaching vectors to the
     * ~128n candidate pairs by id. The oracle replays the SAME count-driven
@@ -107,26 +104,13 @@ object CorpusOpsQueries {
       // (round 12, isolated 3-trial medians, calibrated): checkpoint 5.24
       // vs persist 4.97 units on q_semdedup_hier (the join formulation of
       // its stage 2) — the hygiene guarantee costs ~5% here, paid knowingly.
-      val assigned = (if (k <= 1024L && strategy == "auto") {
-        // plan-literal fast path: collect is K×64 doubles, bounded by the cap
-        val seeds: Seq[(Long, Seq[Double])] =
-          seedPool.collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1)))
-        val cents = IvfKMeans.train(s, e, seeds, iters = 2)
-        e.withColumn("cell", IvfKMeans.assignCell(s, cents, $"v"))
-      } else {
-        // broadcast tier (1024 < K ≤ 2e6): the SAME static nearest-cell
-        // kernel as the literal path (bit-parity by construction — the
-        // shared oracle certifies it), with the centroid matrix riding a
-        // broadcast VARIABLE instead of the plan, so every assignment is
-        // pure map-side — no crossJoin, no argmin aggregate, no vector
-        // re-attach join. The driver collect is K rows (≤ ~1 GB at the 2e6
-        // policy ceiling) — the same rows any broadcast build ships
-        // through the driver.
-        val seeds: Seq[(Long, Seq[Double])] =
-          seedPool.collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1)))
-        val cents = IvfKMeans.trainBc(s, e, seeds, iters = 2)
-        e.withColumn("cell", IvfKMeans.assignCellBc(s, cents, $"v"))
-      }).localCheckpoint()
+      // The driver collect is K rows (≤ ~1 GB at the 2e6 policy ceiling) —
+      // the same rows any broadcast build ships through the driver.
+      val seeds: Seq[(Long, Seq[Double])] =
+        seedPool.collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1)))
+      val cents = IvfKMeans.train(s, e, seeds, iters = 2)
+      val assigned = e.withColumn("cell", IvfKMeans.assignCell(s, cents, $"v"))
+        .localCheckpoint()
       // Within-cell exact dedup as ONE aggregate (round 21): the former cell
       // self-join (two cell-partitioned exchanges + two sorts + ~128n pair
       // rows through the cosine filter) + separate n_vecs aggregate + left
@@ -1018,16 +1002,15 @@ object CorpusOpsQueries {
       Some(bpeApplySql)
     ),
 
-    // see `semdedup` above: scale-adaptive strategy (literal → table → hier)
+    // see `semdedup` above: scale-adaptive strategy (flat table → hier)
     "q_semdedup" -> QueryDef(
       (s, d) => semdedup(s, d, strategy = "auto"),
       Some(semdedupOracleSql)
     ),
 
-    // Same operator forced through the centroid-table broadcast-join path
-    // (the 1024 < K ≤ 2e6 production branch), gated at every sf by the SAME
-    // oracle — the cross-engine hash match certifies the two assignment
-    // strategies are bit-identical where they overlap.
+    // Same operator pinned to the flat broadcast-table quantizer even past
+    // K = 2e6, where "auto" goes hierarchical; below that K it runs
+    // q_semdedup's mechanism and is gated at every sf by the SAME oracle.
     "q_semdedup_table" -> QueryDef(
       (s, d) => semdedup(s, d, strategy = "table"),
       Some(semdedupOracleSql)

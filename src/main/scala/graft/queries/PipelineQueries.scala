@@ -304,112 +304,33 @@ object PipelineQueries {
     * POLICY in SQL — unlike the pinned-band-width trio there is no scale
     * point where oracle and engine diverge.
     *
-    * Probe mechanism switches on bitmap size:
-    *  - ≤ `LiteralProbeMaxWords` (2^20 bits = 133 KB): the bitmap bakes
-    *    into the plan as a literal array → MAP-ONLY codegen'd bit tests,
-    *    no join, no corpus shuffle.
-    *  - beyond: two broadcast left-outer joins on the 63-bit word index —
-    *    still no corpus shuffle, and the broadcast is the words table
-    *    (m/63 rows), bounded by the policy at ~2 MB per 2^27 bits.
-    * Both mechanisms are row-identical (spec-proven via `forceJoinProbe`).
+    * Probe: the bitmap words ship once as a broadcast variable and every
+    * corpus gram is tested by the codegen'd [[graft.functions.BloomBcAnyHit]]
+    * kernel over a one-element array — the stream gate's kernel
+    * ([[streamBloomGate]]), so the batch and stream flags share one
+    * mechanism at every bitmap size: map-only, no word-index join, no
+    * corpus shuffle. The hashes are md5 words, which the DuckDB oracle
+    * rebuilds bit for bit.
     *
     * `mBitsOverride` pins the bitmap size explicitly (a power of two), the
     * same opt-out the band-width policy exposes.
-    *
-    * `fastHash = true` is the PRODUCTION hash path: the two probe values
-    * come from seeded codegen'd xxhash64 instead of md5-hex words. md5 is
-    * only the cross-engine parity contract (DuckDB must rebuild the
-    * identical bitmap); a deployment that doesn't need DuckDB-reproducible
-    * flags gets the same plan, the same false-negative-free guarantee, and
-    * the same sizing policy with a cheaper probe (measured at sf1:
-    * 8.0 s → 5.6 s, 1.42×, BENCH_SCALING round 7 — the hash
-    * is real but NOT dominant; the gram explode and aggregates are the
-    * floor, so the old "3-5× cheaper" folklore overstated it). Flagged docs
-    * can differ ONLY in the false-positive minority (different hash,
-    * different collisions); exact_hit rows are hash-independent.
     */
   private[graft] def bloomDecontaminate(
       s: SparkSession,
       d: String,
-      mBitsOverride: Option[Long] = None,
-      forceJoinProbe: Boolean = false,
-      fastHash: Boolean = false
+      mBitsOverride: Option[Long] = None
   ): DataFrame = {
     import s.implicits._
-    mBitsOverride.foreach(m => require(m >= 64 && (m & (m - 1)) == 0 && m <= (1L << 32),
-      s"mBitsOverride must be a power of two in [64, 2^32] (got $m)"))
-    val benchGrams = grams5(documents(s, d).filter(pmod($"doc_id", lit(31)) === 0))
-      .select($"g").distinct()
+    val bench = benchGrams(s, d)
       // used three times (sizing count, bitmap build, exact-hit arm) and
       // bounded by the BENCHMARK gram set: materialize once as an eager
       // checkpoint — a persist here outlived the fn because the returned
       // plan's exact-hit arm reads it (CacheHygieneSpec pins no-residue)
       .localCheckpoint()
-    val nGrams = benchGrams.count()
-    val mBits = mBitsOverride.getOrElse(bloomPolicyBits(nGrams))
-    // two probe hashes per gram: md5 hex words (oracle-reproducible) or
-    // seeded xxhash64 (production; mBits is a power of two ≤ 2^32 so the
-    // pmod keeps the same uniformity)
-    def hashes(g: org.apache.spark.sql.Column): (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =
-      (pmod(xxhash64(g), lit(mBits)), pmod(xxhash64(lit(1), g), lit(mBits)))
-    // md5 arm: the fused BloomPair kernel emits [h1, h2] straight from the
-    // digest bytes — bit-identical to the former
-    // conv(substring(md5(g), 1|9, 8), 16, 10) % mBits pair (the
-    // BloomBcAnyHit identity; Round11OpsSpec pins it), skipping the hex
-    // string + two substrings + two conv parses per gram
-    val pairCol = graft.functions.BloomPair.bloomPair(s, $"g", mBits)
-    val wordsDf = {
-      val bits =
-        if (fastHash) { val (b1, b2) = hashes($"g"); explode(array(b1, b2)) }
-        else explode(pairCol)
-      benchGrams
-        .select(bits.as("bit"))
-        .groupBy(expr("bit div 63").as("w"))
-        .agg(expr("bit_or(shiftleft(1L, CAST(bit % 63 AS INT)))").as("word"))
-    }
-    val probeBase = {
-      val base = grams5(documents(s, d).filter(pmod($"doc_id", lit(31)) =!= 0))
-      if (fastHash) {
-        val (p1, p2) = hashes($"g")
-        base.withColumn("h1", p1).withColumn("h2", p2)
-      } else base
-        // own projection: the kernel is non-cheap and referenced twice, so
-        // CollapseProject keeps it materialized once per gram
-        .withColumn("hp", pairCol)
-        .select($"doc_id", $"g",
-          element_at($"hp", 1).as("h1"), element_at($"hp", 2).as("h2"))
-    }
-    val nWords = ((mBits + 62) / 63).toInt
-    val probed =
-      if (nWords <= LiteralProbeMaxWords && !forceJoinProbe) {
-        val words = Array.fill(nWords)(0L)
-        wordsDf.collect() // bounded: ≤ nWords ≤ 2^20/63 rows, 16 B each
-          .foreach(r => words(r.getLong(0).toInt) = r.getLong(1))
-        // ONE Literal node holding the whole array — a CreateArray of 16k
-        // child literals costs measurable analysis + constant folding on
-        // every plan construction (benched +50% on this query at sf0.1)
-        val bm = typedlit(words.toIndexedSeq)
-        probeBase.withColumn("bloom_g",
-          (element_at(bm, ($"h1" / 63).cast("int") + 1)
-            .bitwiseAND(expr("shiftleft(1L, CAST(h1 % 63 AS INT))")) =!= 0) &&
-          (element_at(bm, ($"h2" / 63).cast("int") + 1)
-            .bitwiseAND(expr("shiftleft(1L, CAST(h2 % 63 AS INT))")) =!= 0))
-      } else {
-        probeBase
-          .withColumn("w1", expr("h1 div 63"))
-          .withColumn("w2", expr("h2 div 63"))
-          .join(broadcast(wordsDf.select($"w".as("w1"), $"word".as("word1"))),
-            Seq("w1"), "left_outer")
-          .join(broadcast(wordsDf.select($"w".as("w2"), $"word".as("word2"))),
-            Seq("w2"), "left_outer")
-          .withColumn("bloom_g",
-            (coalesce($"word1", lit(0L))
-              .bitwiseAND(expr("shiftleft(1L, CAST(h1 % 63 AS INT))")) =!= 0) &&
-            (coalesce($"word2", lit(0L))
-              .bitwiseAND(expr("shiftleft(1L, CAST(h2 % 63 AS INT))")) =!= 0))
-      }
-    probed
-      .join(broadcast(benchGrams.withColumn("bench_g", lit(true))),
+    val (_, bloomHit) = bloomGate(s, bench, mBitsOverride)
+    grams5(documents(s, d).filter(pmod($"doc_id", lit(31)) =!= 0))
+      .withColumn("bloom_g", bloomHit(array($"g")))
+      .join(broadcast(bench.withColumn("bench_g", lit(true))),
         Seq("g"), "left_outer")
       .groupBy($"doc_id")
       .agg(sum(when($"bloom_g", 1L).otherwise(0L)).as("n_bloom_grams"),
@@ -420,12 +341,23 @@ object PipelineQueries {
       .orderBy($"doc_id")
   }
 
-  /** Literal-probe cap: 2^20 bits / 63 ≈ 16.6k words ≈ 133 KB of plan
-    * literals (folded once by ConstantFolding). Beyond this the bitmap
-    * probes via broadcast word-index joins instead of plan literals —
-    * multi-MB array literals are where analysis/codegen plan size hurts.
-    */
-  private[graft] val LiteralProbeMaxWords: Int = (((1L << 20) + 62) / 63).toInt
+  /** The benchmark side of Bloom decontamination: the distinct 5-grams of
+    * every 31st document. */
+  private def benchGrams(s: SparkSession, d: String): DataFrame =
+    grams5(documents(s, d).filter(pmod(col("doc_id"), lit(31)) === 0))
+      .select(col("g")).distinct()
+
+  /** Size the bitmap for `bench` (or take `mBitsOverride`), build its words
+    * and return the size with the broadcast any-hit gate over a gram-array
+    * column. `bench` is read twice (the policy count, then the words). */
+  private def bloomGate(
+      s: SparkSession, bench: DataFrame, mBitsOverride: Option[Long]
+  ): (Long, org.apache.spark.sql.Column => org.apache.spark.sql.Column) = {
+    mBitsOverride.foreach(m => require(m >= 64 && (m & (m - 1)) == 0 && m <= (1L << 32),
+      s"mBitsOverride must be a power of two in [64, 2^32] (got $m)"))
+    val mBits = mBitsOverride.getOrElse(bloomPolicyBits(bench.count()))
+    (mBits, graft.functions.BloomBcProbe.gate(s, collectBloomWords(bench, mBits), mBits))
+  }
 
   /** The occupancy-adaptive bitmap sizing policy: ≥64 bits per benchmark
     * gram (next power of two), floored at 2^16, capped at 2^32 — see
@@ -438,7 +370,7 @@ object PipelineQueries {
     m
   }
 
-  /** Bitmap build shared by every probe mechanism: md5-word bits OR'd into
+  /** Bitmap build behind [[bloomGate]]: md5-word bits OR'd into
     * 63-bit words, collected to one driver array. Bounded by the words that
     * are actually SET (≤ 2·nGrams rows over the wire); the dense array is
     * ≤ 545 MB at the policy's 2^32 cap — the driver must hold one copy,
@@ -458,61 +390,28 @@ object PipelineQueries {
     words
   }
 
-  /** The STREAM-side decontamination gate with its mechanism policy: builds
-    * the benchmark Bloom bitmap and returns a closure mapping a gram-array
-    * column to the any-hit boolean, choosing the probe mechanism by size —
-    *  - mBits ≤ 2^18: plan-literal bitmap + `exists` bit tests (map-only,
-    *    the round-7 stateless-stream shape — fine while the bitmap is small
-    *    enough that the interpreted per-gram lambda doesn't matter);
-    *  - beyond (or `forceBroadcast`): [[graft.functions.BloomBcProbe]] — the
-    *    words array ships as a TorrentBroadcast and a codegen'd expression
-    *    probes it per doc. Same hashes, same words, row-identical flags
-    *    (Round11OpsSpec proves bit-parity at a forced 2^28; the oracle-gated
-    *    q_stream_decontaminate_bc key forces this branch at every sf).
-    * The threshold is MEASURED, not a viability cliff: the broadcast probe
-    * is faster wherever tried — 1.47 vs 2.09 s at 2^20 bits (sf0.1), 6.75
-    * vs 10.87 s at 2^23 (sf1) — because the compiled any-hit loop beats the
-    * interpreted `exists` lambda's per-gram expression walk; the literal's
-    * hard viability ceiling (driver/plan cost, formerly the 2^27 fail-fast)
-    * sits far above the point where it stops winning. 2^18 keeps the tiny
-    * test corpora (sf ≤ 0.01) on the literal so the driver's sf0.01 gate
-    * exercises BOTH mechanisms (default literal + forced broadcast twin).
-    * `mBitsOverride` pins the size (testing / deployment opt-out), same as
-    * the batch probe's override.
+  /** The STREAM-side decontamination gate: builds the benchmark Bloom
+    * bitmap under the batch probe's sizing policy and returns its size with
+    * a closure mapping a gram-array column to the any-hit boolean. The words array
+    * ships as a TorrentBroadcast and [[graft.functions.BloomBcProbe]]'s
+    * codegen'd expression probes it per doc, at every bitmap size — the
+    * compiled any-hit loop beat the plan-literal `exists` lambda wherever
+    * the two were measured (1.47 vs 2.09 s at 2^20 bits at sf0.1, 6.75 vs
+    * 10.87 s at 2^23 at sf1; BENCH_SCALING round 11). Same hashes and words
+    * as [[bloomDecontaminate]], so batch and stream flags agree.
+    * `mBitsOverride` pins the size, same as the batch probe's override.
     */
   private[graft] def streamBloomGate(
       s: SparkSession,
       d: String,
-      forceBroadcast: Boolean = false,
       mBitsOverride: Option[Long] = None
   ): (Long, org.apache.spark.sql.Column => org.apache.spark.sql.Column) = {
-    import s.implicits._
-    mBitsOverride.foreach(m => require(m >= 64 && (m & (m - 1)) == 0 && m <= (1L << 32),
-      s"mBitsOverride must be a power of two in [64, 2^32] (got $m)"))
-    val benchGrams = grams5(documents(s, d).filter(pmod($"doc_id", lit(31)) === 0))
-      .select($"g").distinct()
+    val bench = benchGrams(s, d)
       // two passes are inherent (the policy count must fix mBits BEFORE
       // the words hash with it) — persist so the gram explode runs once
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val mBits = mBitsOverride.getOrElse(bloomPolicyBits(benchGrams.count()))
-    val words = collectBloomWords(benchGrams, mBits)
-    benchGrams.unpersist(blocking = false)
-    if (!forceBroadcast && mBits <= (1L << 18)) {
-      val bm = typedlit(words.toIndexedSeq)
-      // dynamic 1L << (h % 63) as a 63-entry mask literal — the Scala DSL
-      // shiftleft only takes a literal shift, and a lambda-bound column
-      // can't ride an expr() string
-      val masks = typedlit((0 until 63).map(1L << _))
-      def bitTest(h: org.apache.spark.sql.Column) =
-        element_at(bm, (h / 63).cast("int") + 1)
-          .bitwiseAND(element_at(masks, (h % 63).cast("int") + 1)) =!= 0
-      def hw(g: org.apache.spark.sql.Column, off: Int) =
-        conv(substring(md5(g), off, 8), 16, 10).cast("long") % mBits
-      (mBits, (grams: org.apache.spark.sql.Column) =>
-        exists(grams, g => bitTest(hw(g, 1)) && bitTest(hw(g, 9))))
-    } else {
-      (mBits, graft.functions.BloomBcProbe.gate(s, words, mBits))
-    }
+    try bloomGate(s, bench, mBitsOverride)
+    finally bench.unpersist(blocking = false)
   }
 
   /** Exact broadcast-needle arm of semantic decontamination — the mechanism
@@ -574,7 +473,7 @@ object PipelineQueries {
     *     (localCheckpoint — the IVF build artifact a production pipeline
     *     writes out);
     *  3. each corpus vector probes its nprobe=2 nearest cells (map-side: the
-    *     centroids ride the plan) and meets ONLY those cells' needles via a
+    *     centroids ride a broadcast variable) and meets ONLY those cells' needles via a
     *     SHUFFLE-HASH cell equi-join — the needle side is explicitly NOT
     *     broadcast (that is the exact tier's mechanism; this tier exists for
     *     needle sets past it), and per-vector comparisons are the probed
@@ -589,10 +488,10 @@ object PipelineQueries {
     * arithmetic on the needle COUNT so the oracle computes the identical
     * policy in SQL: seed stride 8 (K ≈ n/8) up to 4096 needles — keeps K ≥ 2
     * at the test scales so the cell route is genuinely exercised — and 256
-    * (K ≈ n/256, the SemDeDup occupancy policy) beyond. When K itself
-    * outgrows plan literals, the assignment swaps to the broadcast-variable
-    * kernel and then the hierarchical quantizer — the identical 3-tier
-    * ladder `q_semdedup_table`/`q_semdedup_hier` force.
+    * (K ≈ n/256, the SemDeDup occupancy policy) beyond. The centroid
+    * table rides a broadcast variable at every K (the kernels of
+    * `q_semdedup`); past the executor-memory ceiling the quantizer would go
+    * hierarchical, as `q_semdedup_hier` forces.
     *
     * The price is exact recall: a needle in an unprobed cell is invisible.
     * `q_decontaminate_semantic_recall` MEASURES that loss against the exact
@@ -667,13 +566,10 @@ object PipelineQueries {
     val corpus = e.filter(pmod($"vec_id", lit(needleMod)) =!= 0)
       // spread the compact test scan (same note as the exact arm)
       .repartition($"vec_id")
-      // fused top-2 probe (one compiled loop; bit-identical to the
-      // composed slice(array_sort(simStructs)) route — Round12OpsSpec) —
-      // literal tier while K fits the plan, broadcast-variable twin past
-      // it, the same ladder as assignCell/assignCellBc
-      .withColumn("cell", explode(
-        if (cents.size <= 1024) IvfKMeans.probeCells(s, cents, $"v", nprobe)
-        else IvfKMeans.probeCellsBc(s, cents, $"v", nprobe)))
+      // fused top-nprobe probe over the broadcast centroid table (one
+      // compiled loop; bit-identical to the composed
+      // slice(array_sort(simStructs)) route — Round12OpsSpec)
+      .withColumn("cell", explode(IvfKMeans.probeCells(s, cents, $"v", nprobe)))
       .select($"vec_id", $"v", $"cell")
     val low = (1L << 41) - 1L
     // ONE fused argmax per (corpus vector × probed cell): the cell's
@@ -1023,7 +919,7 @@ object PipelineQueries {
         if (maxAbs == 0.0) expr("transform(v, x -> 0L)")
         else transform($"v", x => floor(x * 127.0 / maxAbs + 0.5)))
       .withColumn("qn", graft.functions.CodeDot.codeDot(s, col("qv8"), col("qv8")))
-    // the stored index: cell (map-side literal kernel) + int8 codes
+    // the stored index: cell (map-side broadcast kernel) + int8 codes
     val cBase = quant(e).withColumn("bucket", IvfKMeans.assignCell(s, cents, $"v"))
     // query side: one row per probed cell (the ann_ivf probe policy)
     val q = quant(e.filter($"vec_id" < 10))
@@ -2958,7 +2854,7 @@ object PipelineQueries {
       // adaptive shortlist (max(15, ⌈candidates/8⌉)) pays the
       // full-precision rescore for the final top-3. Every stage is an
       // existing oracle-gated mechanism composed unchanged: the ann_ivf
-      // trainer (pinned Lloyd, plan-literal centroid assignment —
+      // trainer (pinned Lloyd, broadcast-table centroid assignment —
       // zero-shuffle cell routing), the quantized tier's symmetric
       // global-scale codes and norm-corrected shortlist
       // (quantizedShortlistFrom — the query side here carries one row per
@@ -3299,10 +3195,10 @@ object PipelineQueries {
       // sf0.01, 16 at sf0.1), refined by 2 fixed Lloyd iterations
       // (graft.operators.IvfKMeans: distributed assign + decimal-sum means,
       // rounded so the oracle replays them bit-for-bit). The trained
-      // centroids bake into the plan as array literals, so nearest-centroid
-      // assignment of the N candidate vectors is pure map-side codegen (K
-      // fused cosine loops per row, ZERO shuffle — the property that makes
-      // IVF viable at 100 TB). Queries probe their nprobe=2 nearest cells;
+      // centroids ride a broadcast variable into one fused nearest-cell
+      // expression, so assignment of the N candidate vectors is pure
+      // map-side codegen (K cosine loops per row, ZERO shuffle — the
+      // property that makes IVF viable at 100 TB). Queries probe their nprobe=2 nearest cells;
       // candidates come from an equi-join on cell id against the broadcast
       // probe list, so ~2N/K vectors are reranked exactly instead of N.
       (s, d) => {
@@ -5275,13 +5171,12 @@ object PipelineQueries {
       // q_decontaminate: benchmark 5-grams fold into a Bloom bitmap (k = 2
       // md5-derived hashes over 63-bit words — DuckDB overflow-checks
       // 1 << 63, and the oracle must rebuild the identical bitmap; md5 is
-      // likewise the parity contract, not the fast choice: the
-      // `fastHash = true` xxhash64 path measures 1.42× end-to-end at sf1,
-      // BENCH_SCALING round 7). The bitmap is sized by
-      // the occupancy-adaptive policy and probed map-side via plan
-      // literals (or broadcast word joins past the literal cap) — see
-      // [[bloomDecontaminate]] for the policy, the saturation measurement
-      // that forced it, and the mechanism switch. False negatives are
+      // likewise the parity contract, not the fast choice: an xxhash64
+      // probe measured 1.42× end-to-end at sf1, BENCH_SCALING round 7).
+      // The bitmap is sized by the occupancy-adaptive policy and probed
+      // map-side by the broadcast-variable kernel the stream gate uses —
+      // see [[bloomDecontaminate]] for the policy and the saturation
+      // measurement that forced it. False negatives are
       // structurally impossible and the oracle proves it: DuckDB recomputes
       // the same sizing policy and bitmap from scratch in SQL at EVERY
       // scale, so any construction/probe/sizing bug breaks the hash
@@ -5976,7 +5871,7 @@ object PipelineQueries {
       // oracle and rounded to 4 dp like q_knn_graph. Scale shape: the
       // centroid aggregate is bounded by #labels × 64 dims and partial-
       // aggregates map-side; the collected centroids bake into the scoring
-      // pass as plan literals (the IvfKMeans pattern), so scoring is pure
+      // pass as plan literals (as IvfKMeans.simStructs does), so scoring is pure
       // map — no join, no fan-out rows, the corpus never shuffles. At
       // 100 TB the int64 component sums hold to ~9e12 vectors per label
       // (|x| ≤ ~1 → ~1e6/component); beyond that, DECIMAL(38,0) partials.
@@ -5993,7 +5888,7 @@ object PipelineQueries {
         // caching the whole corpus is infeasible anyway (the scan is the
         // cheap part; CacheHygieneSpec pins the no-residue contract).
         // centroid sums are bounded (#labels × 64 dims): collect, sort by
-        // label, and bake as plan literals — the IvfKMeans centroid
+        // label, and bake as plan literals — IvfKMeans.simStructs'
         // pattern. Scoring then needs no join at all: one map-side pass
         // computes all #labels cosines per row and reduces own/best-other
         // inside the row.

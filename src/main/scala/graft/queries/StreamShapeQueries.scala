@@ -44,20 +44,14 @@ object StreamShapeQueries {
     dir.toString
   }
 
-  /** Shared body of q_stream_decontaminate and its forced-broadcast twin:
-    * stateless stream projection flagging each arriving doc against the
-    * benchmark Bloom bitmap. The probe mechanism (plan literal vs broadcast
-    * variable) comes from `PipelineQueries.streamBloomGate`'s size policy;
-    * `forceBroadcast` pins the broadcast-variable branch so it is oracle-gated at
-    * every sf even though the test corpora size the bitmap small — the
-    * q_semdedup_table pattern. Flags are mechanism-invariant (same hashes,
-    * same words), so both keys share one oracle.
+  /** Body of q_stream_decontaminate (and q_stream_decontaminate_bc, which
+    * runs the same mechanism): stateless stream projection flagging each
+    * arriving doc against the benchmark Bloom bitmap through
+    * `PipelineQueries.streamBloomGate`'s broadcast-variable probe.
     */
-  private def streamDecontaminate(
-      s: SparkSession, d: String, forceBroadcast: Boolean): DataFrame = {
+  private def streamDecontaminate(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (_, bloomHit) = graft.queries.PipelineQueries
-      .streamBloomGate(s, d, forceBroadcast = forceBroadcast)
+    val (_, bloomHit) = graft.queries.PipelineQueries.streamBloomGate(s, d)
     val name = "q_stream_decon_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
     graft.streaming.StreamOps.withRightSizedStreaming(s, 4, noDataBatches = false) {
@@ -372,29 +366,25 @@ object StreamShapeQueries {
       // against the benchmark Bloom bitmap inside a STATELESS stream
       // projection. No state store, no watermark, no stream-static join:
       // the ingest-firehose filter shape, where a constant-size sketch
-      // rides the plan (literal) or the executors (broadcast variable,
-      // past 2^18 bits — see streamBloomGate's measured policy) and each doc is
-      // flagged the moment it arrives (the batch variant
+      // rides the executors as a broadcast variable (see streamBloomGate)
+      // and each doc is flagged the moment it arrives (the batch variant
       // q_decontaminate_bloom is the backfill twin — same bitmap policy,
       // same hashes, same flags). The oracle recomputes the sizing policy
       // and bitmap in SQL, so construction, policy and probe are all
       // hash-verified at every scale; false negatives remain structurally
       // impossible.
-      (s, d) => streamDecontaminate(s, d, forceBroadcast = false),
+      (s, d) => streamDecontaminate(s, d),
       Some(streamDecontaminateOracle)
     ),
 
     "q_stream_decontaminate_bc" -> QueryDef(
-      // FORCED broadcast-variable mechanism: the probe
-      // (graft.functions.BloomBcAnyHit — words array as TorrentBroadcast,
-      // codegen'd per-doc any-hit loop) pinned on regardless of the policy
-      // size, so the production branch for benchmark-scale needle sets
-      // (MMLU+GSM8K+HumanEval is O(10⁶⁺) grams → bitmap past the literal
-      // ceiling) is oracle-gated at every sf — the q_semdedup_table
-      // pattern. Mechanism-invariant flags ⇒ shares the policy oracle;
-      // Round11OpsSpec additionally proves literal↔broadcast bit-parity at
-      // a real 2^28-bit size.
-      (s, d) => streamDecontaminate(s, d, forceBroadcast = true),
+      // The broadcast-variable probe (graft.functions.BloomBcAnyHit —
+      // words array as TorrentBroadcast, codegen'd per-doc any-hit loop),
+      // the one mechanism q_stream_decontaminate also runs at every bitmap
+      // size; kept as a declared key with the shared policy oracle.
+      // Round11OpsSpec proves bit-parity with the composed
+      // md5/conv/element_at bit test at a real 2^28-bit size.
+      (s, d) => streamDecontaminate(s, d),
       Some(streamDecontaminateOracle)
     ),
 
@@ -740,7 +730,7 @@ object StreamShapeQueries {
       // The STREAMING curation ingest — q_corpus_curate's production twin:
       // incoming shards flow through the quality gate (q_quality_gopher's
       // four integer rules) and the benchmark Bloom decontamination probe
-      // (q_stream_decontaminate's plan-literal bitmap, same policy/hashes)
+      // (q_stream_decontaminate's broadcast bitmap, same policy/hashes)
       // as STATELESS stream transforms, then into the durable-fingerprint
       // ingest-dedup loop (IngestDedup: within-batch min-id dedup, corpus ∪
       // store anti-join, idempotent dual write, bucketed zero-Exchange

@@ -74,14 +74,41 @@ object Tables {
   def orders(s: SparkSession, d: String): DataFrame = table(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
 
-  /** `events.ts` is ns-precision parquet, which Spark 4 refuses to read as a
-    * timestamp. Read nanos as long and truncate to µs (integer `div`, exact on
-    * int64 — a double division would lose precision at 1e18), which matches
-    * DuckDB's ns→µs truncation for oracle parity.
+  /** `events` with `ts` normalized to TimestampType ([[normalizeEventTs]]).
+    * Spark 4 refuses to read a ns-precision parquet timestamp, so when the
+    * footer holds one the session gets `spark.sql.legacy.parquet.nanosAsLong`
+    * (the scan reads it at execution time too) and the nanos are truncated
+    * to µs. A µs file — every local corpus — leaves the session conf alone.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val path = s"$d/events.parquet"
+    if (hasNanosTimestamp(s, path)) s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     normalizeEventTs(table(s, d, "events"))
+  }
+
+  /** True when the footer of the parquet file at `path` (or of the first
+    * data file of a flat directory there) declares a TIMESTAMP(NANOS) column. */
+  private def hasNanosTimestamp(spark: SparkSession, path: String): Boolean = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(conf)
+    val file =
+      if (!fs.getFileStatus(p).isDirectory) Some(p)
+      else fs.listStatus(p).filter(_.isFile).map(_.getPath)
+        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+        .sortBy(_.getName).headOption
+    file.exists { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+      try reader.getFooter.getFileMetaData.getSchema.getColumns.asScala.exists(
+        _.getPrimitiveType.getLogicalTypeAnnotation match {
+          case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+          case _ => false
+        })
+      finally reader.close()
+    }
   }
 
   /** Normalize `ts` to session-TZ TimestampType regardless of how the parquet

@@ -22,9 +22,9 @@ object HierJoinReference {
       e.filter($"vec_id" % 97 === 0).orderBy($"vec_id").limit(coarseK)
         .select($"vec_id", $"v")
         .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1)))
-    val cCents = IvfKMeans.trainBc(spark, e, cSeeds, iters)
+    val cCents = IvfKMeans.train(spark, e, cSeeds, iters)
     val ev = e
-      .withColumn("ccell", IvfKMeans.assignCellBc(spark, cCents, $"v"))
+      .withColumn("ccell", IvfKMeans.assignCell(spark, cCents, $"v"))
       .localCheckpoint()
     val byCell = Window.partitionBy($"ccell")
     var sc = ev

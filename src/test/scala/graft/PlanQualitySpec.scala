@@ -169,8 +169,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // per row) with no join or exchange introduced by the probe itself
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val (_, probe) = queries.PipelineQueries
-      .streamBloomGate(spark, sfDir, forceBroadcast = true)
+    val (_, probe) = queries.PipelineQueries.streamBloomGate(spark, sfDir)
     val df = spark.read.parquet(s"$sfDir/documents.parquet")
       .filter(pmod($"doc_id", lit(31)) =!= 0)
       .select($"doc_id", split($"text", " ").as("tok"))
@@ -336,8 +335,8 @@ class PlanQualitySpec extends AnyFunSuite {
     }
   }
 
-  test("assignCellBc assignment is pure map-side: no join, no aggregate, no exchange") {
-    // The broadcast-tier SemDeDup contract: the centroid matrix rides a
+  test("assignCell assignment is pure map-side: no join, no aggregate, no exchange") {
+    // The flat-quantizer contract: the centroid matrix rides a
     // broadcast VARIABLE inside one IvfNearestCellBc expression, so the
     // whole assignment is a Project over the vector scan — zero joins,
     // zero aggregates, zero shuffles at any K. (The former broadcast-JOIN
@@ -351,11 +350,37 @@ class PlanQualitySpec extends AnyFunSuite {
     val cents: Seq[(Long, Seq[Double])] = (0L until 32L).map(c =>
       c -> (0 until 8).map(j => math.sin(c * 131 + j)))
     val out = e.withColumn("cell",
-      graft.operators.IvfKMeans.assignCellBc(spark, cents, $"v"))
+      graft.operators.IvfKMeans.assignCell(spark, cents, $"v"))
     val plan = finalSection(physical(out))
     assert(plan.contains("ivf_nearest_cell_bc"), plan)
     Seq("Join", "Aggregate", "Exchange").foreach(op =>
-      assert(!plan.contains(op), s"broadcast-tier assignment must be map-only, found $op:\n$plan"))
+      assert(!plan.contains(op), s"assignment must be map-only, found $op:\n$plan"))
+  }
+
+  test("the sketch keys probe through their broadcast-variable kernels, with no word-index join") {
+    // One kernel per sketch at every size: the Bloom keys (batch and
+    // stream) test grams with BloomBcAnyHit, the flat IVF key assigns
+    // cells with IvfNearestCellBc. The only joins allowed are the keys'
+    // own: the batch Bloom key's exact-hit arm on the gram, the IVF key's
+    // candidate join on the cell — never a join on a bitmap word index.
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
+    val JoinKey = """^\w*Join \[(\w+)#""".r.unanchored
+    Seq(
+      ("q_decontaminate_bloom", "bloom_bc_any_hit(", Set("g")),
+      ("q_stream_decontaminate", "bloom_bc_any_hit(", Set.empty[String]),
+      ("q_similarity_ann_ivf", "ivf_nearest_cell_bc(", Set("cell"))
+    ).foreach { case (key, kernel, joinKeys) =>
+      val plans = planInfosOf(key)
+      assert(plans.exists(p => nodes(p).exists(_.simpleString.contains(kernel))),
+        s"$key: no execution carries $kernel")
+      val joins = plans.flatMap(nodes).filter(_.nodeName.endsWith("Join")).map(_.simpleString)
+      val keyed = joins.map {
+        case JoinKey(k) => k
+        case other => other
+      }
+      assert(keyed.forall(joinKeys), s"$key plans a join outside ${joinKeys.mkString(",")}: $joins")
+    }
   }
 
   test("hierarchical stage 2 feeds its kernel through one ccell exchange") {
@@ -471,6 +496,30 @@ class PlanQualitySpec extends AnyFunSuite {
         if (n == last) same += 1 else { same = 0; last = n }
       }
     } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq
+  }
+
+  /** The plan of every SQL execution `name` starts (streaming micro-batches
+    * included), as posted to the listener bus: the initial plan and each
+    * adaptive re-plan. */
+  private def planInfosOf(name: String): Seq[org.apache.spark.sql.execution.SparkPlanInfo] = {
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlanInfo]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(event: org.apache.spark.scheduler.SparkListenerEvent): Unit = event match {
+        case e: SparkListenerSQLExecutionStart => plans.add(e.sparkPlanInfo)
+        case e: SparkListenerSQLAdaptiveExecutionUpdate => plans.add(e.sparkPlanInfo)
+        case _ => ()
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusAccess.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      run(name).collect()
+      org.apache.spark.ListenerBusAccess.drain(sc)
+    } finally sc.removeSparkListener(listener)
     import scala.jdk.CollectionConverters._
     plans.asScala.toSeq
   }

@@ -45,13 +45,7 @@ class QueriesSmokeSpec extends AnyFunSuite {
 
   test("bloom probe mechanisms are row-identical; the sizing override validates and bites") {
     import spark.implicits._
-    // the literal-array probe (small bitmaps) and the broadcast word-join
-    // probe (bitmaps past the literal cap) must be the same operator
-    val viaLiteral = graft.queries.PipelineQueries.bloomDecontaminate(spark, sfDir)
-    val viaJoin = graft.queries.PipelineQueries
-      .bloomDecontaminate(spark, sfDir, forceJoinProbe = true)
-    assert(viaLiteral.exceptAll(viaJoin).isEmpty && viaJoin.exceptAll(viaLiteral).isEmpty,
-      "literal-probe and join-probe mechanisms diverged")
+    val byDefault = graft.queries.PipelineQueries.bloomDecontaminate(spark, sfDir)
     // a non-power-of-two override is rejected
     intercept[IllegalArgumentException] {
       graft.queries.PipelineQueries.bloomDecontaminate(spark, sfDir, mBitsOverride = Some(1000L))
@@ -60,25 +54,25 @@ class QueriesSmokeSpec extends AnyFunSuite {
     // adaptive default, while the exact-hit rows stay identical
     val tiny = graft.queries.PipelineQueries
       .bloomDecontaminate(spark, sfDir, mBitsOverride = Some(1024L))
-    assert(tiny.count() > viaLiteral.count(),
+    assert(tiny.count() > byDefault.count(),
       "an 8x-undersized bitmap should flag strictly more docs")
-    val exactDefault = viaLiteral.filter($"exact_hit").select($"doc_id")
+    val exactDefault = byDefault.filter($"exact_hit").select($"doc_id")
     val exactTiny = tiny.filter($"exact_hit").select($"doc_id")
     assert(exactDefault.exceptAll(exactTiny).isEmpty && exactTiny.exceptAll(exactDefault).isEmpty)
-    // the production xxhash64 path keeps the structural guarantees: exact
-    // hits are hash-independent and can never escape the bloom flag
-    val fast = graft.queries.PipelineQueries
-      .bloomDecontaminate(spark, sfDir, fastHash = true)
-    assert(fast.filter($"exact_hit" && !$"bloom_hit").isEmpty,
-      "fast-hash bloom produced a false negative")
-    val exactFast = fast.filter($"exact_hit").select($"doc_id")
-    assert(exactDefault.exceptAll(exactFast).isEmpty && exactFast.exceptAll(exactDefault).isEmpty,
-      "exact-hit rows must not depend on the probe hash")
+    // a bitmap past the former 2^20-bit plan-literal cap: same exact-hit
+    // rows as the default, and no exact hit escapes the bloom flag
+    val wide = graft.queries.PipelineQueries
+      .bloomDecontaminate(spark, sfDir, mBitsOverride = Some(1L << 21))
+    assert(wide.filter($"exact_hit" && !$"bloom_hit").isEmpty,
+      "a 2^21-bit bloom produced a false negative")
+    val exactWide = wide.filter($"exact_hit").select($"doc_id")
+    assert(exactDefault.exceptAll(exactWide).isEmpty && exactWide.exceptAll(exactDefault).isEmpty,
+      "exact-hit rows must not depend on the bitmap size")
     // the stateless STREAMING probe shares bitmap policy + hashes with the
     // batch query, so their bloom_hit doc sets must be identical
     val streamHits = SparkEntry.queries("q_stream_decontaminate")(spark, sfDir)
       .filter($"bloom_hit").select($"doc_id").as[Long].collect().toSet
-    val batchHits = viaLiteral.filter($"bloom_hit").select($"doc_id").as[Long].collect().toSet
+    val batchHits = byDefault.filter($"bloom_hit").select($"doc_id").as[Long].collect().toSet
     assert(streamHits == batchHits,
       s"stream/batch bloom flags diverge: only-stream=${streamHits -- batchHits} only-batch=${batchHits -- streamHits}")
     spark.catalog.clearCache()

@@ -4,12 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 /** Round-10 depth checks:
-  *  - SemDeDup path parity: the broadcast-tier branch
-  *    (q_semdedup_table / IvfKMeans.trainBc+assignCellBc) must be
-  *    bit-identical to the plan-literal branch (q_semdedup /
-  *    IvfKMeans.train+assignCell) on a corpus with planted near-dups —
-  *    this is the equivalence the shared DuckDB oracle relies on, proven
-  *    here engine-side on data where cells and dup pairs are non-trivial.
+  *  - SemDeDup key parity: q_semdedup_table (the flat quantizer pinned
+  *    past the hierarchical threshold) must equal q_semdedup on a corpus
+  *    with planted near-dups — the equivalence the shared DuckDB oracle
+  *    relies on, checked engine-side on data where cells and dup pairs
+  *    are non-trivial.
   */
 class Round10OpsSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
@@ -366,26 +365,5 @@ class Round10OpsSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"gram forms diverge: ${bad.take(5).toSeq}")
     val shorts = df.filter(size($"tok") < 5).filter(size($"zw") =!= 0).collect()
     assert(shorts.isEmpty, s"short docs must yield no grams: ${shorts.take(5).toSeq}")
-  }
-
-  test("IvfKMeans.trainBc reproduces IvfKMeans.train centroids exactly") {
-    // The broadcast tier runs the SAME static nearest-cell kernel as the
-    // literal path — this gate proves the end-to-end Lloyd equality
-    // (assignment + decimal mean + rounding) across the two mechanisms,
-    // the invariant that lets q_semdedup_table share q_semdedup's oracle.
-    import spark.implicits._
-    import graft.operators.IvfKMeans
-    val dir = embeddingsDir(1024)
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select($"vec_id", expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .persist()
-    val seedsSeq = e.filter($"vec_id" % 97 === 0).orderBy($"vec_id").limit(4)
-      .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1)))
-    val litCents = IvfKMeans.train(spark, e, seedsSeq, iters = 2)
-      .map { case (cid, cv) => cid -> cv.toList }.toMap
-    val bcCents = IvfKMeans.trainBc(spark, e, seedsSeq, iters = 2)
-      .map { case (cid, cv) => cid -> cv.toList }.toMap
-    e.unpersist(blocking = false)
-    assert(litCents == bcCents)
   }
 }

@@ -3,11 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-/** Round-11 depth checks: the broadcast-variable Bloom probe — the
-  * production mechanism past the 2^27-bit plan-literal ceiling — must be
-  * row-identical to the literal probe at small sizes (so the shared oracle
-  * gates both) AND bit-identical at a real >2^27-bit size the literal path
-  * refuses in production (so the branch is proven where it actually runs,
+/** Round-11 depth checks: the broadcast-variable Bloom probe — the one
+  * stream decontamination mechanism — must agree across the two stream
+  * keys that share its oracle at a policy-sized bitmap, AND be
+  * bit-identical to the composed md5/conv/element_at bit test at a real
+  * 2^28-bit size (so the probe is proven where a large benchmark puts it,
   * not just where it is cheap to test).
   */
 class Round11OpsSpec extends AnyFunSuite {
@@ -73,7 +73,7 @@ class Round11OpsSpec extends AnyFunSuite {
       PipelineQueries.streamBloomGate(spark, dir, mBitsOverride = Some(100L))
     }
     assert(refused.getMessage.contains("power of two"))
-    // broadcast branch: auto-selected by size (no forceBroadcast needed)
+    // the one broadcast-variable probe, at a pinned size
     val (mBits, bcProbe) =
       PipelineQueries.streamBloomGate(spark, dir, mBitsOverride = Some(big))
     assert(mBits == big)

@@ -124,11 +124,7 @@ class Round12OpsSpec extends AnyFunSuite {
       val fused = df
         .select($"id", IvfKMeans.probeCells(spark, cents, $"v", np).as("cells"))
         .as[(Long, Seq[Long])].collect().sortBy(_._1).toSeq
-      val fusedBc = df
-        .select($"id", IvfKMeans.probeCellsBc(spark, cents, $"v", np).as("cells"))
-        .as[(Long, Seq[Long])].collect().sortBy(_._1).toSeq
-      assert(fused == composedDf, s"nprobe=$np literal diverged")
-      assert(fusedBc == composedDf, s"nprobe=$np broadcast diverged")
+      assert(fused == composedDf, s"nprobe=$np broadcast kernel diverged")
     }
   }
 

@@ -43,12 +43,10 @@ class Round14OpsSpec extends AnyFunSuite {
     }.toDF("id", "v0").select($"id", $"v0".cast("array<double>").as("v"))
     val got = vecs.select($"id",
         IvfKMeans.probeCells(spark, cents, $"v", IvfKMeans.adaptiveNprobe _).as("a"),
-        IvfKMeans.probeCells(spark, cents, $"v", np).as("c"),
-        IvfKMeans.probeCellsBc(spark, cents, $"v", IvfKMeans.adaptiveNprobe _).as("ab"))
+        IvfKMeans.probeCells(spark, cents, $"v", np).as("c"))
       .collect()
     got.foreach { r =>
-      assert(r.getSeq[Long](1) == r.getSeq[Long](2), s"literal path diverged on id ${r.getLong(0)}")
-      assert(r.getSeq[Long](1) == r.getSeq[Long](3), s"bc path diverged on id ${r.getLong(0)}")
+      assert(r.getSeq[Long](1) == r.getSeq[Long](2), s"policy overload diverged on id ${r.getLong(0)}")
       assert(r.getSeq[Long](1).length == np)
     }
   }

@@ -77,4 +77,38 @@ class SchemaMemoSpec extends AnyFunSuite {
       assert(Tables.table(spark, dir.toString, "ns").head().getLong(0) == 1704067200000000001L)
     }
   }
+
+  test("Tables.events sets nanosAsLong only for a footer with NANOS timestamps") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    import org.apache.spark.sql.types.TimestampType
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prev = spark.conf.getAll.get(key)
+    try {
+      // a µs corpus: ts normalizes and the session conf is untouched
+      spark.conf.unset(key)
+      val events = Tables.events(spark, "/root/testdata/sf0.001")
+      assert(events.schema("ts").dataType == TimestampType)
+      assert(events.count() > 0)
+      assert(spark.conf.getAll.get(key).isEmpty, "a µs events read set nanosAsLong")
+      // a NANOS footer: the flag is what lets Spark read it at all
+      val dir = Files.createTempDirectory("graft-events-nanos")
+      val schema = MessageTypeParser.parseMessageType(
+        "message m { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,false)); }")
+      val w = ExampleParquetWriter
+        .builder(new org.apache.hadoop.fs.Path(dir.resolve("events.parquet").toString))
+        .withType(schema).build()
+      try w.write(new SimpleGroupFactory(schema).newGroup()
+        .append("event_id", 1L).append("ts", 1704067200000001999L))
+      finally w.close()
+      val ns = Tables.events(spark, dir.toString)
+      assert(spark.conf.getAll.get(key).contains("true"))
+      assert(ns.schema("ts").dataType == TimestampType)
+      assert(ns.selectExpr("unix_micros(ts)").head().getLong(0) == 1704067200000001L)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }
